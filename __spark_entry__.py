@@ -75,10 +75,10 @@ _PREPARED_REGIONS: dict = {}
 
 
 def _prepared_regions(spark: SparkSession):
-    """Memoized PreparedRegions for the broadcast joins — the reference's
-    prepare-once/query-many S2ShapeIndex contract (the operator exposes
-    prepare_regions for exactly this; rebuilding it per query re-paid the
-    driver-side covering/interior/broadcast prep on every invocation)."""
+    """Memoized in-process PreparedRegions for the broadcast joins — the
+    reference's prepare-once/query-many S2ShapeIndex contract (the operator
+    exposes prepare_regions for exactly this; rebuilding it per query
+    re-paid the driver-side covering/state prep on every invocation)."""
     from s2geography_spark.operators.spatial_join import prepare_regions
     # keyed by applicationId, not id(spark): a stopped session's id() (or a
     # matching sf_dir) can recycle, returning broadcasts that belong to a
@@ -94,9 +94,9 @@ _PREPARED_SUBDIVIDED: dict = {}
 
 
 def _prepared_regions_subdivided(spark: SparkSession):
-    """Memoized PreparedRegionsSubdivided for the shuffle-family plans
-    (spatial_count, broadcast=False joins): the exploded per-cell state is
-    the dominant dim-side cost and is reusable across queries, exactly like
+    """Memoized distributed PreparedRegions (prepare_regions_subdivided)
+    for spatial_count: the exploded per-cell state is the dominant
+    dim-side cost and is reusable across queries, exactly like
     _prepared_regions for the broadcast path.  Keyed by applicationId."""
     from s2geography_spark.operators.spatial_join import (
         prepare_regions_subdivided)

@@ -9,19 +9,20 @@ Plan shape (scales to 10^12 rows / 1000 executors):
 
   regions (small dim, <= ~10^6 rows)
       covering array<long> (precomputed or s2_coveringcellids)
-      -> explode -> (cell_id, region_id, geog)               [map-only]
+      -> explode -> one row per (region, covering cell) carrying the
+         cell's SUBDIVIDED state: interior flag + packed edge subset
+         (PreparedRegions, built once and reused)              [map-only]
   points (the 10^12-row fact side)
-      leaf cell id from lng/lat (vectorized NumPy, no WKB)    [map-only]
+      leaf cell id from lng/lat (pure Column bit math, no WKB)   [map-only]
       -> ancestors at exactly the levels present in the region
-         coverings (collected once from the dim side)         [map-only]
-      -> equi-join on cell_id, broadcast the exploded dim     [NO shuffle]
-      -> refine with vectorized PIP (winding number), grouped
-         per distinct region per Arrow batch                  [map-only]
+         coverings (recorded on the prepared dim)              [map-only]
+      -> equi-join on cell_id: broadcast the state table when it fits,
+         else shuffle the boundary band on the (salted) cell key
+      -> refine with vectorized crossing parity against the matched
+         cell's edge subset; interior-cell candidates skip it   [map-only]
 
-With a broadcastable dim the whole join is shuffle-free: the only wide
-operation in a typical query is the user's downstream aggregation.  For a
-large region side use broadcast=False: the same plan becomes a shuffle
-equi-join on cell_id; enable salting for hot cells via `salt`.
+With a broadcastable state table the whole join is shuffle-free: the only
+wide operation in a typical query is the user's downstream aggregation.
 
 Correctness notes: a region's covering cells are disjoint (normalized
 covering), so a point's ancestor chain hits at most one covering cell per
@@ -31,7 +32,7 @@ of the region, so refine-only false positives are dropped, never misses.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -43,7 +44,8 @@ from pyspark.sql.functions import pandas_udf
 from ..core import cellid as C
 from ..core import sphere
 from ..core.geog import from_wkb
-from ..functions.cells import cell_join_key, cell_parent, with_leaf_cell
+from ..functions.cells import (cell_join_key, cell_level, cell_parent,
+                               with_leaf_cell)
 
 
 @pandas_udf(T.LongType())
@@ -58,225 +60,22 @@ def leaf_cell_udf(lng: pd.Series, lat: pd.Series) -> pd.Series:
     return out
 
 
-
-def _pip_refine_udf(model: str = "semi_open"):
-    """Vectorized refine factory: polygon WKB (repeating) x point lng/lat.
-
-    Groups the Arrow batch by distinct polygon bytes, decodes each polygon
-    once (scalar-prepare analog, sedona_udf_internal.h:849-867), then runs
-    one winding-number PIP over all points of that group.  model:
-    semi_open for contains, closed (boundary-inclusive) for intersects."""
-
-    @pandas_udf(T.BooleanType())
-    def pip_refine(geog: pd.Series, lng: pd.Series, lat: pd.Series) -> pd.Series:
-        n = len(geog)
-        out = np.empty(n, dtype=object)
-        lngv = lng.to_numpy(dtype=np.float64)
-        latv = lat.to_numpy(dtype=np.float64)
-        xyz = np.stack(C.lnglat_to_xyz(np.nan_to_num(lngv),
-                                       np.nan_to_num(latv)), axis=-1)
-        codes, uniques = pd.factorize(geog, use_na_sentinel=True)
-        for u, key in enumerate(uniques):
-            g = from_wkb(bytes(key))
-            ra, rb = g.ring_edges_xyz()
-            rows = np.where(codes == u)[0]
-            if len(ra) == 0:
-                out[rows] = False
-                continue
-            res = sphere.contains_points(xyz[rows], ra, rb, model=model)
-            out[rows] = res.astype(object)
-        bad = geog.isna().to_numpy() | np.isnan(lngv) | np.isnan(latv)
-        out[bad] = None
-        return pd.Series(out, dtype=object)
-
-    return pip_refine
-
-
-contains_lnglat_udf = _pip_refine_udf("semi_open")
-
-
-# per-worker prepared-region cache, keyed by a UUID minted in
-# PreparedRegions.__init__ (NOT id(bc): the Broadcast wrapper is
-# re-deserialized per task, so id() churns — and a GC'd wrapper's id can be
-# reused by a *different* join's broadcast, silently serving wrong regions).
-# Bounded: long-lived workers see many joins; each entry holds the full
-# padded edge tensor.
-_WORKER_GEOG_CACHE: dict = {}
-_WORKER_GEOG_CACHE_MAX = 4
-
-
-def _worker_cache_get(key: str, build):
-    state = _WORKER_GEOG_CACHE.get(key)
-    if state is None:
-        state = build()
-        while len(_WORKER_GEOG_CACHE) >= _WORKER_GEOG_CACHE_MAX:
-            _WORKER_GEOG_CACHE.pop(next(iter(_WORKER_GEOG_CACHE)))
-        _WORKER_GEOG_CACHE[key] = state
-    return state
-
-
-def _build_padded_edges(wkbs: dict):
-    """(id->row, edges_a (R, E, 3), edges_b (R, E, 3)) with per-region ring
-    edges padded by degenerate (a == b) edges — a degenerate edge subtends a
-    zero turn angle, so padding never changes the winding number.
-
-    Both a float32 tensor (the hot-loop default: halves memory traffic of
-    the bandwidth-bound refine) and a float64 copy (the boundary-band
-    recheck path) are kept; broadcastable dims are small, so the extra copy
-    is bounded by the same broadcast guardrail."""
-    ids = sorted(wkbs)
-    eas, ebs = [], []
-    for r in ids:
-        g = from_wkb(wkbs[r])
-        ra, rb = g.ring_edges_xyz()
-        eas.append(ra)
-        ebs.append(rb)
-    emax = max((len(a) for a in eas), default=1) or 1
-    R = len(ids)
-    pa64 = np.zeros((R, emax, 3), dtype=np.float64)
-    pb64 = np.zeros((R, emax, 3), dtype=np.float64)
-    pa64[:, :, 0] = 1.0  # unit dummy vertex (degenerate edge = zero turn)
-    pb64[:, :, 0] = 1.0
-    for i, (a, b) in enumerate(zip(eas, ebs)):
-        if len(a):
-            pa64[i, :len(a)] = a
-            pb64[i, :len(b)] = b
-            # pad with the region's OWN first vertex (still degenerate =
-            # zero turn): a fixed (1,0,0) pad would sit in the data domain
-            # and spuriously trip the near-vertex recheck flag for every
-            # point near lng=0,lat=0
-            pa64[i, len(a):] = a[0]
-            pb64[i, len(a):] = a[0]
-    row_of = {r: i for i, r in enumerate(ids)}
-    has_rings = np.array([len(a) > 0 for a in eas])
-    return row_of, pa64.astype(np.float32), pb64.astype(np.float32), \
-        has_rings, pa64, pb64
-
-
-def _winding_positive(pa, pb, rrows, xyz, chunk):
-    """Gathered winding-number pass: for row i, winding of xyz[i] w.r.t.
-    the edge block pa[rrows[i]], pb[rrows[i]].  Returns (positive mask,
-    near-boundary mask) where 'near' flags rows whose float32 winding could
-    differ from float64, via two signatures:
-      * any per-edge subtended angle approaches pi (point within the float
-        error band of an edge INTERIOR sees that edge at ~pi), or
-      * any projected endpoint vector |da|^2 = 1-(a.p)^2 or |db|^2 below
-        1e-6 (point within ~1e-3 rad ~ 6 km of an edge VERTEX, where the
-        angle is numerically meaningless — the max-angle test alone misses
-        this).  1-(a.p)^2 reuses the ALREADY-computed projection dot
-        products, so the flag costs only elementwise ops; float32
-        cancellation floors the computed value at eps ~ 1.2e-7, so the
-        threshold sits ~8x above the floor (a true on-vertex point cannot
-        escape the flag) and the ~6 km band only adds rare harmless
-        rechecks."""
-    n = len(rrows)
-    pos = np.zeros(n, dtype=bool)
-    near = np.zeros(n, dtype=bool)
-    one = np.float32(1.0) if pa.dtype == np.float32 else 1.0
-    for lo in range(0, n, chunk):
-        sl = slice(lo, min(lo + chunk, n))
-        a = pa[rrows[sl]]            # (m, E, 3)
-        b = pb[rrows[sl]]
-        p = xyz[sl][:, None, :]      # (m, 1, 3)
-        ap = sphere.dot(a, p)
-        bp = sphere.dot(b, p)
-        da = a - ap[..., None] * p
-        db = b - bp[..., None] * p
-        s = sphere.dot(np.cross(da, db), p)
-        c = sphere.dot(da, db)
-        ang = np.arctan2(s, c)
-        w = np.rint(ang.sum(axis=1, dtype=np.float64) / (2.0 * np.pi))
-        pos[sl] = w > 0
-        n2 = np.minimum(one - ap * ap, one - bp * bp)
-        near[sl] = (np.abs(ang).max(axis=1) > (np.pi - 1e-3)) \
-            | (n2.min(axis=1) < 1e-6)
-    return pos, near
-
-
-def _refine_by_region_udf(bc, cache_key: str, chunk: int = 8192):
-    """Refine UDF keyed by region id: polygons come from a Spark broadcast
-    (one copy per executor), decoded lazily per worker process — the
-    reference's scalar-prepare / per-worker index cache analog
-    (sedona_udf_internal.h:849-867).  The join pipe carries ONLY the int id,
-    not the WKB (3 KB/row saved through the Arrow boundary).
-
-    The whole Arrow batch is refined in ONE gathered winding-number pass:
-    each candidate row's region edge-block is gathered from a padded
-    (R, Emax, 3) tensor, so cost is a handful of NumPy ops per chunk
-    instead of per (batch x region) group.
-
-    Semantics: winding-number point-in-polygon — the SEMI_OPEN 'contains'
-    refine.  For point facts 'intersects' coincides with 'contains' except
-    for points exactly ON a region edge (measure-zero for float inputs);
-    that float-level boundary behavior matches the reference's for
-    non-exact inputs.  There is deliberately no 'model' parameter: this
-    path serves both predicates under that documented tolerance.
-
-    Boundary-band recheck: rows whose winding pass sees any edge at an
-    angle within 1e-3 of pi (the signature of a point within the float32
-    error band of a boundary) are re-evaluated with float64 edges and
-    coordinates, so this path agrees bit-for-bit with the float64 shuffle
-    refine even for points planted micrometres from an edge."""
-
-    @pandas_udf(T.BooleanType())
-    def udf(rid: pd.Series, lng: pd.Series, lat: pd.Series,
-            full: pd.Series) -> pd.Series:
-        state = _worker_cache_get(cache_key,
-                                  lambda: _build_padded_edges(bc.value))
-        row_of, pa, pb, has_rings, pa64, pb64 = state
-        n = len(rid)
-        lngv = lng.to_numpy(dtype=np.float64)
-        latv = lat.to_numpy(dtype=np.float64)
-        rids = rid.to_numpy()
-        bad = rid.isna().to_numpy() | np.isnan(lngv) | np.isnan(latv)
-        # interior-cell shortcut rows need no winding at all
-        fullv = full.fillna(False).to_numpy(dtype=bool) & ~bad
-        todo = np.where(~fullv & ~bad)[0]
-        res = fullv.copy()
-        if len(todo):
-            xyz64 = np.stack(C.lnglat_to_xyz(lngv[todo], latv[todo]), axis=-1)
-            rrows = np.array([row_of.get(r, 0) for r in rids[todo]],
-                             dtype=np.int64)
-            sub, near = _winding_positive(pa, pb, rrows,
-                                          xyz64.astype(np.float32), chunk)
-            if near.any():
-                nz = np.where(near)[0]
-                sub[nz], _ = _winding_positive(pa64, pb64, rrows[nz],
-                                               xyz64[nz], chunk)
-            sub &= has_rings[rrows]
-            res[todo] = sub
-        out = pd.Series(res, dtype=object)
-        out[bad] = None
-        return pd.Series(out, dtype=object)
-
-    return udf
-
-
 def ancestors_at_levels(cell_col, levels):
     """Array column of the leaf cell's ancestors at the given levels (pure
     Column bit math — no Python)."""
     return F.array(*[cell_parent(cell_col, int(l)) for l in sorted(levels)])
 
 
-def covering_levels(regions: DataFrame, covering_col: str = "covering"):
-    """Distinct levels used by the dim side's coverings (one tiny action)."""
-    rows = (regions
-            .select(F.explode(covering_col).alias("c"))
-            .select(F.bit_count(F.col("c").bitwiseAND(-F.col("c")) - 1).alias("ctz"))
-            .select((F.lit(30) - F.col("ctz") / 2).cast("int").alias("lev"))
-            .distinct().collect())
-    return sorted({r.lev for r in rows})
-
-
-# driver-materialization guardrails for the broadcast dim path: above these
-# the broadcast path would pressure the driver (rows x ~KB WKB), so
-# spatial_join falls back to the shuffle path automatically
+# driver-materialization guardrails for the in-process prepare: above these
+# prepare_regions would pressure the driver (rows x ~KB WKB), so
+# spatial_join falls back to the distributed prepare automatically
 MAX_BROADCAST_DIM_ROWS = 200_000
 MAX_BROADCAST_DIM_BYTES = 256 * 1024 * 1024
-# the (cell -> region_id) id index is ~24 B/row: 8M exploded cells ~ 200 MB
+# the state table broadcasts (and the prefilter's 8 B/cell key set with it)
+# up to this many exploded cells
 MAX_BROADCAST_INDEX_ROWS = 8_000_000
-# PreparedRegions collect()s the POST-EXPLOSION (cells x region attrs)
-# relation, so the guard must bound sum(size(covering)) — at level-8
+# prepare_regions builds the POST-EXPLOSION (cells x region attrs) relation
+# driver-side, so the guard must bound sum(size(covering)) — at level-8
 # coverings the explosion is ~16x the level-6 one for the same dim rows
 # (round-4 VERDICT item 5)
 MAX_BROADCAST_EXPLODED_CELLS = 2_000_000
@@ -284,10 +83,29 @@ MAX_BROADCAST_EXPLODED_CELLS = 2_000_000
 
 class DimTooLargeError(ValueError):
     """Dim side exceeds a broadcast guardrail.  A DEDICATED type so the
-    automatic shuffle-path fallback in spatial_join catches ONLY the size
-    overflow — a bare `except ValueError` also swallowed genuine data
+    automatic distributed-prepare fallback in spatial_join catches ONLY the
+    size overflow — a bare `except ValueError` also swallowed genuine data
     errors (corrupt WKB raising during the driver-side decode) and
     resurfaced them later on an executor with an unrelated stack trace."""
+
+
+def _dim_sidecars(regions: DataFrame):
+    """(rows, stats) a source attached to `regions`, each None when absent
+    or inconsistent with the DataFrame: stats must be a 3-tuple, every row
+    a dict carrying every column, and the row count must match the stats'.
+    A mismatch takes the collect/aggregate path instead of serving rows or
+    sizes that do not describe this DataFrame."""
+    rows = getattr(regions, "_s2_dim_rows", None)
+    stats = getattr(regions, "_s2_dim_stats", None)
+    if not (isinstance(stats, tuple) and len(stats) == 3):
+        stats = None
+    if rows is not None:
+        cols = set(regions.columns)
+        if not all(isinstance(r, dict) and r.keys() >= cols for r in rows):
+            rows = None
+    if rows is not None and stats is not None and len(rows) != stats[0]:
+        rows = stats = None
+    return rows, stats
 
 
 def dim_broadcast_stats(regions: DataFrame, region_geog: str,
@@ -300,17 +118,17 @@ def dim_broadcast_stats(regions: DataFrame, region_geog: str,
     attach `df._s2_dim_stats = (rows, geog_bytes, covering_cells)` and
     the job is skipped — derived DataFrames (select/filter) drop the
     attribute, so stale stats cannot leak through transformations."""
-    st = getattr(regions, "_s2_dim_stats", None)
+    has_cov = covering_col is not None and covering_col in regions.columns
+    _, st = _dim_sidecars(regions)
     if st is not None:
         n, b, c = st
-        has_cov = covering_col is not None and covering_col in regions.columns
         return int(n), int(b), (int(c) if has_cov else None)
     aggs = [F.count("*").alias("n"),
             F.sum(F.octet_length(F.col(region_geog).cast("binary"))).alias("b")]
-    if covering_col is not None and covering_col in regions.columns:
+    if has_cov:
         aggs.append(F.sum(F.size(covering_col)).alias("c"))
     row = regions.agg(*aggs).collect()[0]
-    cells = int(row.c or 0) if hasattr(row, "c") else None
+    cells = int(row.c or 0) if has_cov else None
     return int(row.n or 0), int(row.b or 0), cells
 
 
@@ -328,194 +146,134 @@ def dim_is_broadcastable(regions: DataFrame, region_geog: str,
                       else MAX_BROADCAST_DIM_BYTES))
 
 
-def _interior_cell_flags(cells_u64, ra, rb):
-    """Per covering cell: True iff the cell is PROVABLY fully inside the
-    region.  Evidence: all 4 cell corners strictly inside (open model), no
-    cell edge crosses any ring edge, and no ring VERTEX lies inside the
-    cell — a hole (or island) ring strictly inside one cell leaves no
-    corner/crossing evidence (round-4 ADVICE, spatial_join hole
-    unsoundness), but its vertices' leaf cells fall within the cell's
-    [range_min, range_max], which is a cheap vectorized test."""
-    quads = C.cell_vertices_xyz(cells_u64)  # (n, 4, 3)
-    corners_in = sphere.contains_points(
-        quads.reshape(-1, 3), ra, rb, model="open").reshape(-1, 4)
-    qb = quads[:, [1, 2, 3, 0]]
-    crosses = sphere.arcs_cross(
-        quads[:, :, None, :], qb[:, :, None, :],
-        ra[None, None, :, :], rb[None, None, :, :]).any(axis=(1, 2))
-    vleaf = C.from_xyz(ra[:, 0], ra[:, 1], ra[:, 2])  # (E,) vertex leaf ids
-    lo = C.range_min(cells_u64)[:, None]
-    hi = C.range_max(cells_u64)[:, None]
-    vertex_in = ((vleaf[None, :] >= lo) & (vleaf[None, :] <= hi)).any(axis=1)
-    return corners_in.all(axis=1) & ~crosses & ~vertex_in
-
-
 class PreparedRegions:
     """Prepared dim side of the spatial join — the engine analog of the
-    reference's ShapeIndexGeography 'prepared geometry' (geography.h:182-210):
-    exploded covering cells, broadcast polygon bytes, and bbox prefilter
-    columns, built once and reused across any number of point-side joins."""
+    reference's ShapeIndexGeography 'prepared geometry' (geography.h:182-210),
+    built once and reused across any number of point-side joins.
 
-    def __init__(self, spark, regions: DataFrame, region_geog: str,
-                 region_id: str, covering_col: str,
-                 max_rows: int = None, max_bytes: int = None,
-                 max_cells: int = None):
-        import uuid
-        from ..core import ops as _ops
-        max_rows = MAX_BROADCAST_DIM_ROWS if max_rows is None else max_rows
-        max_bytes = MAX_BROADCAST_DIM_BYTES if max_bytes is None else max_bytes
-        max_cells = MAX_BROADCAST_EXPLODED_CELLS if max_cells is None \
-            else max_cells
-        n, b, c = dim_broadcast_stats(regions, region_geog, covering_col)
-        if n > max_rows or b > max_bytes or (c or 0) > max_cells:
-            raise DimTooLargeError(
-                f"dim side too large for the broadcast path ({n} rows, "
-                f"{b} geography bytes, {c} exploded covering cells > "
-                f"{max_rows}/{max_bytes}/{max_cells}); use "
-                "spatial_join(..., broadcast=False) (shuffle path)")
-        self.cache_key = uuid.uuid4().hex
+    `exploded` has one row per (region, covering cell): the region's
+    columns (minus geography and covering), the mixed cell key `_ck`, the
+    interior flag `_full`, the packed subdivided state `_state` (null for
+    interior cells) and the bbox prefilter columns `_xmin.._ymax`.
+    `levels` lists the covering levels; `state_cells`/`state_bytes` size
+    the state table, and `fits_broadcast` is what the planner reads to
+    broadcast it or shuffle the boundary band.  Built in-process by
+    prepare_regions or distributed by prepare_regions_subdivided."""
+
+    def __init__(self, region_id: str, exploded: DataFrame, levels,
+                 state_cells: int, state_bytes: int):
         self.region_id = region_id
-        # ONE collect of the whole (small-by-contract, just guarded) dim;
-        # bbox, interior flags, covering levels, and the mixed join keys
-        # are all computed driver-side from it.  The previous build ran 5
-        # Spark jobs (stats, collect, two join shuffles for bbox/interior
-        # attachment, covering-levels distinct) — measured as the dominant
-        # cost of the cold flagship join (3-11 s of its 12-17 s total).
-        other_cols = [c for c in regions.columns
-                      if c not in (covering_col, region_geog)]
-        # a source that carries its rows driver-side (regions_df sidecar,
-        # same pattern as _s2_dim_stats) skips the collect round-trip of
-        # data the driver already holds; any transformation drops the
-        # attribute, so this can never serve stale rows
-        rows = getattr(regions, "_s2_dim_rows", None)
-        if rows is None:
-            rows = regions.collect()
-        wkb_map = {}
-        exploded_rows = []
-        levels = set()
-        for r in rows:
-            rid = r[region_id]
-            w = r[region_geog]
-            cov = r[covering_col]
-            if w is None or cov is None:
-                continue
-            w = bytes(w)
-            wkb_map[rid] = w
-            g = from_wkb(w)
-            bb = _ops.s2_bounds(g) or (None,) * 4
-            cells = np.array(cov, dtype=np.int64).view(np.uint64)
-            levels.update(int(l) for l in np.unique(C.level(cells)))
-            ra, rb = g.ring_edges_xyz()
-            # interior-covering shortcut (reference INDEXED/SUBDIVIDED
-            # distinction, index.h:52-91): cell fully inside the region
-            # -> every point in it is contained, no PIP refine needed
-            full = _interior_cell_flags(cells, ra, rb) \
-                if len(cells) and len(ra) else np.zeros(len(cells), bool)
-            ck = (cells ^ (cells >> np.uint64(31))).view(np.int64)
-            base = tuple(r[c] for c in other_cols)
-            for j in range(len(cells)):
-                exploded_rows.append(
-                    base + (bool(full[j]), int(ck[j])) + bb)
-        self.bc = spark.sparkContext.broadcast(wkb_map)
-        schema = T.StructType(
-            [regions.schema[c] for c in other_cols]
-            + [T.StructField("_full", T.BooleanType()),
-               T.StructField("_ck", T.LongType()),
-               T.StructField("_xmin", T.DoubleType()),
-               T.StructField("_ymin", T.DoubleType()),
-               T.StructField("_xmax", T.DoubleType()),
-               T.StructField("_ymax", T.DoubleType())])
-        # a literal LocalRelation: keeps every downstream query's plan flat
-        # (a cached multi-join plan would be re-analyzed and re-broadcast
-        # from scratch on each query)
-        self.exploded = spark.createDataFrame(exploded_rows, schema)
+        self.exploded = exploded
         self.levels = sorted(levels)
+        self.state_cells = state_cells
+        self.state_bytes = state_bytes
+        self.fits_broadcast = (state_cells <= MAX_BROADCAST_INDEX_ROWS
+                               and state_bytes <= MAX_BROADCAST_DIM_BYTES)
+
+
+def _with_covering(regions: DataFrame, region_geog: str,
+                   covering_col: str) -> DataFrame:
+    if covering_col in regions.columns:
+        return regions
+    from ..functions.geo import s2_coveringcellids
+    return regions.withColumn(covering_col, s2_coveringcellids(region_geog))
 
 
 def prepare_regions(spark, regions: DataFrame, *, region_geog: str = "geog",
                     region_id: str = "region_id",
                     covering_col: str = "covering") -> PreparedRegions:
-    if covering_col not in regions.columns:
-        from ..functions.geo import s2_coveringcellids
-        regions = regions.withColumn(covering_col, s2_coveringcellids(region_geog))
-    return PreparedRegions(spark, regions, region_geog, region_id, covering_col)
-
-
-def _subdivided_exploded(regions: DataFrame, region_geog: str,
-                         covering_col: str) -> DataFrame:
-    """Exploded per-covering-cell SUBDIVIDED state table for the
-    shuffle-family join plans: one row per (region, covering cell) with the
-    mixed join key, the interior flag, the packed state blob (ref point +
-    only the ring edges intersecting that cell), and bbox prefilter
-    columns.  Shared by the inline subdivided branch of spatial_join and
-    by prepare_regions_subdivided."""
-    from ..functions.geo import st_boundingbox
-    return (regions
-            .withColumn("_bb", st_boundingbox(F.col(region_geog)))
-            .withColumn("_sub", subdivided_state_udf(F.col(region_geog),
-                                                     F.col(covering_col)))
-            .select("*", F.posexplode(covering_col).alias("_pos", "cell_id"))
-            .withColumn("_st", F.col("_sub")[F.col("_pos")])
-            .withColumn("_full", F.coalesce(F.col("_st.full"), F.lit(False)))
-            .withColumn("_state", F.col("_st.state"))
-            .drop(covering_col, region_geog, "_sub", "_st", "_pos")
-            .withColumn("_ck", cell_join_key(F.col("cell_id"))).drop("cell_id")
-            .withColumn("_xmin", F.col("_bb.xmin"))
-            .withColumn("_ymin", F.col("_bb.ymin"))
-            .withColumn("_xmax", F.col("_bb.xmax"))
-            .withColumn("_ymax", F.col("_bb.ymax")).drop("_bb"))
-
-
-class PreparedRegionsSubdivided:
-    """Prepared dim state for the NON-broadcastable-dim (shuffle-family)
-    join plans — the subdivided-state analog of :class:`PreparedRegions`
-    (reference MutableS2ShapeIndex reuse, geography.h:182-210): the
-    exploded per-cell state table is built ONCE (the per-region
-    subdivided_state_udf is the dominant dim-side cost), pinned with an
-    eager localCheckpoint, and reused across any number of point-side
-    joins, along with the broadcast-fit stats and the distinct cell-key
-    set the fact-side semi-join prefilter broadcasts.
-
-    Unlike PreparedRegions this never collects anything to the driver and
-    has NO size guard — it exists precisely for dims too large to
-    broadcast (the state table shuffles or broadcasts per its own stats)."""
-
-    def __init__(self, spark, regions: DataFrame, region_geog: str,
-                 region_id: str, covering_col: str):
-        self.region_id = region_id
-        self.levels = covering_levels(regions, covering_col)
-        # eager checkpoint: runs the state UDF exactly once; the blocks
-        # carry no CacheManager entry, so the ContextCleaner frees them
-        # with this object's DataFrame reference
-        self.exploded = _subdivided_exploded(
-            regions, region_geog, covering_col).localCheckpoint(eager=True)
-        stats = self.exploded.agg(
-            F.count("*").alias("n"),
-            F.sum(F.octet_length("_state")).alias("b")).collect()[0]
-        self.state_cells = int(stats.n or 0)
-        self.state_bytes = int(stats.b or 0)
-        self.fits_broadcast = (
-            self.state_cells <= MAX_BROADCAST_INDEX_ROWS
-            and self.state_bytes <= MAX_BROADCAST_DIM_BYTES)
-        # distinct mixed keys (8 B/cell) for the pre-exchange semi-join;
-        # derived from the checkpointed table, so no second UDF pass
-        self.keys = (self.exploded.select(F.col("_ck").alias("_ckf"))
-                     .distinct().localCheckpoint(eager=True))
+    """In-process prepare for a dim small enough to hold on the driver:
+    ONE collect (none when the source carries its rows, see
+    _dim_sidecars), then bbox, covering levels, mixed join keys and the
+    per-cell subdivided state are all computed driver-side, and the
+    table is pinned with one eager localCheckpoint.  Raises
+    DimTooLargeError above the row, byte or exploded-cell guard (the
+    MAX_BROADCAST_DIM_* and MAX_BROADCAST_EXPLODED_CELLS constants)."""
+    from ..core import ops as _ops
+    regions = _with_covering(regions, region_geog, covering_col)
+    limits = (MAX_BROADCAST_DIM_ROWS, MAX_BROADCAST_DIM_BYTES,
+              MAX_BROADCAST_EXPLODED_CELLS)
+    n, b, c = dim_broadcast_stats(regions, region_geog, covering_col)
+    if any(v > lim for v, lim in zip((n, b, c or 0), limits)):
+        raise DimTooLargeError(
+            f"dim side too large for the broadcast path ({n} rows, "
+            f"{b} geography bytes, {c} exploded covering cells > "
+            f"{'/'.join(map(str, limits))}); use "
+            "prepare_regions_subdivided (distributed prepare)")
+    other_cols = [c for c in regions.columns
+                  if c not in (covering_col, region_geog)]
+    rows, _ = _dim_sidecars(regions)
+    if rows is None:
+        rows = regions.collect()
+    exploded_rows = []
+    levels = set()
+    state_bytes = 0
+    for r in rows:
+        w = r[region_geog]
+        cov = r[covering_col]
+        if w is None or cov is None:
+            continue
+        g = from_wkb(bytes(w))
+        bb = _ops.s2_bounds(g) or (None,) * 4
+        cells = np.array(cov, dtype=np.int64).view(np.uint64)
+        levels.update(int(l) for l in np.unique(C.level(cells)))
+        ck = (cells ^ (cells >> np.uint64(31))).view(np.int64).tolist()
+        base = tuple(r[c] for c in other_cols)
+        ra, rb = g.ring_edges_xyz()
+        for (full, state), k in zip(_cell_states(cells, ra, rb), ck):
+            state_bytes += len(state or b"")
+            exploded_rows.append(base + (full, state, k) + bb)
+    schema = T.StructType(
+        [regions.schema[c] for c in other_cols]
+        + [T.StructField("_full", T.BooleanType()),
+           T.StructField("_state", T.BinaryType()),
+           T.StructField("_ck", T.LongType()),
+           T.StructField("_xmin", T.DoubleType()),
+           T.StructField("_ymin", T.DoubleType()),
+           T.StructField("_xmax", T.DoubleType()),
+           T.StructField("_ymax", T.DoubleType())])
+    # a createDataFrame'd list is a Python RDD that every query would
+    # re-pickle through a Python worker to scan (~0.8 s per join at 21k
+    # cells); checkpoint blocks are plain rows with no CacheManager entry
+    exploded = spark.createDataFrame(exploded_rows, schema) \
+        .localCheckpoint(eager=True)
+    return PreparedRegions(region_id, exploded, levels, len(exploded_rows),
+                           state_bytes)
 
 
 def prepare_regions_subdivided(
         spark, regions: DataFrame, *, region_geog: str = "geog",
         region_id: str = "region_id",
-        covering_col: str = "covering") -> PreparedRegionsSubdivided:
-    """Prepare the dim side of a shuffle-path spatial join once for reuse
-    (see PreparedRegionsSubdivided).  Pass the result as `regions` to
-    spatial_join(..., broadcast=False)."""
-    if covering_col not in regions.columns:
-        from ..functions.geo import s2_coveringcellids
-        regions = regions.withColumn(covering_col,
-                                     s2_coveringcellids(region_geog))
-    return PreparedRegionsSubdivided(spark, regions, region_geog, region_id,
-                                     covering_col)
+        covering_col: str = "covering") -> PreparedRegions:
+    """Distributed prepare for a dim of any size: the per-region
+    subdivided_state_udf runs on the executors (nothing is collected to
+    the driver), the exploded state table is pinned with ONE eager
+    localCheckpoint, and one aggregation over it records the state size
+    and the covering levels.  localCheckpoint blocks carry no CacheManager
+    entry, so the ContextCleaner frees them with the DataFrame."""
+    from ..functions.geo import st_boundingbox
+    regions = _with_covering(regions, region_geog, covering_col)
+    ex = (regions
+          .withColumn("_bb", st_boundingbox(F.col(region_geog)))
+          .withColumn("_sub", subdivided_state_udf(F.col(region_geog),
+                                                   F.col(covering_col)))
+          .select("*", F.posexplode(covering_col).alias("_pos", "_cell"))
+          .withColumn("_st", F.col("_sub")[F.col("_pos")])
+          .withColumn("_full", F.coalesce(F.col("_st.full"), F.lit(False)))
+          .withColumn("_state", F.col("_st.state"))
+          .drop(covering_col, region_geog, "_sub", "_st", "_pos")
+          .withColumn("_ck", cell_join_key(F.col("_cell")))
+          .withColumn("_xmin", F.col("_bb.xmin"))
+          .withColumn("_ymin", F.col("_bb.ymin"))
+          .withColumn("_xmax", F.col("_bb.xmax"))
+          .withColumn("_ymax", F.col("_bb.ymax")).drop("_bb")
+          .localCheckpoint(eager=True))
+    st = ex.agg(F.count("*").alias("n"),
+                F.sum(F.octet_length("_state")).alias("b"),
+                F.collect_set(cell_level(F.col("_cell"))).alias("lev")) \
+        .collect()[0]
+    return PreparedRegions(region_id, ex.drop("_cell"), st.lev,
+                           int(st.n or 0), int(st.b or 0))
 
 
 def choose_salt(points: DataFrame, *, lng: str = "lng", lat: str = "lat",
@@ -543,6 +301,32 @@ def choose_salt(points: DataFrame, *, lng: str = "lng", lat: str = "lat",
     return int(min(max_salt, int(np.ceil(skew / target_ratio))))
 
 
+def _join_cond(p: DataFrame, e: DataFrame, lng: str, lat: str, *,
+               bbox: bool = True, salted: bool = False):
+    """Join condition of fact side `p` against a slice `e` of the prepared
+    state table: cell-key equality (`_ckp` = `_ck`), the region bbox
+    prefilter (predicates.cc:174-186 analog), and the salt replica match
+    when `salted`.  The bbox test is part of the JOIN CONDITION — a
+    post-join .where() would be combined with the refine predicate and
+    pulled ABOVE ArrowEvalPython by Catalyst's python-UDF extraction."""
+    c = p["_ckp"] == e["_ck"]
+    if bbox:
+        eps = 1e-9
+        lat_ok = (p[lat] >= e["_ymin"] - eps) & (p[lat] <= e["_ymax"] + eps)
+        lng_in = F.when(
+            e["_xmin"] <= e["_xmax"],
+            (p[lng] >= e["_xmin"] - eps) & (p[lng] <= e["_xmax"] + eps)
+        ).otherwise((p[lng] >= e["_xmin"] - eps)
+                    | (p[lng] <= e["_xmax"] + eps))
+        c = c & (e["_xmin"].isNull() | (lat_ok & lng_in))
+    if salted:
+        c = c & (p["_salt"] == e["_salt_r"])
+    return c
+
+
+REFINE_MODES = ("auto", "subdivided")
+
+
 def spatial_join(points: DataFrame, regions: DataFrame, *,
                  lng: str = "lng", lat: str = "lat",
                  region_geog: str = "geog",
@@ -556,26 +340,37 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
                  key_col: Optional[str] = None,
                  refine_mode: str = "auto",
                  coords: str = "lnglat",
-                 prefilter: bool = True,
-                 sort_boundary: bool = False) -> DataFrame:
+                 prefilter: bool = True) -> DataFrame:
     """Join each point row to every region whose polygon satisfies
     `predicate` (contains/intersects) — the engine's flagship operator.
+    For point facts the two predicates coincide: a point exactly on a
+    region edge or vertex is kept by both.
 
     points: any DataFrame with lng/lat columns (degrees).
-    regions: dim with polygon WKB + covering array<long>.
+    regions: a :class:`PreparedRegions`, or a dim DataFrame with polygon
+    WKB (+ optional covering array<long>), which is prepared here: by
+    prepare_regions when `broadcast` and the dim passes its guard, else by
+    prepare_regions_subdivided.  Prepare once and pass the result to
+    amortize the dim side across many joins.
     Returns points' columns + regions' columns (minus internals).
+
+    One planner: when the prepared state table fits a broadcast and
+    refine_mode is 'auto', it broadcasts and the fact side stays MAP-ONLY.
+    Otherwise (refine_mode='subdivided', or an oversized state) the
+    candidates split on the interior flag: interior-cell candidates are
+    contained by construction and skip the refine, and only the boundary
+    band rides the (salted) hash exchange into the parity refine.
 
     level: when set, the dim covering must be at exactly this fixed S2
     level; each point then emits a SINGLE join key (its level-L ancestor)
     instead of one per covering level.  For 20M points x 11 adaptive levels
-    that cuts probe volume 11x — the preferred mode for broadcastable dims.
-    When None, adaptive multi-level coverings are joined by exploding the
-    point's ancestors at each level present in the dim (max_cells=8
-    reference behavior).
+    that cuts probe volume 11x.  When None, adaptive multi-level coverings
+    are joined by exploding the point's ancestors at each level present in
+    the dim (max_cells=8 reference behavior).
 
     leaf_col: name of a pre-computed leaf-cell column on the points side
     (the 'embedded covering' ingest pattern, geography_interface.h:150-158);
-    when None the leaf id is computed here by a vectorized UDF.
+    when None the leaf id is computed here as a pure Column.
 
     key_col: name of a pre-computed fixed-level MIXED join-key column
     (cell_join_key(cell_parent(leaf, level)) materialized at ingest).  The
@@ -587,494 +382,154 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     mutually exclusive with salting (a bucketed fact cannot re-key — rely
     on AQE skew handling or finer buckets instead).
 
-    regions may also be a :class:`PreparedRegions` (from prepare_regions) to
-    amortize the dim-side preparation (broadcast, bbox, covering explode)
-    across many point-side joins, or a :class:`PreparedRegionsSubdivided`
-    (from prepare_regions_subdivided) for the shuffle-family plans — the
-    exploded subdivided-state table, its broadcast-fit stats, and the
-    prefilter key set are then built once and reused; refine_mode 'auto'
-    resolves from the prepared stats with no extra job.
+    coords='leaf': CELL-CENTER corpus (reference compact tagged encoding,
+    encoding.py CELL_CENTER) — the fact side carries ONLY the 8 B leaf id
+    in `leaf_col` and the refine reconstructs the exact cell center; the
+    lng/lat columns are ignored and may be absent.
 
-    prefilter (shuffle paths only): broadcast the dim's DISTINCT cell-key
-    set (8 B/cell — broadcastable even when nothing else about the dim is)
-    and left-semi filter the fact side BEFORE its exchange, so rows that
-    cannot match any covering cell never shuffle.  This is the manual form
-    of Spark's semi-join runtime filter (off by default).  On sparse
-    corpora (bench: 5.7% of mentions in covered cells) it cuts exchange
-    bytes ~17x and end-to-end time ~3x; on dense corpora it costs one
-    codegen hash probe per row.  Default on; set False only when the fact
-    is known to be ~fully covered by the dim.
+    prefilter (shuffle plan only): broadcast the boundary cells' DISTINCT
+    key set (8 B/cell — broadcastable even when nothing else about the dim
+    is) and left-semi filter the fact side BEFORE its exchange, so rows
+    that cannot match a boundary cell never shuffle, while the interior
+    slice joins map-only.  This is the manual form of Spark's semi-join
+    runtime filter (off by default).  Set False only when the fact is
+    known to be ~fully covered by the dim: both slices then hash-join the
+    identical fact child and the fact shuffle materializes once.
     """
+    if predicate not in ("contains", "intersects"):
+        raise ValueError(
+            f"predicate must be 'contains' or 'intersects': {predicate!r}")
+    if refine_mode not in REFINE_MODES:
+        raise ValueError(
+            f"refine_mode must be one of {REFINE_MODES}: {refine_mode!r}")
     if coords not in ("lnglat", "leaf"):
         raise ValueError(f"coords must be 'lnglat' or 'leaf': {coords!r}")
-    if coords == "leaf":
-        # cell-center semantics exist only on the subdivided plans; every
-        # other plan dereferences lng/lat — fail loudly instead of
-        # silently joining on un-quantized coordinates
-        if isinstance(regions, PreparedRegions) or broadcast or \
-                refine_mode not in ("auto", "subdivided"):
-            raise ValueError(
-                "coords='leaf' requires broadcast=False and "
-                "refine_mode='subdivided' (or 'auto')")
-        if leaf_col is None and key_col is None:
-            raise ValueError("coords='leaf' requires leaf_col (the corpus "
-                             "has no lng/lat to derive the leaf id from)")
-    prep: Optional[PreparedRegions] = None
-    sub_prep: Optional[PreparedRegionsSubdivided] = None
-    if isinstance(regions, PreparedRegionsSubdivided):
-        # prepared shuffle-family dim: state already built/checkpointed,
-        # broadcast flag is moot (this prep exists for non-broadcastable
-        # dims), and only the subdivided plans can consume it
-        sub_prep = regions
-        region_id = sub_prep.region_id
-        broadcast = False
-        if refine_mode not in ("auto", "subdivided", "subdivided_broadcast"):
-            raise ValueError(
-                "a PreparedRegionsSubdivided dim supports only "
-                "refine_mode 'auto'/'subdivided'/'subdivided_broadcast' "
-                f"(got {refine_mode!r}); the prepared state table carries "
-                "no region WKB for the rows/index/cogroup plans")
-    elif isinstance(regions, PreparedRegions):
-        prep = regions
-        region_id = prep.region_id
-    else:
-        if covering_col not in regions.columns:
-            from ..functions.geo import s2_coveringcellids
-            regions = regions.withColumn(covering_col,
-                                         s2_coveringcellids(region_geog))
-        if broadcast and region_id in regions.columns:
-            # guardrail: a dim too large to broadcast silently takes the
-            # shuffle path instead of materializing GBs on the driver
-            # (PreparedRegions runs the stats guard itself — including the
-            # POST-explosion cell count, VERDICT r4 #5 — so the ValueError
-            # fallback avoids paying the stats aggregation twice)
-            try:
-                prep = prepare_regions(points.sparkSession, regions,
-                                       region_geog=region_geog,
-                                       region_id=region_id,
-                                       covering_col=covering_col)
-            except DimTooLargeError:
-                prep = None
-
+    leaf_mode = coords == "leaf"
+    if leaf_mode and leaf_col is None and key_col is None:
+        raise ValueError("coords='leaf' requires leaf_col (the corpus "
+                         "has no lng/lat to derive the leaf id from)")
     if key_col is not None:
         if level is None:
             raise ValueError("key_col requires level (the ingest key level)")
         if salt:
             raise ValueError("key_col (bucketed fact) excludes salting")
+
+    if isinstance(regions, PreparedRegions):
+        prep = regions
+    else:
+        prep = None
+        kw = dict(region_geog=region_geog, region_id=region_id,
+                  covering_col=covering_col)
+        if broadcast:
+            try:
+                prep = prepare_regions(points.sparkSession, regions, **kw)
+            except DimTooLargeError:
+                pass
+        if prep is None:
+            prep = prepare_regions_subdivided(points.sparkSession, regions,
+                                              **kw)
+
+    if key_col is not None:
         # use the STORED key attribute: Catalyst only recognizes a bucketed
         # scan's HashPartitioning when the join key IS that attribute (an
         # equivalent expression over `leaf` would not match)
-        pts = points.withColumn("_leaf", F.lit(None).cast("long"))             .withColumn("_ck", F.col(key_col))
-    elif leaf_col is not None:
-        pts = points.withColumn("_leaf", F.col(leaf_col))
-    elif level is not None:
-        # pure-Column Hilbert encode TRUNCATED at the join level
-        # (functions/cells.with_leaf_cell(level=...)): same codegen'd
-        # chain, but only the lookup rounds the level-L ancestor needs —
-        # the full 8-round chain's Catalyst planning cost (analysis +
-        # optimization + AQE re-optimization, all single-threaded driver
-        # CPU linear in chain length × occurrences in the plan) measured
-        # as the DOMINANT cost of the fixed-level join queries at bench
-        # scale (r6).  `_leaf` here holds the LEVEL-L cell id, which is
-        # exactly the join key's preimage; no consumer of this branch
-        # dereferences it as a true leaf (coords='leaf' requires leaf_col).
-        pts = with_leaf_cell(points, lng, lat, "_leaf", level=int(level))
+        pts = points.withColumn("_leaf", F.lit(None).cast("long")) \
+            .withColumn("_ckp", F.col(key_col))
     else:
-        # pure-Column Hilbert encode (functions/cells.with_leaf_cell):
-        # the key derivation stays inside whole-stage codegen — no Arrow
-        # hop, and nothing for Catalyst to duplicate into inferred filters
-        pts = with_leaf_cell(points, lng, lat, "_leaf")
-    if key_col is not None:
-        pass
-    elif level is not None:
         if leaf_col is not None:
-            pts = pts.withColumn(
-                "_ck", cell_join_key(cell_parent(F.col("_leaf"), int(level))))
+            pts = points.withColumn("_leaf", F.col(leaf_col))
         else:
-            pts = pts.withColumn("_ck", cell_join_key(F.col("_leaf")))
+            # pure-Column Hilbert encode (functions/cells.with_leaf_cell),
+            # TRUNCATED at the join level when there is one: same codegen'd
+            # chain, but only the lookup rounds the level-L ancestor needs
+            # — the full chain's Catalyst planning cost (single-threaded
+            # driver CPU linear in chain length x occurrences in the plan)
+            # measured as the DOMINANT cost of the fixed-level join queries
+            # at bench scale (r6).  `_leaf` then holds the LEVEL-L cell id;
+            # no consumer dereferences it as a true leaf (coords='leaf'
+            # requires leaf_col).
+            pts = with_leaf_cell(points, lng, lat, "_leaf",
+                                 level=None if level is None else int(level))
+        if level is None:
+            pts = pts.withColumn("_cell", F.explode(
+                ancestors_at_levels(F.col("_leaf"), prep.levels)))
+            cell = F.col("_cell")
+        elif leaf_col is not None:
+            cell = cell_parent(F.col("_leaf"), int(level))
+        else:
+            cell = F.col("_leaf")
+        pts = pts.withColumn("_ckp", cell_join_key(cell)).drop("_cell")
+    if not leaf_mode:
+        pts = pts.drop("_leaf")
+
+    ex = prep.exploded
+    refine = parity_refine_leaf_udf(F.col("_state"), F.col("_leaf")) \
+        if leaf_mode else \
+        parity_refine_udf(F.col("_state"), F.col(lng), F.col(lat))
+    drop_cols = ["_ckp", "_ck", "_full", "_state",
+                 "_xmin", "_ymin", "_xmax", "_ymax"] \
+        + (["_leaf"] if leaf_mode else [])
+
+    def cond(e, p, salted=False):
+        return _join_cond(p, e, lng, lat, bbox=not leaf_mode, salted=salted)
+
+    if prep.fits_broadcast and refine_mode == "auto":
+        # state fits a broadcast: fact side is map-only (one scan, zero
+        # fact exchange); interior candidates pass with a NULL state blob
+        # (a null bitmap on the wire)
+        cand = pts.join(F.broadcast(ex), cond(ex, pts), "inner")
+        refined = cand.where(
+            F.when(F.col("_full"), F.lit(True))
+            .otherwise(F.coalesce(refine, F.lit(False))))
+        return refined.drop(*drop_cols)
+
+    # FULL/BOUNDARY dim split (round 5): candidates matched through a
+    # provably-interior covering cell are contained by construction, so
+    # they never ride the exchange or the Arrow hop (a pandas UDF is
+    # evaluated on every row of its projection; F.when cannot
+    # short-circuit it) — on the bench corpus they are ~2/3 of all
+    # candidates.
+    if prefilter and prep.state_cells > MAX_BROADCAST_INDEX_ROWS:
+        # r5 ADVICE: the prefilter broadcasts ex_f — the full-cell slice
+        # with ALL region payload columns — and the boundary key set; when
+        # the exploded cell count overflows the index guard, take the
+        # non-prefilter ReuseExchange form instead of OOMing the driver
+        prefilter = False
+    ex_f = ex.where(F.col("_full")).drop("_state")
+    ex_b = ex.where(~F.col("_full"))
+    if prefilter:
+        # the interior (cell -> region) map has the same cardinality as the
+        # semi-join key set — if one broadcasts, so does the other.  So the
+        # interior mass joins MAP-ONLY and only the boundary band (fact
+        # rows whose key is a non-full covering cell, picked out by a
+        # broadcast left-semi) rides the salted exchange and the refine.
+        cand_f = pts.join(F.broadcast(ex_f), cond(ex_f, pts), "inner")
+        bkeys = ex_b.select(F.col("_ck").alias("_ckf")).distinct()
+        ptsb = pts.join(F.broadcast(bkeys),
+                        pts["_ckp"] == bkeys["_ckf"], "left_semi")
     else:
-        if prep is not None:
-            levels = prep.levels
-        elif sub_prep is not None:
-            levels = sub_prep.levels
-        else:
-            levels = covering_levels(regions, covering_col)
-        pts = pts.withColumn(
-            "_cell", F.explode(ancestors_at_levels(F.col("_leaf"), levels)))
-        pts = pts.withColumn("_ck", cell_join_key(F.col("_cell"))).drop("_cell")
-
-    if prep is not None:
-        # broadcast-dim fast path: the candidate join carries ONLY the int
-        # region id; polygons travel once via a broadcast variable and are
-        # decoded/prepared per worker (geog WKB never crosses Arrow per row).
-        # The bbox prefilter (predicates.cc:174-186 analog) is part of the
-        # JOIN CONDITION — a post-join .where() would be combined with the
-        # refine predicate and pulled ABOVE ArrowEvalPython by Catalyst's
-        # python-UDF extraction, defeating the prefilter.
-        ex = prep.exploded
-        eps = 1e-9
-        lat_ok = (pts[lat] >= ex["_ymin"] - eps) & (pts[lat] <= ex["_ymax"] + eps)
-        lng_in = F.when(
-            ex["_xmin"] <= ex["_xmax"],
-            (pts[lng] >= ex["_xmin"] - eps) & (pts[lng] <= ex["_xmax"] + eps)
-        ).otherwise((pts[lng] >= ex["_xmin"] - eps)
-                    | (pts[lng] <= ex["_xmax"] + eps))
-        bbox_ok = ex["_xmin"].isNull() | (lat_ok & lng_in)
-        cond = (pts["_ck"] == ex["_ck"]) & bbox_ok
-        cand = (pts.join(F.broadcast(ex), cond, "inner")
-                .drop(ex["_ck"])
-                .drop("_xmin", "_ymin", "_xmax", "_ymax"))
-        # interior-cell shortcut: candidates in cells fully inside the
-        # region skip the winding math inside the refine kernel
-        refine = _refine_by_region_udf(prep.bc, prep.cache_key)
-        refined = cand.where(refine(F.col(region_id), F.col(lng),
-                                    F.col(lat), F.col("_full")))
-        return refined.drop("_leaf", "_ck", "_full")
-
-    # non-broadcastable dim.  Four plans (all brute-force-verified);
-    # 'auto' picks between the two subdivided forms with one tiny
-    # dim-side stats action (broadcast the state when it fits, shuffle
-    # otherwise):
-    #
-    # subdivided: ONE fact-side shuffle on
-    #   the (salted) cell key; candidates carry the matched cell's packed
-    #   SUBDIVIDED state blob (ref-containment bit + only the edges
-    #   intersecting that cell, ~150 B) instead of ~1 KB region WKB, and
-    #   the refine is vectorized crossing parity (parity_refine_udf) —
-    #   no WKB decode at all.  Interior-cell candidates ship a null blob.
-    # subdivided_broadcast: same state, but the state TABLE is broadcast
-    #   — fact side MAP-ONLY, zero fact exchange.  The right plan when
-    #   the dim's WKB can't broadcast but its per-cell state can (state
-    #   excludes polygon interiors, so it's usually far smaller);
-    #   measured 2.7x faster than the shuffling form on the 80M-mention
-    #   bench.  Raises when the state overflows the broadcast guard.
-    # rows: the WKB-shipping variant of the shuffle plan (per-distinct-
-    #   WKB batched winding refine; interior candidates pass with a NULL
-    #   WKB argument).  Kept as the reference implementation and for
-    #   geographies whose per-cell edge subsets approach the full WKB.
-    #   Negative result (round 4, measured): replacing the Python refine
-    #   with a crossing-parity F.aggregate over an edge-tensor column was
-    #   9x SLOWER (71 s vs 7.6 s on the 20M-mention probe at 2 cores) —
-    #   Spark evaluates higher-order-function lambdas INTERPRETED per
-    #   element, outside whole-stage codegen, so "pure SQL" is not the
-    #   fast path for per-row geometry folds.
-    # index: the dim's WKB is too big to broadcast but its
-    #   (cell -> region_id) INDEX is ~24 bytes/row — broadcast THAT, so
-    #   candidate generation stays MAP-ONLY and only candidates shuffle
-    #   (by region id) into the cogroup refine.  The right plan when the
-    #   fact rows are wide or candidates are a small fraction of the fact
-    #   (here candidates ~ fact, so the cogroup's Arrow hop loses to the
-    #   plain shuffle).
-    # cogroup: ids-only shuffle join + a second candidates shuffle into
-    #   the cogroup refine — only right when geographies are much larger
-    #   than fact rows AND the id index can't broadcast.
-    #
-    # Hot-cell skew on shuffling joins is salted (plus AQE skew-join);
-    # the cogroup refine reuses the salt to split hot-region groups.
-    if refine_mode == "auto":
-        # cost-based: build the per-cell SUBDIVIDED state (ref-point
-        # containment bit + only the ring edges intersecting the matched
-        # cell, ~150 B/boundary cell) and let ONE tiny dim-side stats
-        # action decide between its two consumers —
-        #   state broadcastable  -> subdivided_broadcast (fact MAP-ONLY,
-        #     zero fact exchange; beats shipping the blob with every
-        #     candidate row at ANY match rate — on a geo-dense corpus the
-        #     rows form ships candidates x 150 B through the exchange)
-        #   state too large      -> subdivided (single salted fact-side
-        #     shuffle, blob rides the candidate rows)
-        refine_mode = "subdivided_auto"
-
-    if refine_mode in ("subdivided", "subdivided_broadcast",
-                       "subdivided_auto"):
-        exploded = sub_prep.exploded if sub_prep is not None \
-            else _subdivided_exploded(regions, region_geog, covering_col)
-        # coords="leaf": CELL-CENTER corpus (reference compact tagged
-        # encoding, encoding.py CELL_CENTER) — the fact side carries ONLY
-        # the 8 B leaf id; the refine reconstructs the exact cell center.
-        # 3x fewer bytes through the fact exchange; requires the corpus to
-        # have been quantized to cell centers at ingest (lng/lat columns
-        # are ignored and may be absent).
-        leaf_mode = coords == "leaf"
-        pts = pts.withColumnRenamed("_ck", "_ckp")
-        if not leaf_mode:
-            pts = pts.drop("_leaf")
-        if sub_prep is not None:
-            # stats were paid once at prepare time; resolve the mode from
-            # them with no extra action
-            if refine_mode == "subdivided_auto":
-                refine_mode = "subdivided_broadcast" \
-                    if sub_prep.fits_broadcast else "subdivided"
-            elif refine_mode == "subdivided_broadcast" and \
-                    not sub_prep.fits_broadcast:
-                raise ValueError(
-                    f"subdivided state too large to broadcast "
-                    f"({sub_prep.state_cells} cells, "
-                    f"{sub_prep.state_bytes} bytes); use "
-                    "refine_mode='subdivided'")
-        n_state_cells = sub_prep.state_cells if sub_prep is not None else None
-        if refine_mode != "subdivided" and sub_prep is None:
-            # the 100 TB answer for a dim whose WKB can NOT broadcast: the
-            # per-cell SUBDIVIDED state (~150 B/boundary cell, no polygon
-            # bytes anywhere) usually still CAN — broadcasting it keeps the
-            # fact side MAP-ONLY (zero fact exchange; the only shuffle in a
-            # typical query is the downstream rollup), which is what
-            # actually scales with executors.
-            # materialize ONCE: without this the stats guard runs the
-            # per-region subdivided_state_udf over the whole dim, and the
-            # broadcast then re-executes the same UDF from scratch at join
-            # time.  localCheckpoint blocks carry no CacheManager entry —
-            # the ContextCleaner frees them with the DataFrame.
-            exploded = exploded.localCheckpoint(eager=True)
-            stats = exploded.agg(
-                F.count("*").alias("n"),
-                F.sum(F.octet_length("_state")).alias("b")).collect()[0]
-            n_state_cells = int(stats.n or 0)
-            fits = int(stats.n or 0) <= MAX_BROADCAST_INDEX_ROWS and \
-                int(stats.b or 0) <= MAX_BROADCAST_DIM_BYTES
-            if refine_mode == "subdivided_auto":
-                # auto: broadcast when allowed, shuffle otherwise
-                refine_mode = "subdivided_broadcast" if fits \
-                    else "subdivided"
-            elif not fits:
-                # explicit broadcast request overflows: raise, like every
-                # other broadcast guard (callers fall back to 'subdivided')
-                raise ValueError(
-                    f"subdivided state too large to broadcast ({stats.n} "
-                    f"cells, {stats.b} bytes); use refine_mode='subdivided'")
-        state_bcast = refine_mode == "subdivided_broadcast"
-        if state_bcast:
-            salt = 0
-        drop_cols = ["_ckp", "_ck", "_full", "_state",
-                     "_xmin", "_ymin", "_xmax", "_ymax"] \
-            + (["_salt", "_salt_r"] if salt else []) \
-            + (["_leaf"] if leaf_mode else [])
-
-        def _cond(e, p, salted: bool):
-            """Join condition against dim slice `e` for fact side `p`:
-            cell-key equality, bbox prefilter (skipped in leaf mode), and
-            the salt replica match when `salted`."""
-            c = p["_ckp"] == e["_ck"]
-            if not leaf_mode:
-                eps = 1e-9
-                lat_ok = (p[lat] >= e["_ymin"] - eps) & \
-                    (p[lat] <= e["_ymax"] + eps)
-                lng_in = F.when(
-                    e["_xmin"] <= e["_xmax"],
-                    (p[lng] >= e["_xmin"] - eps)
-                    & (p[lng] <= e["_xmax"] + eps)
-                ).otherwise((p[lng] >= e["_xmin"] - eps)
-                            | (p[lng] <= e["_xmax"] + eps))
-                c = c & (e["_xmin"].isNull() | (lat_ok & lng_in))
-            if salted:
-                c = c & (p["_salt"] == e["_salt_r"])
-            return c
-
-        refine = parity_refine_leaf_udf(F.col("_state"), F.col("_leaf")) \
-            if leaf_mode else \
-            parity_refine_udf(F.col("_state"), F.col(lng), F.col(lat))
-        if state_bcast:
-            # state fits a broadcast: fact side is map-only (one scan,
-            # zero fact exchange); interior candidates pass with a NULL
-            # state blob (a null bitmap on the wire)
-            cand = pts.join(F.broadcast(exploded), _cond(exploded, pts, False),
-                            "inner")
-            refined = cand.where(
-                F.when(F.col("_full"), F.lit(True))
-                .otherwise(F.coalesce(refine, F.lit(False))))
-            return refined.drop(*drop_cols)
-
-        # FULL/BOUNDARY dim split (round 5): candidates matched through a
-        # provably-interior covering cell are contained by construction,
-        # yet they used to ride the exchange AND the Arrow hop anyway (a
-        # pandas UDF is evaluated on every row of its projection; F.when
-        # cannot short-circuit it) — and on the bench corpus they are ~2/3
-        # of all candidates.
-        if sub_prep is None and prefilter:
-            # one state-UDF pass total: the full slice's broadcast build,
-            # the boundary join side, and the boundary key set would each
-            # re-run the per-region subdivided_state_udf otherwise
-            exploded = exploded.localCheckpoint(eager=True)
-            if n_state_cells is None:
-                # explicit refine_mode='subdivided' skipped the auto-stats
-                # action; the checkpointed count is one trivial job
-                n_state_cells = exploded.count()
-        if prefilter and n_state_cells is not None and \
-                n_state_cells > MAX_BROADCAST_INDEX_ROWS:
-            # r5 ADVICE: prefilter=True used to broadcast ex_f — the
-            # full-cell dim slice with ALL region payload columns —
-            # unconditionally, ignoring every broadcast guard; a huge dim
-            # could OOM the driver/executors.  When the exploded cell count
-            # overflows the index guard (the same bound the 8 B/cell key
-            # set and the ~24 B/cell interior map share), fall back to the
-            # non-prefilter ReuseExchange form: both slices hash-join the
-            # identical fact child and the fact shuffle materializes once.
-            prefilter = False
-        ex_f = exploded.where(F.col("_full")).drop("_state")
-        ex_b = exploded.where(~F.col("_full"))
-        if prefilter:
-            # The interior (cell -> region) map has the SAME cardinality as
-            # the semi-join prefilter key set — if one broadcasts, so does
-            # the other.  So the interior mass joins MAP-ONLY (broadcast
-            # inner join, no bbox test needed: a full cell lies inside the
-            # region, hence inside its bbox) and never reaches the
-            # exchange; only the boundary band (fact rows whose key is a
-            # non-full covering cell — a broadcast left-semi picks them
-            # out) rides the salted hash exchange and the parity refine.
-            # At 100 TB the exchange+Python volume is the boundary
-            # fraction, not the candidate count.  prefilter=False opts out
-            # of BOTH broadcasts (keys assumed non-broadcastable): the two
-            # slices then hash-join the identical fact child and
-            # Catalyst's ReuseExchange materializes the fact shuffle once.
-            cand_f = pts.join(F.broadcast(ex_f), _cond(ex_f, pts, False),
-                              "inner")
-            bkeys = ex_b.select(F.col("_ck").alias("_ckf")).distinct()
-            ptsb = pts.join(F.broadcast(bkeys),
-                            pts["_ckp"] == bkeys["_ckf"], "left_semi")
-        else:
-            cand_f = None
-            ptsb = pts
-        if salt:
-            nsalt = int(salt)
-            salt_src = F.hash(F.col("_leaf")) if leaf_mode \
-                else F.hash(F.col(lng), F.col(lat))
-            ptsb = ptsb.withColumn("_salt", F.pmod(salt_src, F.lit(nsalt)))
-            ex_b = ex_b.withColumn(
-                "_salt_r", F.explode(F.sequence(F.lit(0), F.lit(nsalt - 1))))
-        cand_b = ptsb.join(ex_b.hint("SHUFFLE_HASH"),
-                           _cond(ex_b, ptsb, bool(salt)), "inner")
-        if sort_boundary:
-            # r5 verdict item 4 experiment: cluster same-cell candidates
-            # within each post-join partition so the parity refine's
-            # per-batch state factorization sees long same-blob runs.
-            # MEASURED NEGATIVE RESULT (r6, 50M mentions, local[32],
-            # interleaved A/B): median 2.24 s -> 3.76 s — the partition-
-            # local sort of candidate rows costs more than the locality
-            # it buys (pd.factorize over the binary blob column already
-            # groups at C speed without any ordering).  Kept opt-in,
-            # default OFF; see OPTIMIZATION_r06.md.
-            cand_b = cand_b.sortWithinPartitions("_ck")
-        refined_b = cand_b.where(F.coalesce(refine, F.lit(False)))
-        if cand_f is None:
-            ex_fs = ex_f.withColumn(
-                "_salt_r",
-                F.explode(F.sequence(F.lit(0), F.lit(int(salt) - 1)))) \
-                if salt else ex_f
-            cand_f = ptsb.join(ex_fs.hint("SHUFFLE_HASH"),
-                               _cond(ex_fs, ptsb, bool(salt)), "inner")
-        return cand_f.drop(*drop_cols).unionByName(
-            refined_b.drop(*drop_cols))
-
-    if refine_mode == "index":
-        n_idx = regions.select(F.sum(F.size(covering_col))).collect()[0][0]
-        if n_idx is None or int(n_idx) > MAX_BROADCAST_INDEX_ROWS:
-            raise ValueError(
-                f"refine_mode='index' needs the exploded cell index to fit "
-                f"a broadcast (<= {MAX_BROADCAST_INDEX_ROWS} cells)")
-        idx = (regions
-               .select(region_id, F.explode(covering_col).alias("_cell"))
-               .withColumn("_ck", cell_join_key(F.col("_cell")))
-               .drop("_cell"))
-        cand = (pts.join(F.broadcast(idx), "_ck")  # MAP-ONLY candidates
-                .drop("_leaf", "_ck"))
-        return _cogroup_refine(cand, regions, region_geog, region_id,
-                               covering_col, lng, lat, predicate,
-                               int(salt) if salt else 1)
-
-    if refine_mode == "rows":
-        # bbox prefilter INSIDE the join condition (same rationale as the
-        # broadcast path: a post-join .where() would merge with the refine
-        # predicate and be pulled above ArrowEvalPython).  Dropping
-        # cell-matched-but-bbox-outside rows JVM-side cuts the Arrow hop
-        # into the Python refine — the WKB-per-candidate-row transfer that
-        # dominates this path's memory bandwidth — by the bbox selectivity
-        # (~10x on the synthetic corpus).  The bbox and the interior-cell
-        # flags are one UDF pass over the DIM (pre-explode), not the fact.
-        from ..functions.geo import st_boundingbox
-        exploded = regions \
-            .withColumn("_bb", st_boundingbox(F.col(region_geog))) \
-            .withColumn("_ifl", interior_flags_udf(F.col(region_geog),
-                                                   F.col(covering_col))) \
-            .select("*", F.posexplode(covering_col).alias("_pos", "cell_id")) \
-            .withColumn("_full", F.coalesce(F.col("_ifl")[F.col("_pos")],
-                                            F.lit(False))) \
-            .drop(covering_col, "_ifl", "_pos") \
-            .withColumn("_ck", cell_join_key(F.col("cell_id"))).drop("cell_id") \
-            .withColumn("_xmin", F.col("_bb.xmin")) \
-            .withColumn("_ymin", F.col("_bb.ymin")) \
-            .withColumn("_xmax", F.col("_bb.xmax")) \
-            .withColumn("_ymax", F.col("_bb.ymax")).drop("_bb")
-        # prune the internal leaf column BEFORE the fact-side exchange:
-        # only the join key + coordinates need to shuffle
-        pts = pts.withColumnRenamed("_ck", "_ckp").drop("_leaf")
-        if prefilter:
-            # same runtime semi-join reduction as the subdivided branch:
-            # the dim's distinct cell-key set broadcasts at 8 B/cell, and
-            # fact rows outside every covering cell never reach the
-            # exchange
-            keys = regions.select(F.explode(covering_col).alias("_c")) \
-                .select(cell_join_key(F.col("_c")).alias("_ckf")).distinct()
-            pts = pts.join(F.broadcast(keys),
-                           pts["_ckp"] == keys["_ckf"], "left_semi")
-        if salt:
-            nsalt = int(salt)
-            pts = pts.withColumn("_salt", F.pmod(F.hash(F.col(lng), F.col(lat)),
-                                                 F.lit(nsalt)))
-            exploded = exploded.withColumn(
-                "_salt_r", F.explode(F.sequence(F.lit(0), F.lit(nsalt - 1))))
-        eps = 1e-9
-        lat_ok = (pts[lat] >= exploded["_ymin"] - eps) & \
-            (pts[lat] <= exploded["_ymax"] + eps)
-        lng_in = F.when(
-            exploded["_xmin"] <= exploded["_xmax"],
-            (pts[lng] >= exploded["_xmin"] - eps)
-            & (pts[lng] <= exploded["_xmax"] + eps)
-        ).otherwise((pts[lng] >= exploded["_xmin"] - eps)
-                    | (pts[lng] <= exploded["_xmax"] + eps))
-        bbox_ok = exploded["_xmin"].isNull() | (lat_ok & lng_in)
-        cond = (pts["_ckp"] == exploded["_ck"]) & bbox_ok
-        if salt:
-            cond = cond & (pts["_salt"] == exploded["_salt_r"])
-        # SHUFFLE_HASH on the small exploded dim: without the hint the
-        # extra bbox condition makes Catalyst pick SortMergeJoin, which
-        # SORTS the whole fact side — the dominant cost at 10^8 rows
-        model = "semi_open" if predicate == "contains" else "closed"
-        drop_cols = ["_ckp", "_ck", "_full", "_xmin", "_ymin", "_xmax",
-                     "_ymax"] + (["_salt", "_salt_r"] if salt else [])
-        # FULL/BOUNDARY dim split (round 5, same as the subdivided branch):
-        # interior-cell candidates are contained by construction and never
-        # enter the Python refine — not even as null-WKB rows, which still
-        # paid the per-row Arrow transfer of lng/lat.  Both joins
-        # hash-partition the identical fact child, so the fact shuffle is
-        # materialized once (ReuseExchange).
-        ex_f = exploded.where(F.col("_full"))
-        ex_b = exploded.where(~F.col("_full"))
-        cand_f = pts.join(ex_f.hint("SHUFFLE_HASH"), cond, "inner")
-        cand_b = pts.join(ex_b.hint("SHUFFLE_HASH"), cond, "inner")
-        refine = _pip_refine_udf(model)(
-            F.col(region_geog), F.col(lng), F.col(lat))
-        refined_b = cand_b.where(F.coalesce(refine, F.lit(False)))
-        return cand_f.drop(*drop_cols).unionByName(
-            refined_b.drop(*drop_cols))
-
-    # refine_mode == "cogroup": ids-only shuffle join then cogroup refine
-    exploded = (regions
-                .select(region_id, F.explode(covering_col).alias("_cell"))
-                .withColumn("_ck", cell_join_key(F.col("_cell")))
-                .drop("_cell"))
-    if salt:
+        cand_f = None
+        ptsb = pts
+    salted = bool(salt)
+    if salted:
         nsalt = int(salt)
-        pts = pts.withColumn("_salt", F.pmod(F.hash(F.col(lng), F.col(lat)),
-                                             F.lit(nsalt)))
-        exploded = exploded.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(nsalt - 1))))
-        join_keys = ["_ck", "_salt"]
-    else:
-        join_keys = ["_ck"]
-    cand = (pts.join(exploded, join_keys, "inner")
-            .drop("_leaf", "_ck", *(["_salt"] if salt else [])))
-    return _cogroup_refine(cand, regions, region_geog, region_id,
-                           covering_col, lng, lat, predicate,
-                           int(salt) if salt else 1)
+        salt_src = F.hash(F.col("_leaf")) if leaf_mode \
+            else F.hash(F.col(lng), F.col(lat))
+        ptsb = ptsb.withColumn("_salt", F.pmod(salt_src, F.lit(nsalt)))
+        replicas = F.explode(F.sequence(F.lit(0), F.lit(nsalt - 1)))
+        ex_b = ex_b.withColumn("_salt_r", replicas)
+        ex_f = ex_f.withColumn("_salt_r", replicas)
+        drop_cols += ["_salt", "_salt_r"]
+    # SHUFFLE_HASH on the small dim slices: without the hint the bbox
+    # condition makes Catalyst pick SortMergeJoin, which SORTS the whole
+    # fact side — the dominant cost at 10^8 rows
+    cand_b = ptsb.join(ex_b.hint("SHUFFLE_HASH"), cond(ex_b, ptsb, salted),
+                       "inner")
+    refined_b = cand_b.where(F.coalesce(refine, F.lit(False)))
+    if cand_f is None:
+        cand_f = ptsb.join(ex_f.hint("SHUFFLE_HASH"),
+                           cond(ex_f, ptsb, salted), "inner")
+    return cand_f.drop(*drop_cols).unionByName(refined_b.drop(*drop_cols))
 
 
 def spatial_count(points: DataFrame, regions, *,
@@ -1109,10 +564,10 @@ def spatial_count(points: DataFrame, regions, *,
     fraction of the exchange volume.
 
     regions: a dim DataFrame (prepared internally — pass a
-    PreparedRegionsSubdivided to amortize across calls).  The covering
-    must be at fixed `level` (one join key per point)."""
+    PreparedRegions to amortize across calls).  The covering must be at
+    fixed `level` (one join key per point)."""
     spark = points.sparkSession
-    if isinstance(regions, PreparedRegionsSubdivided):
+    if isinstance(regions, PreparedRegions):
         prep = regions
         region_id = prep.region_id
     else:
@@ -1172,19 +627,10 @@ def spatial_count(points: DataFrame, regions, *,
         bkeys = bex.select(F.col("_ck").alias("_ckf")).distinct()
         bpts = pts.join(F.broadcast(bkeys), pts["_ckp"] == F.col("_ckf"),
                         "left_semi")
-    eps = 1e-9
-    lat_ok = (bpts[lat] >= bex["_ymin"] - eps) & \
-        (bpts[lat] <= bex["_ymax"] + eps)
-    lng_in = F.when(
-        bex["_xmin"] <= bex["_xmax"],
-        (bpts[lng] >= bex["_xmin"] - eps) & (bpts[lng] <= bex["_xmax"] + eps)
-    ).otherwise((bpts[lng] >= bex["_xmin"] - eps)
-                | (bpts[lng] <= bex["_xmax"] + eps))
-    bbox_ok = bex["_xmin"].isNull() | (lat_ok & lng_in)
-    cond = (bpts["_ckp"] == bex["_ck"]) & bbox_ok
     cand = bpts.join(
         F.broadcast(bex) if prep.fits_broadcast
-        else bex.hint("SHUFFLE_HASH"), cond, "inner")
+        else bex.hint("SHUFFLE_HASH"), _join_cond(bpts, bex, lng, lat),
+        "inner")
     refined = cand.where(F.coalesce(
         parity_refine_udf(F.col("_state"), F.col(lng), F.col(lat)),
         F.lit(False)))
@@ -1195,82 +641,6 @@ def spatial_count(points: DataFrame, regions, *,
     # ~half the AQE stages of the r5 two-term sum
     return (full_rows.unionByName(refined.select(region_id))
             .groupBy(region_id).agg(F.count("*").alias(count_col)))
-
-
-def _cogroup_refine(cand: DataFrame, regions: DataFrame, region_geog: str,
-                    region_id: str, covering_col: str, lng: str, lat: str,
-                    predicate: str, nsplit: int) -> DataFrame:
-    """Exact refine of (point, region_id) candidates by COGROUPING with the
-    dim on region id: each region's WKB crosses the Arrow boundary once per
-    group; nsplit > 1 splits hot-region groups (skew)."""
-    group_keys = [region_id]
-    # dim side of the cogroup uses RENAMED keys: both sides descend from
-    # `regions`, and identical attribute lineage trips the ambiguous-
-    # self-join analyzer check (cogroup matches grouping keys by position)
-    reg_geo = regions.select(F.col(region_id).alias("_rid_g"), region_geog)
-    right_keys = ["_rid_g"]
-    if nsplit > 1:
-        cand = cand.withColumn("_rs", F.pmod(F.hash(F.col(lng), F.col(lat)),
-                                             F.lit(nsplit)))
-        group_keys = [region_id, "_rs"]
-        reg_geo = reg_geo.withColumn(
-            "_rs_g", F.explode(F.sequence(F.lit(0), F.lit(nsplit - 1))))
-        right_keys = ["_rid_g", "_rs_g"]
-
-    out_schema = cand.drop("_rs").schema if nsplit > 1 else cand.schema
-    out_cols = [f.name for f in out_schema.fields]
-    model = "semi_open" if predicate == "contains" else "closed"
-
-    def refine_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return left.iloc[0:0][out_cols]  # typed empty frame
-        g = from_wkb(bytes(right.iloc[0, right.columns.get_loc(region_geog)]))
-        ra, rb = g.ring_edges_xyz()
-        if len(ra) == 0:
-            keep = np.zeros(len(left), dtype=bool)
-        else:
-            xyz = np.stack(C.lnglat_to_xyz(
-                left[lng].to_numpy(dtype=np.float64),
-                left[lat].to_numpy(dtype=np.float64)), axis=-1)
-            keep = sphere.contains_points(xyz, ra, rb, model=model)
-        return left.loc[keep, out_cols]
-
-    refined = (cand.groupBy(*group_keys)
-               .cogroup(reg_geo.groupBy(*right_keys))
-               .applyInPandas(refine_fn, out_schema))
-    # re-attach the dim's remaining attributes (small projection join);
-    # renamed key avoids the self-join ambiguity with the dim lineage
-    rest = regions.drop(covering_col, region_geog) \
-        .withColumnRenamed(region_id, "_rid_rest")
-    if len(rest.columns) > 1:
-        refined = refined.join(
-            rest, refined[region_id] == rest["_rid_rest"]).drop("_rid_rest")
-    return refined
-
-
-@pandas_udf(T.ArrayType(T.BooleanType()))
-def interior_flags_udf(wkb: pd.Series, covering: pd.Series) -> pd.Series:
-    """Per dim row: 'cell fully inside the region' flags aligned with the
-    covering array — the interior-covering shortcut (reference
-    INDEXED/SUBDIVIDED distinction, index.h:52-91) computed DISTRIBUTED
-    for the non-broadcast join path (the broadcast path computes the same
-    flags driver-side in prepare_regions).  A candidate matched through an
-    interior cell is provably contained, so the Python refine's WKB
-    argument can be nulled for it — Arrow then ships a null bitmap instead
-    of ~1 KB of repeated polygon bytes per interior candidate."""
-    out = []
-    for b, cov in zip(wkb, covering):
-        if b is None or cov is None:
-            out.append(None)
-            continue
-        cells = np.array(cov, dtype=np.int64).view(np.uint64)
-        g = from_wkb(bytes(b))
-        ra, rb = g.ring_edges_xyz()
-        if len(ra) == 0 or len(cells) == 0:
-            out.append([False] * len(cells))
-            continue
-        out.append(_interior_cell_flags(cells, ra, rb).tolist())
-    return pd.Series(out, dtype=object)
 
 
 # ---------------------------------------------------------------------------
@@ -1288,9 +658,9 @@ def interior_flags_udf(wkb: pd.Series, covering: pd.Series) -> pd.Series:
 
 # per-cell state travels as ONE compact binary blob, not per-row arrays:
 # Arrow list columns materialize a Python list per row inside the pandas
-# UDF (measured 14x slower than the WKB rows path at 20M candidates), while
-# a binary column pd.factorize()s at C speed — same trick as the WKB
-# refine, but each unique is ~150 B of edges instead of ~1 KB of polygon.
+# UDF (measured 14x slower than shipping region WKB at 20M candidates),
+# while a binary column pd.factorize()s at C speed, and each unique is
+# ~150 B of edges instead of ~1 KB of polygon.
 # Blob layout (little-endian): u8 rin | 3 x f8 ref_xyz | k x 6 x f8 edges.
 _SUBDIV_STATE_TYPE = T.ArrayType(T.StructType([
     T.StructField("full", T.BooleanType()),
@@ -1312,24 +682,33 @@ def _subdivide_region(cells_u64, ra, rb):
     qb = quads[:, [1, 2, 3, 0]]
     if len(ra) == 0:
         return [(False, False, None, []) for _ in range(n)]
+    # neighbouring cells share corners: test each distinct corner once
+    corners, inv = np.unique(quads.reshape(-1, 3), axis=0,
+                             return_inverse=True)
     corners_in = sphere.contains_points(
-        quads.reshape(-1, 3), ra, rb, model="open").reshape(-1, 4)
+        corners, ra, rb, model="open")[inv.reshape(-1)].reshape(-1, 4)
     # (n, 4, E) cell-edge x ring-edge interactions.  The near-contact
     # dilation uses the endpoint-distance stack DIRECTLY rather than
     # arc_arc_distance, which would re-run the identical arcs_cross tensor
     # internally (sphere.py:100) — crossing pairs are already included via
-    # cross_full, so zeroing their distance would be redundant work.
+    # cross_full, so zeroing their distance would be redundant work.  Each
+    # second endpoint repeats a first one — a cell edge ends at the next
+    # edge's start corner, a closed ring's edge ends at the next edge's
+    # start vertex — so those distances are re-indexed, not recomputed.
     A = quads[:, :, None, :]
     B = qb[:, :, None, :]
     Cc = ra[None, None, :, :]
     D = rb[None, None, :, :]
     cross_full = sphere.arcs_cross(A, B, Cc, D)
+    dist_a = sphere.point_arc_distance(A, Cc, D)
+    dist_c = sphere.point_arc_distance(Cc, A, B)
+    start = {v.tobytes(): k for k, v in enumerate(ra)}
+    succ = [start.get(v.tobytes()) for v in rb]
+    dist_d = dist_c[..., succ] if None not in succ else \
+        sphere.point_arc_distance(D, A, B)
     near = np.minimum(
-        np.minimum(sphere.point_arc_distance(A, Cc, D),
-                   sphere.point_arc_distance(B, Cc, D)),
-        np.minimum(sphere.point_arc_distance(Cc, A, B),
-                   sphere.point_arc_distance(D, A, B))
-    ) <= _SUBDIV_TOUCH_EPS
+        np.minimum(dist_a, dist_a[:, [1, 2, 3, 0]]),
+        np.minimum(dist_c, dist_d)) <= _SUBDIV_TOUCH_EPS
     touches = (cross_full | near).any(axis=1)       # (n, E)
     va = C.from_xyz(ra[:, 0], ra[:, 1], ra[:, 2])   # (E,) vertex leaf ids
     vb = C.from_xyz(rb[:, 0], rb[:, 1], rb[:, 2])
@@ -1390,6 +769,17 @@ def _pack_state(rin: bool, ref, edges) -> bytes:
     return bytes([1 if rin else 0]) + head.tobytes() + body.tobytes()
 
 
+def _cell_states(cells_u64, ra, rb):
+    """Per covering cell of ONE region: (full, packed state blob), the
+    blob None for an interior cell.  Shared by both prepare builders."""
+    return [(True, None) if full else
+            (False, _pack_state(bool(rin),
+                                (np.nan,) * 3 if ref is None else ref,
+                                np.zeros((0, 6)) if edges is None
+                                or len(edges) == 0 else edges))
+            for full, rin, ref, edges in _subdivide_region(cells_u64, ra, rb)]
+
+
 @pandas_udf(_SUBDIV_STATE_TYPE)
 def subdivided_state_udf(wkb: pd.Series, covering: pd.Series) -> pd.Series:
     """Dim-side prep: per region row, the subdivided-cell state array
@@ -1400,20 +790,9 @@ def subdivided_state_udf(wkb: pd.Series, covering: pd.Series) -> pd.Series:
             out.append(None)
             continue
         cells = np.array(cov, dtype=np.int64).view(np.uint64)
-        g = from_wkb(bytes(b))
-        ra, rb = g.ring_edges_xyz()
-        rows = []
-        for full, rin, ref, edges in _subdivide_region(cells, ra, rb):
-            if full:
-                rows.append({"full": True, "state": None})
-            else:
-                rows.append({"full": False,
-                             "state": _pack_state(
-                                 bool(rin),
-                                 (np.nan,) * 3 if ref is None else ref,
-                                 np.zeros((0, 6)) if edges is None
-                                 or len(edges) == 0 else edges)})
-        out.append(rows)
+        ra, rb = from_wkb(bytes(b)).ring_edges_xyz()
+        out.append([{"full": f, "state": st}
+                    for f, st in _cell_states(cells, ra, rb)])
     return pd.Series(out, dtype=object)
 
 
@@ -1424,10 +803,10 @@ def _parity_refine_impl(state: pd.Series, lng: pd.Series,
     semi_open/closed join models) or ref_in XOR crossing-parity of the
     arc(ref, point) against the cell's edge subset.
 
-    The blob column factorizes at C speed (same pattern as the WKB rows
-    refine); each unique unpacks ONCE per batch via np.frombuffer, then a
-    single ragged gather feeds one vectorized arcs_cross over every
-    (candidate, edge) pair — no per-row Python anywhere."""
+    The blob column factorizes at C speed; each unique unpacks ONCE per
+    batch via np.frombuffer, then a single ragged gather feeds one
+    vectorized arcs_cross over every (candidate, edge) pair — no per-row
+    Python anywhere."""
     n = len(state)
     lngv = lng.to_numpy(dtype=np.float64)
     latv = lat.to_numpy(dtype=np.float64)
@@ -1471,7 +850,12 @@ def _parity_refine_impl(state: pd.Series, lng: pd.Series,
             cr = sphere.arcs_cross(R, P, A, B)
             par = np.bincount(row_idx, weights=cr,
                               minlength=n).astype(np.int64)
-            onb = sphere.point_arc_distance(P, A, B) <= 1e-15
+            # a point AT a ring vertex is on the boundary, but the
+            # perpendicular-distance rounding error grows as 1/edge length
+            # and can exceed the 1e-15 tolerance there: test the vertex
+            # exactly (point and ring share the lng/lat -> xyz conversion)
+            onb = (sphere.point_arc_distance(P, A, B) <= 1e-15) \
+                | (P == A).all(axis=1) | (P == B).all(axis=1)
             onb_row = np.bincount(row_idx, weights=onb, minlength=n) > 0
             has_edges = k_row > 0
             upd = onb_row | (result ^ (par % 2 == 1))
@@ -1630,6 +1014,50 @@ def _expand_covering_udf(radius_m: float):
     return udf
 
 
+def _buffered_dims(regions: DataFrame, region_geog: str, region_id: str):
+    """Shared dim side of dwithin_join and knn_join_covering: the region
+    covering is radius-independent, so it is computed ONCE and pinned with
+    an eager localCheckpoint (a bare plan would re-run the covering UDF
+    for every reader).  localCheckpoint rather than persist: CacheManager
+    registration canonicalizes the full logical plan on every subsequent
+    (un)persist/action — pure driver CPU that dominated the small-dim
+    benches (r6) — while checkpoint blocks are plan-free and released by
+    the ContextCleaner with the DataFrame.
+
+    Two jobs: the checkpoint and the base covering's min level.  Returns
+    None when the dim has no covering cells, else `at(radius_m) ->
+    (level, dim)`: the buffered covering at the radius (s2_covering_buffered
+    analog, coverings.cc:80-87 — a superset of 'everything within radius')
+    expanded from the base with vectorized cell math, normalized to the
+    common coarsest level min(base min, level(radius)) — driver arithmetic,
+    no job — and keyed by the mixed cell key `_ck`."""
+    from ..core.ops import buffered_covering_level
+    from ..functions.geo import s2_coveringcellids
+
+    base_cov = regions.select(
+        region_id, s2_coveringcellids(F.col(region_geog)).alias("_bcov")) \
+        .localCheckpoint(eager=True)
+    base_min = base_cov.agg(
+        F.min(F.array_min(F.transform(F.col("_bcov"), cell_level))).alias("l")
+    ).collect()[0].l
+    if base_min is None:
+        return None
+
+    def at(radius_m: float):
+        lev = min(int(base_min), buffered_covering_level(float(radius_m)))
+        covx = base_cov.select(region_id, F.explode(
+            _expand_covering_udf(float(radius_m))(F.col("_bcov")))
+            .alias("_cell"))
+        dim = (covx.select(region_id,
+                           cell_parent(F.col("_cell"), lev).alias("_cell"))
+               .distinct()
+               .withColumn("_ck", cell_join_key(F.col("_cell")))
+               .drop("_cell"))
+        return lev, dim
+
+    return at
+
+
 def dwithin_join(points: DataFrame, regions: DataFrame, radius_m: float, *,
                  lng: str = "lng", lat: str = "lat",
                  region_geog: str = "geog", region_id: str = "region_id",
@@ -1638,45 +1066,16 @@ def dwithin_join(points: DataFrame, regions: DataFrame, radius_m: float, *,
     st_dwithin JOIN operator on the buffered-covering path.
 
     Plan (no cross join, no CartesianProduct): each region emits its
-    buffered covering at the radius (s2_covering_buffered analog,
-    coverings.cc:80-87 — a superset of 'everything within radius'),
-    normalized to the common coarsest level; points join on their
-    level-L ancestor cell (hash equi-join), then the exact vectorized
-    distance refines with the threshold pushed down (distance.cc:285-289).
-    Coverings are supersets, so candidates are never missed; refine-only
-    false positives are dropped."""
-    from ..core.ops import buffered_covering_level
-    from ..functions.cells import cell_level
-    from ..functions.geo import s2_coveringcellids
-
-    # materialize the base covering ONCE (eager localCheckpoint): both the
-    # min-level aggregation and the buffered expansion read it, and a bare
-    # plan would re-run the covering UDF for each (measured: 2 full
-    # dim-side Python passes per query).  localCheckpoint rather than
-    # persist: CacheManager registration canonicalizes the full logical
-    # plan on every subsequent (un)persist/action — pure driver CPU that
-    # dominated the small-dim benches (r6) — while checkpoint blocks are
-    # plan-free and GC-released with the DataFrame.
-    base_cov = regions.select(
-        region_id, s2_coveringcellids(F.col(region_geog)).alias("_bcov")) \
-        .localCheckpoint(eager=True)
-    # the common coarsest level of the buffered covering is
-    # min(base covering min level, level(radius)) — the radius part is pure
-    # driver arithmetic (buffered_covering_level), so the only Spark job
-    # here scans the cheap BASE coverings, not the expanded ones
-    base_min = base_cov.agg(
-        F.min(F.array_min(F.transform(F.col("_bcov"), cell_level))).alias("l")
-    ).collect()[0].l
-    if base_min is None:
+    buffered covering at the radius, normalized to the common coarsest
+    level (see _buffered_dims); points join on their level-L ancestor cell
+    (hash equi-join), then the exact vectorized distance refines with the
+    threshold pushed down (distance.cc:285-289).  Coverings are supersets,
+    so candidates are never missed; refine-only false positives are
+    dropped."""
+    dims = _buffered_dims(regions, region_geog, region_id)
+    if dims is None:
         return points.limit(0).join(regions.select(region_id).limit(0))
-    lev = min(int(base_min), buffered_covering_level(float(radius_m)))
-    covx = (base_cov
-            .select(region_id,
-                    F.explode(_expand_covering_udf(float(radius_m))(
-                        F.col("_bcov"))).alias("_cell")))
-    dim = (covx.select(region_id, cell_parent(F.col("_cell"), lev).alias("_cell"))
-           .distinct()
-           .withColumn("_ck", cell_join_key(F.col("_cell"))).drop("_cell"))
+    lev, dim = dims(radius_m)
     cand = (points
             .transform(lambda d: with_leaf_cell(d, lng, lat, "_leaf",
                                                 level=lev))
@@ -1696,8 +1095,7 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
                       region_geog: str = "geog", region_id: str = "region_id",
                       init_radius_m: float = 250_000.0,
                       max_rounds: Optional[int] = None,
-                      distance_col: str = "distance_m",
-                      materialize: bool = True) -> DataFrame:
+                      distance_col: str = "distance_m") -> DataFrame:
     """Scale-path kNN: buffered-covering candidate pruning with radius
     doubling (the distributed analog of S2ClosestEdgeQuery's chord-angle
     pruning, SURVEY.md §2.6).
@@ -1720,35 +1118,23 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
     be ~3 GB on the driver); the resolved/remaining joins carry no
     broadcast hints because the resolved set is fact-sized (AQE picks
     broadcast when a side is actually small).
+
+    Every materialization is an eager localCheckpoint (r6): CacheManager
+    registration and the recache scan on every unpersist canonicalize the
+    FULL logical plan of every live cache entry — with the Hilbert key
+    chain in the lineage that is seconds of driver CPU per call (measured
+    3-23 s in the 'anti' step alone, which runs NO Spark job).  The
+    returned union of checkpointed parts needs no final materialization,
+    and there is nothing for the caller to unpersist.
     """
     from pyspark.sql import Window as W
-    from ..core.ops import buffered_covering_level
-    from ..functions.cells import cell_level
-    from ..functions.geo import s2_coveringcellids
 
     cols = [point_id, lng, lat, region_id, distance_col, "knn_rank"]
-    # the geography covering is radius-independent: compute it ONCE and
-    # materialize with an eager localCheckpoint; each round only expands it
-    # with vectorized cell math.  localCheckpoint EVERYWHERE this operator
-    # used persist() (r6 optimization): CacheManager registration and the
-    # recache scan on every unpersist canonicalize the FULL logical plan of
-    # every live cache entry — with the Hilbert key chain in the lineage
-    # that is seconds of single-threaded driver CPU per call (measured
-    # 3-23 s in the 'anti' step alone, which runs NO Spark job).
-    # Checkpoint blocks carry no CacheManager entry, truncate the lineage
-    # so every downstream plan starts from a leaf, and are released by the
-    # ContextCleaner when the DataFrame is garbage-collected.
-    base_cov = regions.select(
-        region_id, s2_coveringcellids(F.col(region_geog)).alias("_bcov")) \
-        .localCheckpoint(eager=True)
-    # base-covering min level: ONE job up front; each round's common level
-    # is then min(base_min, buffered_covering_level(radius)) driver-side —
-    # no per-round collect() (the round-2 plan paid ~1-2 scheduling jobs
-    # per radius doubling just to learn a number that is a deterministic
-    # function of the radius)
-    base_min = base_cov.agg(
-        F.min(F.array_min(F.transform(F.col("_bcov"), cell_level))).alias("l")
-    ).collect()[0].l
+    # base covering + its min level: two jobs up front; each round's
+    # common level is then driver arithmetic — no per-round collect() (the
+    # round-2 plan paid ~1-2 scheduling jobs per radius doubling just to
+    # learn a number that is a deterministic function of the radius)
+    dims = _buffered_dims(regions, region_geog, region_id)
     # per-round materialization: each round's resolved set and the
     # shrinking `remaining` are computed once — without it the left_anti
     # lineage chain recomputes every earlier round's candidate join +
@@ -1757,13 +1143,13 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
         .transform(lambda d: with_leaf_cell(d, lng, lat, "_leaf")) \
         .localCheckpoint(eager=True)
     n_remaining = remaining.count()
-    resolved_parts = []
+    parts = []
     radius = float(init_radius_m)
     limit = max_rounds if max_rounds is not None else \
         int(np.ceil(np.log2(np.pi * sphere.EARTH_RADIUS_METERS
                             / max(radius, 1.0)))) + 2
     for _round in range(max(limit, 1)):
-        if n_remaining == 0 or base_min is None:
+        if n_remaining == 0 or dims is None:
             break
         if _round > 0:
             # truncate the previous round's anti-join lineage exactly when
@@ -1771,19 +1157,7 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
             # anti-join stays LAZY: with every point resolved it is never
             # executed at all)
             remaining = remaining.localCheckpoint(eager=True)
-        # dim side: buffered covering at this radius (s2_covering_buffered
-        # analog, coverings.cc:80-87), expanded from the materialized base,
-        # then normalized to the common coarsest level so one equi-join
-        # key suffices
-        covx = (base_cov
-                .select(region_id,
-                        F.explode(_expand_covering_udf(radius)(
-                            F.col("_bcov"))).alias("_cell")))
-        lev = min(int(base_min), buffered_covering_level(radius))
-        dim = (covx.select(region_id,
-                           cell_parent(F.col("_cell"), lev).alias("_cell"))
-               .distinct()
-               .withColumn("_ck", cell_join_key(F.col("_cell"))).drop("_cell"))
+        lev, dim = dims(radius)
         cand = (remaining
                 .withColumn("_ck", cell_join_key(cell_parent(F.col("_leaf"), lev)))
                 .join(dim, "_ck").drop("_ck"))
@@ -1807,16 +1181,16 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
         # exist), so the remaining count is arithmetic on the part count —
         # the round-2 loop paid a second count() job on the anti-join
         n_part = part.count()
-        resolved_parts.append(part)
+        parts.append(part)
         remaining = remaining.join(kth, point_id, "left_anti")
         n_remaining -= n_part // k
         radius *= 2.0
-    parts = list(resolved_parts)
     if n_remaining > 0:
         fallback = knn_join(remaining.drop("_leaf"),
                             regions.select(region_id, region_geog), k,
                             point_id=point_id, lng=lng, lat=lat,
-                            region_geog=region_geog, distance_col=distance_col)
+                            region_geog=region_geog, region_id=region_id,
+                            distance_col=distance_col)
         parts.append(fallback.select(*cols))
     if not parts:
         return remaining.drop("_leaf").limit(0) \
@@ -1826,28 +1200,22 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
     out = parts[0]
     for part in parts[1:]:
         out = out.unionByName(part)
-    # the per-round parts are already materialized (checkpoint blocks, no
-    # CacheManager entries), so the union is lineage-free up to the
-    # optional fallback: no final re-materialization pass is needed for
-    # EITHER materialize mode, and there is nothing for the caller to
-    # unpersist — blocks are freed when the returned DataFrame (which
-    # references the part RDDs) is garbage-collected.
     return out
 
 
 def knn_join(points: DataFrame, regions: DataFrame, k: int, *,
              point_id: str, lng: str = "lng", lat: str = "lat",
-             region_geog: str = "geog",
+             region_geog: str = "geog", region_id: str = "region_id",
              distance_col: str = "distance_m") -> DataFrame:
     """k nearest regions per point (S2ClosestEdgeQuery semantics over the
-    broadcast dim: exact distances, window top-k).
+    broadcast dim: exact distances, window top-k; ties broken by
+    `region_id`).
 
     Plan: broadcast nested-loop pairing (points x |regions|) with the
     distance computed by one vectorized kernel per distinct region per
     batch, then Window.partitionBy(point).orderBy(distance) row_number <= k
     (SURVEY.md §2.6 kNN building block).  Right-sized when the dim side is
-    broadcastable; for a large dim use the buffered-covering candidate join
-    (s2_coveringcellids_buffered) before this refine.
+    broadcastable; for a large dim use knn_join_covering.
     """
     from pyspark.sql import Window as W
 
@@ -1856,6 +1224,6 @@ def knn_join(points: DataFrame, regions: DataFrame, k: int, *,
                            distance_to_geog_udf(F.col(region_geog),
                                                 F.col(lng), F.col(lat)))
     w = W.partitionBy(point_id).orderBy(F.col(distance_col).asc(),
-                                        F.col("region_id").asc())
+                                        F.col(region_id).asc())
     return (pair.withColumn("knn_rank", F.row_number().over(w))
             .where(F.col("knn_rank") <= k))

@@ -1,6 +1,11 @@
-"""Local pre-flight for the driver's correctness gate: run every queries()
-entry on Spark at sf0.01 and compare against oracle_sql() in DuckDB
-(row count + column names + order-insensitive values).
+"""Local pre-flight for the correctness gate: run every queries() entry on
+Spark at sf0.01 and compare against oracle_sql() in DuckDB (row count +
+column names + order-insensitive values).
+
+    python scripts/check_oracles.py [query ...]
+
+CHECK_ORACLES_SF_DIR picks the data directory; the session's core count
+comes from SPARK_GRAFT_CPUS (see session.get_spark).
 """
 
 from __future__ import annotations
@@ -9,7 +14,7 @@ import math
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
@@ -36,7 +41,7 @@ def norm_rows(cols, rows):
 
 
 def main():
-    spark = get_spark("check_oracles", cpus=8, shuffle_partitions=8)
+    spark = get_spark("check_oracles", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")

@@ -41,14 +41,15 @@ def main():
     joined = spatial_join(mentions, prep, level=6, leaf_col="leaf")
     agg = joined.groupBy("region_id").agg(F.count("*").alias("n"))
     sections.append((
-        "Flagship spatial join (cover join + PIP refine + rollup)",
+        "Flagship spatial join (cover join + parity refine + rollup)",
         """What to verify:
 - ONE `BroadcastHashJoin ... BuildRight` on the mixed cell key (`_ck`) — the
   fact side never shuffles for the join.
 - `Scan parquet` ReadSchema lists ONLY the needed columns (leaf, lng, lat +
   user-selected) — column pruning reached the scan.
-- The polygon WKB appears nowhere in the row plan: it rides a broadcast
-  variable consumed inside `ArrowEvalPython` (the refine).
+- The polygon WKB appears nowhere in the plan: the broadcast side is the
+  prepared per-cell state table (`_full`, `_state` blob, `_ck`, bbox),
+  and `ArrowEvalPython` runs `parity_refine_udf` over the `_state` blob.
 - The bbox prefilter is the BroadcastHashJoin's `Join condition` — false
   candidates die inside the join, before ArrowEvalPython (a post-join
   .where() would be pulled above the Python node by UDF extraction).
@@ -59,8 +60,8 @@ def main():
     # 2. adaptive multi-level path with salting (shuffle join form)
     pts = em._customer_points(spark, SF_DIR)
     # refine_mode pinned to the shuffling form: this section documents the
-    # forced-shuffle plan ('auto' would upgrade this broadcastable dim's
-    # state to subdivided_broadcast and erase the exchange under audit)
+    # forced-shuffle plan ('auto' would broadcast this dim's state table
+    # and erase the exchange under audit)
     joined2 = spatial_join(pts, regions_df(spark, 96), broadcast=False,
                            salt=4, refine_mode="subdivided")
     sections.append((
@@ -68,11 +69,14 @@ def main():
         """What to verify:
 - `Generate explode` of point ancestor cells and of the salted dim —
   the salt replicates the SMALL side only.
+- An inner `BroadcastHashJoin` against the interior (`_full`) slice of
+  the prepared state table: those candidates are contained by
+  construction, join map-only and never reach the refine.
 - A `BroadcastHashJoin ... LeftSemi` BEFORE the fact-side Exchange: the
-  dim's distinct cell-key set (8 B/cell) broadcasts and drops fact rows
-  that can match no covering cell, so they never shuffle (round-5
-  runtime semi-join prefilter; map-side, does not add an exchange).
-- `SortMergeJoin`/`ShuffledHashJoin` keyed on (_ck, _salt): the hot-cell
+  boundary cells' distinct key set (8 B/cell) broadcasts and drops fact
+  rows that can match no boundary cell, so they never shuffle (runtime
+  semi-join prefilter; map-side, does not add an exchange).
+- `ShuffledHashJoin` keyed on (_ck, _salt) for the boundary band: the hot-cell
   skew is split 4 ways; AQE skew-join covers residual imbalance.""",
         plan_of(joined2.select("c_custkey", "region_id"))))
 

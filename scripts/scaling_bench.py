@@ -80,7 +80,7 @@ else:
     modes["shuffle_nofilter"] = lambda: run_join_bench_shuffle(
         spark, {sh_path!r}, prefilter=False, refine_mode="subdivided")
     modes["state_bcast"] = lambda: run_join_bench_shuffle(
-        spark, {sh_path!r}, refine_mode="subdivided_broadcast")
+        spark, {sh_path!r}, refine_mode="auto")
     modes["shuffle_dense"] = lambda: run_join_bench_shuffle(spark, {dn_path!r})
     modes["bucketed"] = lambda: run_join_bench_bucketed(spark, tbl)
 for fn in modes.values():
@@ -366,15 +366,15 @@ whose key set genuinely cannot broadcast.
 
 {effs('shuffle_nofilter', north_mode=False)}
 
-## Subdivided-state broadcast (non-broadcastable-WKB dim)
+## Subdivided-state broadcast (distributed prepare, refine_mode='auto')
 
-The answer for a dim whose POLYGON BYTES cannot broadcast: the per-cell
-SUBDIVIDED state (ref-point containment bit + only the ring edges
-intersecting each covering cell, ~150 B/boundary cell — the reference's
-S2ShapeIndex INDEXED/SUBDIVIDED design as columnar state) usually still
-can.  Broadcasting the state table keeps the fact side MAP-ONLY — zero
-fact exchange; the refine is crossing parity against the matched cell's
-edge subset, no WKB anywhere.
+The dim is prepared distributed (broadcast=False), and the planner still
+broadcasts its per-cell SUBDIVIDED state (ref-point containment bit + only
+the ring edges intersecting each covering cell, ~150 B/boundary cell — the
+reference's S2ShapeIndex INDEXED/SUBDIVIDED design as columnar state)
+because it fits the guard.  The fact side stays MAP-ONLY — zero fact
+exchange; the refine is crossing parity against the matched cell's edge
+subset, no WKB anywhere.
 
 | parallelism | wall sec (min-max) | join rows/sec |
 |---|---|---|
@@ -387,10 +387,10 @@ edge subset, no WKB anywhere.
 A geo-DENSE corpus ({levels[8]['shuffle_dense']['mentions']:,} mentions,
 every one inside the covering set — GPS/check-in/geotagged-media shape)
 is the adversarial input for the shuffle join: the semi-join prefilter
-removes ~nothing and the rows form would ship its ~150 B state blob with
-EVERY candidate through the exchange.  `refine_mode='auto'` measures what
-the engine actually picks here: the dim state fits the broadcast guard,
-so the plan upgrades to subdivided_broadcast — the fact side stays
+removes ~nothing and the shuffle plan would ship its ~150 B state blob
+with every boundary candidate through the exchange.  `refine_mode='auto'`
+measures what the engine actually picks here: the dim state fits the
+broadcast guard, so the state table broadcasts — the fact side stays
 MAP-ONLY and no candidate bytes shuffle at all, at a 100% match rate.
 
 | parallelism | wall sec (min-max) | join rows/sec |

@@ -122,35 +122,39 @@ def test_touches_two_crossing_lines_false():
 # ---------------------------------------------------------------------------
 
 def test_large_dim_falls_back_to_shuffle_path(spark, monkeypatch):
+    """A dim over the in-process guard is prepared distributed instead
+    (nothing collected to the driver), and the join stays right."""
     from s2geography_spark.operators import spatial_join as sj
     from s2geography_spark.sources.regions import regions_df
     monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", 4)
+    built = []
+    distributed = sj.prepare_regions_subdivided
+    monkeypatch.setattr(sj, "prepare_regions_subdivided",
+                        lambda *a, **kw: built.append(1) or distributed(*a, **kw))
     regions = regions_df(spark, 24)
+    boxes = regions.collect()
     pts = spark.createDataFrame(
-        [(0, 10.5, 10.5), (1, -170.0, -70.0)], "pid long, lng double, lat double")
+        [(i, (r.lng0 + r.lng1) / 2, (r.lat0 + r.lat1) / 2)
+         for i, r in enumerate(boxes[:2])] + [(2, -170.0, -70.0)],
+        "pid long, lng double, lat double")
     out = sj.spatial_join(pts, regions, predicate="contains", broadcast=True)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    # non-broadcast fallback: the cogroup refine, the WKB rows refine, or
-    # the round-5 subdivided parity refine — never the broadcast-dim refine
-    assert ("FlatMapCoGroupsInPandas" in plan or "pip_refine" in plan
-            or "parity_refine" in plan)
-    assert out.count() >= 0  # executes
+    assert built == [1]
+    got = {(r.pid, r.region_id) for r in out.collect()}
+    assert got == {(0, boxes[0].region_id), (1, boxes[1].region_id)}
 
     with pytest.raises(ValueError, match="too large"):
-        sj.PreparedRegions(spark, regions, "geog", "region_id", "covering",
-                           max_rows=4) if "covering" in regions.columns else \
-            sj.prepare_regions(spark, regions)
+        sj.prepare_regions(spark, regions)
 
 
-def test_prepare_regions_guard_raises(spark):
+def test_prepare_regions_guard_raises(spark, monkeypatch):
     from s2geography_spark.operators import spatial_join as sj
     from s2geography_spark.sources.regions import regions_df
     regions = regions_df(spark, 24)
     from s2geography_spark.functions.geo import s2_coveringcellids
     regions = regions.withColumn("covering", s2_coveringcellids("geog"))
+    monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", 4)
     with pytest.raises(ValueError, match="too large"):
-        sj.PreparedRegions(spark, regions, "geog", "region_id", "covering",
-                           max_rows=4)
+        sj.prepare_regions(spark, regions)
 
 
 # ---------------------------------------------------------------------------

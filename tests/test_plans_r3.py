@@ -19,13 +19,25 @@ def test_geo_overlap_area_no_nested_loop(spark):
     assert "CartesianProduct" not in plan
 
 
+def _box_pairs(rows, n_regions=24):
+    """Planar brute force over the lat/lng box regions (points far from
+    every edge): {(lng, lat, region_id)}."""
+    import numpy as np
+    from s2geography_spark.sources.regions import region_corners
+    lng0, lat0, lng1, lat1 = region_corners(np.arange(n_regions))
+    return {(x, y, i) for x, y in rows for i in range(n_regions)
+            if lng0[i] < x < lng1[i] and lat0[i] < y < lat1[i]}
+
+
 def test_rows_mode_no_sort_merge_join(spark):
+    """The boundary-band shuffle (the plan that replaced the rows mode)
+    keeps its SHUFFLE_HASH hint and the bbox inside the join condition."""
     from s2geography_spark.operators.spatial_join import spatial_join
     from s2geography_spark.sources.regions import regions_df
     pts = spark.createDataFrame([(1, 10.0, 10.0)], "id long, lng double, lat double")
     j = spatial_join(pts, regions_df(spark, 24, covering_level=6),
                      predicate="contains", broadcast=False, salt=4, level=6,
-                     refine_mode="rows")
+                     refine_mode="subdivided")
     plan = _plan(j)
     # the SHUFFLE_HASH hint must hold: SortMergeJoin would sort the whole
     # fact side; and the bbox prefilter must be INSIDE the join condition
@@ -65,9 +77,9 @@ def test_knn_covering_single_prelevel_job(spark):
 
 
 def test_bucketed_fact_join_no_fact_exchange(spark):
-    """key_col over a bucketed fact: the join's ONLY exchange is the dim
-    side shuffling to the bucket count — the fact scan feeds the join
-    directly (the pay-bucketing-once-at-ingest 100 TB pattern)."""
+    """key_col over a bucketed fact on the default plan: the state table
+    broadcasts, so the fact scan feeds the join with no exchange at all,
+    and the rows match brute force and the unbucketed join."""
     from s2geography_spark.functions.cells import cell_join_key, cell_parent
     from s2geography_spark.operators.spatial_join import (leaf_cell_udf,
                                                           spatial_join)
@@ -84,22 +96,18 @@ def test_bucketed_fact_join_no_fact_exchange(spark):
         j = spatial_join(spark.table("_bkt_plan_test"),
                          regions_df(spark, 24, covering_level=6),
                          predicate="contains", broadcast=False, level=6,
-                         key_col="ck", refine_mode="rows")
+                         key_col="ck")
         plan = _plan(j)
-        # the fact side must never re-key: no exchange partitions on the
-        # fact's _ckp (the bucketed scan feeds the join directly).  Dim-
-        # side exchanges (covering explode to the bucket count + the tiny
-        # distinct key set feeding the semi-filter broadcast) are fine.
         assert "Exchange hashpartitioning(_ckp" not in plan, plan
-        assert "ShuffledHashJoin [_ckp" in plan, plan
-        # correctness unchanged vs the unbucketed rows mode
+        assert "BroadcastHashJoin" in plan, plan
         ref = spatial_join(spark.table("_bkt_plan_test"),
                            regions_df(spark, 24, covering_level=6),
                            predicate="contains", broadcast=False, level=6,
-                           leaf_col="leaf", refine_mode="rows")
+                           leaf_col="leaf", refine_mode="subdivided")
         got = {(r.lng, r.lat, r.region_id) for r in j.collect()}
         exp = {(r.lng, r.lat, r.region_id) for r in ref.collect()}
-        assert got == exp and got
+        assert got == exp == _box_pairs({(r.lng, r.lat) for r in
+                                         pts.collect()}) and got
     finally:
         spark.sql("DROP TABLE IF EXISTS _bkt_plan_test")
 
@@ -129,11 +137,11 @@ def test_bucketed_fact_join_subdivided_no_fact_exchange(spark):
         assert "ShuffledHashJoin [_ckp" in plan, plan
         ref = spatial_join(spark.table("_bkt_plan_test_sub"),
                            regions_df(spark, 24, covering_level=6),
-                           predicate="contains", broadcast=False, level=6,
-                           leaf_col="leaf", refine_mode="rows")
+                           predicate="contains", level=6, leaf_col="leaf")
         got = {(r.lng, r.lat, r.region_id) for r in j.collect()}
         exp = {(r.lng, r.lat, r.region_id) for r in ref.collect()}
-        assert got == exp and got
+        assert got == exp == _box_pairs({(r.lng, r.lat) for r in
+                                         pts.collect()}) and got
     finally:
         spark.sql("DROP TABLE IF EXISTS _bkt_plan_test_sub")
 

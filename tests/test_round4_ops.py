@@ -195,9 +195,9 @@ def test_oriented_complement_through_sql_pipeline(spark):
 
 
 # ---------------------------------------------------------------------------
-# rows-mode interior-cell shortcut: the shuffle join must return exactly the
-# broadcast join's pairs, boundary points included (the shortcut nulls the
-# Python refine's WKB argument for provably-interior candidates)
+# interior-cell shortcut: the salted boundary-band shuffle (interior
+# candidates skip the refine) must return exactly the state broadcast's
+# pairs, boundary points included
 # ---------------------------------------------------------------------------
 
 def test_shuffle_rows_interior_shortcut_matches_broadcast(spark):
@@ -206,17 +206,16 @@ def test_shuffle_rows_interior_shortcut_matches_broadcast(spark):
     from s2geography_spark.sources.regions import regions_df
     rows = [(i, float((i * 7) % 1440) / 4.0 - 180.0 + 0.125,
              float((i * 11) % 640) / 4.0 - 80.0 + 0.125) for i in range(800)]
-    # planted boundary points on region-0 edges (a point exactly AT a
-    # corner vertex is excluded: the semi-open model is knife-edge there
-    # by design and the broadcast/shuffle paths are only contracted to
-    # agree for points clear of the boundary)
-    rows += [(100000, -150.0, -64.0), (100001, -147.0, -63.5)]
+    # planted boundary points on region-0 edges, plus its corner vertex
+    # (both plans share one refine, so they agree exactly on it too)
+    rows += [(100000, -150.0, -64.0), (100001, -147.0, -63.5),
+             (100002, -150.0, -65.0)]
     pts = spark.createDataFrame(rows, "id long, lng double, lat double")
     regions = regions_df(spark, 48, covering_level=6)
     for predicate in ("contains", "intersects"):
         a = spatial_join(pts, regions, predicate=predicate, level=6)
         b = spatial_join(pts, regions, predicate=predicate, broadcast=False,
-                         salt=2, level=6, refine_mode="rows")
+                         salt=2, level=6, refine_mode="subdivided")
         sa = {(r.id, r.region_id) for r in a.select("id", "region_id").collect()}
         sb = {(r.id, r.region_id) for r in b.select("id", "region_id").collect()}
         assert sa == sb, predicate

@@ -172,11 +172,11 @@ def test_knn_covering_matches_brute_force(spark, mentions):
 
 
 def test_spatial_join_shuffle_cogroup_matches(spark, mentions):
-    """cogroup refine mode (for very fat dims): same result, WKB crosses
-    Arrow once per region group."""
+    """The salted boundary-band shuffle (the plan that replaced the cogroup
+    refine for fat dims) matches brute force."""
     regions = regions_df(spark, 24)
     joined = spatial_join(mentions.limit(500), regions, predicate="contains",
-                          broadcast=False, salt=4, refine_mode="cogroup")
+                          broadcast=False, salt=4, refine_mode="subdivided")
     got = {(r.url, r.mention_idx, r.region_id)
            for r in joined.select("url", "mention_idx", "region_id").collect()}
     expected = brute_force_pairs(mentions.limit(500).collect(), 24)
@@ -184,20 +184,24 @@ def test_spatial_join_shuffle_cogroup_matches(spark, mentions):
 
 
 def test_spatial_join_index_mode_matches(spark, mentions):
-    """index refine mode: broadcast (cell -> region_id) index, map-only
-    candidates, cogroup refine — same result as brute force."""
+    """The map-only candidate plan that replaced the index mode: the
+    distributed prepare's state table broadcasts (no fact-side exchange)
+    and matches brute force."""
     regions = regions_df(spark, 24)
     joined = spatial_join(mentions.limit(500), regions, predicate="contains",
-                          broadcast=False, refine_mode="index")
+                          broadcast=False)
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "Exchange hashpartitioning(_ckp" not in plan
     got = {(r.url, r.mention_idx, r.region_id)
            for r in joined.select("url", "mention_idx", "region_id").collect()}
     assert got == brute_force_pairs(mentions.limit(500).collect(), 24)
 
 
 def test_boundary_band_broadcast_matches_shuffle(spark):
-    """Round-3 fix: points planted within ~1 um .. 1 km of region edges get
-    identical join rows on the float32 broadcast refine (with its float64
-    boundary-band recheck) and the float64 shuffle refine."""
+    """Points planted within ~1 um .. 1 km of region edges get identical
+    join rows on the state-broadcast plan and the boundary-band shuffle,
+    and the rows agree with the direct contains kernel."""
     n_regions = 12
     rs = np.arange(n_regions)
     lng0, lat0, lng1, lat1 = region_corners(rs)
@@ -221,10 +225,17 @@ def test_boundary_band_broadcast_matches_shuffle(spark):
     bcast = spatial_join(pts, regions, predicate="contains", level=6,
                          broadcast=True)
     shuf = spatial_join(pts, regions, predicate="contains", level=6,
-                        broadcast=False, refine_mode="rows")
+                        broadcast=False, refine_mode="subdivided")
     got_b = {(r.pid, r.region_id) for r in bcast.collect()}
     got_s = {(r.pid, r.region_id) for r in shuf.collect()}
     assert got_b == got_s
+    xyz = sphere.lnglat_to_xyz(np.array([[x, y] for _, x, y in rows]))
+    direct = set()
+    for r in regions.select("region_id", "geog").collect():
+        ra, rb = from_wkb(bytes(r.geog)).ring_edges_xyz()
+        hit = sphere.contains_points(xyz, ra, rb, model="semi_open")
+        direct |= {(rows[i][0], r.region_id) for i in np.nonzero(hit)[0]}
+    assert got_b == direct
     # sanity: the inside-offset points actually joined
     assert len(got_b) > len(rows) / 3
 
@@ -257,29 +268,29 @@ def test_interior_shortcut_hole_inside_one_cell(spark):
 
 
 def test_interior_flags_vertex_in_cell():
-    """Unit check of the vertex-evidence rule: a cell holding a hole ring
-    must not be flagged full; a clean interior cell still is."""
+    """Unit check of the vertex-evidence rule in the subdivided state's
+    `full` flags: a cell holding a hole ring must not be flagged full; a
+    clean interior cell still is."""
     from s2geography_spark.core import cellid as C
     from s2geography_spark.core.geog import from_wkt
-    from s2geography_spark.operators.spatial_join import _interior_cell_flags
+    from s2geography_spark.operators.spatial_join import _subdivide_region
 
     g = from_wkt("POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), "
                  "(5.01 5.01, 5.01 5.03, 5.03 5.03, 5.03 5.01, 5.01 5.01))")
     ra, rb = g.ring_edges_xyz()
     hole_cell = C.from_lnglat(np.array([5.02]), np.array([5.02]), lev=8)
     clean_cell = C.from_lnglat(np.array([2.0]), np.array([2.0]), lev=10)
-    flags = _interior_cell_flags(
-        np.concatenate([hole_cell, clean_cell]).astype(np.uint64), ra, rb)
-    assert flags.tolist() == [False, True]
+    flags = [full for full, *_ in _subdivide_region(
+        np.concatenate([hole_cell, clean_cell]).astype(np.uint64), ra, rb)]
+    assert flags == [False, True]
 
 
-def test_prepared_regions_exploded_guard(spark):
+def test_prepared_regions_exploded_guard(spark, monkeypatch):
     """VERDICT r4 #5: the broadcast guard must bound the POST-explosion
     cell count, not just input rows/bytes; an oversized dim falls back to
-    the shuffle path in spatial_join and raises in PreparedRegions."""
+    the distributed prepare in spatial_join and raises in prepare_regions."""
     from s2geography_spark.core.geog import from_wkt, to_wkb
-    from s2geography_spark.operators.spatial_join import (PreparedRegions,
-                                                          dim_is_broadcastable)
+    from s2geography_spark.operators import spatial_join as sj
 
     wkb = to_wkb(from_wkt("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))"))
     regions = spark.createDataFrame([(1, bytearray(wkb))],
@@ -287,28 +298,28 @@ def test_prepared_regions_exploded_guard(spark):
     from s2geography_spark.functions.geo import s2_coveringcellids
     regions = regions.withColumn("covering", s2_coveringcellids("geog"))
     ncells = regions.select(F.sum(F.size("covering"))).collect()[0][0]
-    assert not dim_is_broadcastable(regions, "geog", covering_col="covering",
-                                    max_cells=ncells - 1)
-    assert dim_is_broadcastable(regions, "geog", covering_col="covering",
-                                max_cells=ncells)
+    assert not sj.dim_is_broadcastable(regions, "geog",
+                                       covering_col="covering",
+                                       max_cells=ncells - 1)
+    assert sj.dim_is_broadcastable(regions, "geog", covering_col="covering",
+                                   max_cells=ncells)
+    monkeypatch.setattr(sj, "MAX_BROADCAST_EXPLODED_CELLS", ncells - 1)
     with pytest.raises(ValueError, match="exploded covering cells"):
-        PreparedRegions(spark, regions, "geog", "region_id", "covering",
-                        max_cells=ncells - 1)
+        sj.prepare_regions(spark, regions)
 
 
 def test_subdivided_equals_rows_refine(spark, mentions):
-    """The subdivided-cell parity refine (round-5 shuffle path) must produce
-    exactly the WKB winding refine's pairs, on the corpus and on the
-    antimeridian/pole special regions."""
+    """The boundary-band shuffle and the state broadcast must both produce
+    the brute-force pairs on the corpus, and the direct contains kernel's
+    pairs on the antimeridian/pole special regions."""
     regions = regions_df(spark, 24)
     sub = spatial_join(mentions, regions, predicate="contains",
                        broadcast=False, refine_mode="subdivided")
-    wkb = spatial_join(mentions, regions, predicate="contains",
-                       broadcast=False, refine_mode="rows")
+    bc = spatial_join(mentions, regions, predicate="contains")
     key = ["url", "mention_idx", "region_id"]
     a = {tuple(r) for r in sub.select(*key).collect()}
-    b = {tuple(r) for r in wkb.select(*key).collect()}
-    assert a == b and len(a) > 0
+    b = {tuple(r) for r in bc.select(*key).collect()}
+    assert a == b == brute_force_pairs(mentions.collect(), 24) and a
 
     pts = spark.createDataFrame(
         [(0, 179.9, 0.0), (1, -179.9, 1.0), (2, 0.0, 89.0),
@@ -320,34 +331,48 @@ def test_subdivided_equals_rows_refine(spark, mentions):
                         refine_mode="subdivided")
            .select("pid", "region_id").collect()}
     ref = {(r.pid, r.region_id) for r in
-           spatial_join(pts, specials, predicate="contains", broadcast=False,
-                        refine_mode="rows")
+           spatial_join(pts, specials, predicate="contains")
            .select("pid", "region_id").collect()}
-    assert got == ref
+    direct = set()
+    for r in specials.collect():
+        ra, rb = from_wkb(bytes(r.geog)).ring_edges_xyz()
+        for pid, lng, lat in pts.collect():
+            p = sphere.lnglat_to_xyz(np.array([[lng, lat]]))
+            if sphere.contains_points(p, ra, rb, model="semi_open")[0]:
+                direct.add((pid, r.region_id))
+    assert got == ref == direct
     assert (0, 1000) in got and (2, 1001) in got
 
 
 def test_subdivided_broadcast_mode(spark, mentions):
-    """subdivided_broadcast (state-table broadcast, map-only fact side)
-    must produce exactly the shuffle-path pairs; oversized state raises."""
-    regions = regions_df(spark, 24)
+    """The state-table broadcast (map-only fact side) must produce exactly
+    the shuffle-path pairs; an over-guard state table takes the shuffle
+    plan instead."""
+    from s2geography_spark.operators.spatial_join import (
+        prepare_regions_subdivided)
+    prep = prepare_regions_subdivided(spark, regions_df(spark, 24))
     key = ["url", "mention_idx", "region_id"]
-    a = {tuple(r) for r in
-         spatial_join(mentions, regions, predicate="contains",
-                      broadcast=False, refine_mode="subdivided_broadcast")
-         .select(*key).collect()}
+    bc = spatial_join(mentions, prep, predicate="contains")
+    assert "ShuffledHashJoin" not in \
+        bc._jdf.queryExecution().executedPlan().toString()
+    a = {tuple(r) for r in bc.select(*key).collect()}
     b = {tuple(r) for r in
-         spatial_join(mentions, regions, predicate="contains",
-                      broadcast=False, refine_mode="subdivided")
+         spatial_join(mentions, prep, predicate="contains",
+                      refine_mode="subdivided")
          .select(*key).collect()}
     assert a == b and len(a) > 0
+    prep.fits_broadcast = False
+    sh = spatial_join(mentions, prep, predicate="contains")
+    assert "ShuffledHashJoin" in \
+        sh._jdf.queryExecution().executedPlan().toString()
+    assert {tuple(r) for r in sh.select(*key).collect()} == a
 
 
 def test_subdivided_fuzz_random_holed_polygons(spark):
     """Randomized robustness: 12 random convex-ish polygons with random
-    rectangular holes, 400 random points each — the subdivided parity
-    refine, the WKB rows refine, and the direct contains kernel must
-    agree on every (point, region) pair."""
+    rectangular holes, 400 random points each — the boundary-band shuffle,
+    the state broadcast, and the direct contains kernel must agree on
+    every (point, region) pair."""
     from s2geography_spark.core import ops as _ops
     from s2geography_spark.core.geog import Geog, from_wkb, to_wkb
     from s2geography_spark.functions.geo import s2_coveringcellids
@@ -390,11 +415,10 @@ def test_subdivided_fuzz_random_holed_polygons(spark):
            spatial_join(pdf, regions, predicate="contains", broadcast=False,
                         refine_mode="subdivided").select("pid", "region_id")
            .collect()}
-    wkb_mode = {(r.pid, r.region_id) for r in
-                spatial_join(pdf, regions, predicate="contains",
-                             broadcast=False, refine_mode="rows")
-                .select("pid", "region_id").collect()}
-    assert sub == wkb_mode
+    bc = {(r.pid, r.region_id) for r in
+          spatial_join(pdf, regions, predicate="contains")
+          .select("pid", "region_id").collect()}
+    assert sub == bc
     # spot-verify against the direct kernel
     direct = set()
     for pid, lng, lat in pts:
@@ -446,10 +470,9 @@ def test_leaf_only_cell_center_join(spark, mentions):
 
 
 def test_prepared_subdivided_regions(spark, mentions):
-    """prepare_regions_subdivided: the prepared-dim shuffle join must
-    produce exactly the inline subdivided join's pairs in every resolved
-    mode, reuse must not rebuild state, and unsupported refine modes /
-    oversized explicit broadcasts must raise."""
+    """prepare_regions_subdivided: the prepared-dim join must produce
+    exactly the raw-dim subdivided join's pairs in both refine modes, reuse
+    must not rebuild state, and removed refine modes must raise."""
     from s2geography_spark.operators.spatial_join import (
         prepare_regions_subdivided, spatial_join)
 
@@ -461,10 +484,9 @@ def test_prepared_subdivided_regions(spark, mentions):
            spatial_join(mentions, regions, predicate="contains",
                         broadcast=False, refine_mode="subdivided")
            .select(*key).collect()}
-    # auto (resolves to subdivided_broadcast from prepared stats, no job),
-    # forced shuffle, and forced broadcast all agree; the prep is reused
-    # across all three joins
-    for mode in ("auto", "subdivided", "subdivided_broadcast"):
+    # auto (broadcasts the state from the prepared stats, no job) and the
+    # forced shuffle agree; the prep is reused across both joins
+    for mode in ("auto", "subdivided"):
         got = {tuple(r) for r in
                spatial_join(mentions, prep, predicate="contains",
                             broadcast=False, refine_mode=mode)
@@ -476,15 +498,11 @@ def test_prepared_subdivided_regions(spark, mentions):
                            broadcast=False, refine_mode="subdivided",
                            prefilter=False).select(*key).collect()}
     assert got_nf == exp
-    # WKB-consuming plans cannot run off the prepared state table
-    with pytest.raises(ValueError, match="PreparedRegionsSubdivided"):
+    # the removed WKB-consuming modes are rejected by name
+    with pytest.raises(ValueError, match="refine_mode must be one of"):
         spatial_join(mentions, prep, broadcast=False, refine_mode="rows")
-    # explicit broadcast of an over-guard state raises at join time
+    # an over-guard state makes auto take the shuffling form
     prep.fits_broadcast = False
-    with pytest.raises(ValueError, match="too large to broadcast"):
-        spatial_join(mentions, prep, broadcast=False,
-                     refine_mode="subdivided_broadcast")
-    # ...while auto falls back to the shuffling form
     got_fb = {tuple(r) for r in
               spatial_join(mentions, prep, predicate="contains",
                            broadcast=False, refine_mode="auto")
@@ -538,3 +556,78 @@ def test_spatial_count_matches_join_rollup(spark, mentions):
     got_sp = {(r.region_id, r.n) for r in
               spatial_count(pts, fixed, level=6).collect()}
     assert got_sp == exp_s and len(got_sp) > 0
+
+
+def test_spatial_join_rejects_bad_predicate_and_modes(spark):
+    """An unknown predicate (e.g. 'within', which used to run a contains
+    join) and every removed refine mode raise, naming the accepted
+    values."""
+    pts = spark.createDataFrame([(0, 10.5, 10.5)],
+                                "pid long, lng double, lat double")
+    regions = regions_df(spark, 8)
+    with pytest.raises(ValueError, match="'contains' or 'intersects'"):
+        spatial_join(pts, regions, predicate="within")
+    for mode in ("rows", "index", "cogroup", "subdivided_broadcast",
+                 "subdivided_auto"):
+        with pytest.raises(ValueError,
+                           match=r"\('auto', 'subdivided'\)") as e:
+            spatial_join(pts, regions, refine_mode=mode)
+        assert mode in str(e.value)
+
+
+def _sidecar_dim(spark, n=8):
+    """regions_df's rows as a plain DataFrame, so a test can attach its own
+    sidecars: (DataFrame, rows as dicts, (rows, geog bytes, cells))."""
+    src = regions_df(spark, n)
+    df = spark.createDataFrame([tuple(r.values()) for r in src._s2_dim_rows],
+                               src.schema)
+    return df, list(src._s2_dim_rows), src._s2_dim_stats
+
+
+@pytest.mark.parametrize("case", ["stats_arity", "row_count", "row_keys"])
+def test_bad_dim_sidecars_take_the_slow_path(spark, case):
+    """A sidecar that does not describe its DataFrame (wrong stats arity,
+    a row count that disagrees with the stats, rows missing a column) is
+    ignored: the prepare collects/aggregates and the join stays right."""
+    from s2geography_spark.operators.spatial_join import prepare_regions
+    df, rows, stats = _sidecar_dim(spark)
+    if case == "stats_arity":
+        df._s2_dim_stats = stats[:2]
+        df._s2_dim_rows = rows
+    elif case == "row_count":
+        df._s2_dim_stats = stats
+        df._s2_dim_rows = rows[:-1]          # one region silently missing
+    else:
+        df._s2_dim_stats = stats
+        df._s2_dim_rows = [{k: v for k, v in r.items() if k != "lng0"}
+                           for r in rows]
+    lng0, lat0, lng1, lat1 = region_corners(np.arange(8))
+    pts = spark.createDataFrame(
+        [(i, float(a + b) / 2, float(c + d) / 2)
+         for i, (a, b, c, d) in enumerate(zip(lng0, lng1, lat0, lat1))],
+        "pid long, lng double, lat double")
+    got = {(r.pid, r.region_id) for r in
+           spatial_join(pts, prepare_regions(spark, df))
+           .select("pid", "region_id").collect()}
+    assert got == {(i, i) for i in range(8)}
+
+
+def test_knn_join_custom_region_id(spark):
+    """knn_join and knn_join_covering's dense fallback order ties by the
+    dim's own id column, not a hard-coded 'region_id'."""
+    from s2geography_spark.operators.spatial_join import knn_join_covering
+    regions = regions_df(spark, 16).select(F.col("region_id").alias("rid"),
+                                           "geog")
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in
+         enumerate([(10.5, 10.5), (-120.0, 30.0), (60.0, -40.0)])],
+        "pid long, lng double, lat double")
+    dense = {(r.pid, r.knn_rank): r.rid for r in
+             knn_join(pts, regions, 3, point_id="pid", region_id="rid")
+             .collect()}
+    assert len(dense) == 9
+    cov = {(r.pid, r.knn_rank): r.rid for r in
+           knn_join_covering(pts, regions, 3, point_id="pid",
+                             region_id="rid", init_radius_m=1000.0,
+                             max_rounds=1).collect()}
+    assert cov == dense
