@@ -17,8 +17,10 @@ pure integer arithmetic so DuckDB oracles can reproduce them exactly:
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
+import time
 from collections.abc import Callable
 
 import pandas as pd
@@ -146,11 +148,14 @@ def q_geo_pip_counts_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k=3 nearest region centers per customer point via the SCALE path:
-    buffered-covering candidate pruning with radius doubling (the
-    distributed S2ClosestEdgeQuery analog), exact distances + window
-    top-k.  The dense broadcast knn_join remains available for small dims;
-    the oracle runs against this covering path to prove it end-to-end."""
+    """k=3 nearest region centers per customer point via
+    knn_join_covering: buffered-covering candidate pruning with radius
+    doubling (the S2ClosestEdgeQuery analog), exact distances, top-k by
+    (distance, region_id).  The 96-center dim passes the in-process
+    guard, so it is collected once and broadcast and the whole loop runs
+    in one map-only pass over the customers (two Spark jobs); the
+    oracle checks this path end-to-end.  The dense knn_join is checked
+    separately by geo_knn_dense."""
     from s2geography_spark.functions.geo import _point_wkb_udf
     from s2geography_spark.operators.spatial_join import knn_join_covering
     pts = _customer_points(spark, sf_dir).where(F.col("c_custkey") <= 500)
@@ -158,16 +163,11 @@ def q_geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "region_id",
         _point_wkb_udf((F.col("lng0") + F.col("lng1")) / 2.0,
                        (F.col("lat0") + F.col("lat1")) / 2.0).alias("geog"))
-    # 10,000 km initial radius, ONE covering round (measured round 4:
-    # identical 1503-row output in 3.1 s vs 7.2 s for the old 5,000 km x
-    # 2-round config — each driver-coordinated round costs ~2 s of job
-    # scheduling at this scale, so resolving nearly everything in one
-    # round wins while the covering pruning still excludes the far
-    # hemisphere).  The residue of far-from-everything points falls to the
-    # dense broadcast fallback (the dim is 96 rows — exact and cheaper
-    # than more covering rounds); at a non-broadcastable dim scale the
-    # caller leaves max_rounds=None and the radius doubling provably
-    # terminates instead.
+    # 10,000 km initial radius, ONE covering round: the covering pruning
+    # still excludes the far hemisphere, and the residue of
+    # far-from-everything points is ranked densely against all 96 centers
+    # (exact).  At a dim scale past the guard the caller leaves
+    # max_rounds=None and the radius doubling provably terminates.
     res = knn_join_covering(pts, centers, k=3, point_id="c_custkey",
                             init_radius_m=10_000_000.0, max_rounds=1)
     return res.select("c_custkey", "knn_rank", "region_id")
@@ -377,11 +377,14 @@ def q_geo_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_geo_dwithin_500km(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customers within 500 km of a region center via dwithin_join: the
-    buffered-covering equi-join (s2_covering_buffered, coverings.cc:80-87)
-    + exact threshold-pushdown refine (distance.cc:285-289).  NO cross
-    join anywhere in the plan — candidate volume is bounded by covering
-    overlap, so the operator survives a dim side of any size."""
+    """Customers within 500 km of a region center via dwithin_join:
+    candidates from the buffered coverings (s2_covering_buffered,
+    coverings.cc:80-87), then the exact threshold-pushdown refine
+    (distance.cc:285-289).  The 96-center dim passes the in-process
+    guard, so it is broadcast and probed in one map-only pass (two
+    Spark jobs); past the guard the operator takes the distributed
+    covering equi-join.  NO cross join on either plan — candidate volume
+    is bounded by covering overlap."""
     from s2geography_spark.functions.geo import _point_wkb_udf
     from s2geography_spark.operators.spatial_join import dwithin_join
     pts = _customer_points(spark, sf_dir).where(F.col("c_custkey") <= 400)
@@ -624,6 +627,21 @@ def q_projections(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(mx, 3).alias("merc_x"), F.round(my, 3).alias("merc_y"))
 
 
+def _stream_staging_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
+    """Per-application staging dir for a streaming query's replayed input,
+    /tmp/s2stream_<kind>_<sf basename>_<application id>.  Staging dirs of
+    the same kind and basename that earlier applications left behind are
+    deleted first; those touched within the last hour are kept, since a
+    concurrently running application may still be reading its own."""
+    prefix = (f"/tmp/s2stream_{kind}_{os.path.basename(sf_dir.rstrip('/'))}"
+              "_")
+    staged = prefix + spark.sparkContext.applicationId
+    for old in glob.glob(glob.escape(prefix) + "*"):
+        if old != staged and time.time() - os.path.getmtime(old) > 3600:
+            shutil.rmtree(old, ignore_errors=True)
+    return staged
+
+
 def q_events_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STATEFUL STREAMING oracle (round-4 verdict: the
     applyInPandasWithState first-seen dedup was pytest-only).  The events
@@ -643,8 +661,7 @@ def q_events_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged fresh on EVERY invocation (10k rows, trivial): a _SUCCESS
     # guard keyed on the dir basename silently replayed a stale copy when
     # the source was regenerated or two sf_dirs shared a basename
-    staged = (f"/tmp/s2stream_firstseen_{os.path.basename(sf_dir.rstrip('/'))}"
-              f"_{spark.sparkContext.applicationId}")
+    staged = _stream_staging_dir(spark, "firstseen", sf_dir)
     ev.repartition(8).write.mode("overwrite").parquet(staged)
     stream = stream_events_from_parquet(spark, staged, ev.schema) \
         .withColumn("k", F.col("user_id").cast("string"))
@@ -689,8 +706,7 @@ def q_stream_region_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    staged = (f"/tmp/s2stream_regionwin_{os.path.basename(sf_dir.rstrip('/'))}"
-              f"_{spark.sparkContext.applicationId}")
+    staged = _stream_staging_dir(spark, "regionwin", sf_dir)
     ev.repartition(8).write.mode("overwrite").parquet(staged)
     stream = stream_events_from_parquet(spark, staged, ev.schema)
     pts = (stream
@@ -735,8 +751,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("digest").orderBy("doc_id")
     pdf = docs.withColumn("rank", F.row_number().over(w) - 1).toPandas()
 
-    staged = (f"/tmp/s2stream_dedup_{os.path.basename(sf_dir.rstrip('/'))}"
-              f"_{spark.sparkContext.applicationId}")
+    staged = _stream_staging_dir(spark, "dedup", sf_dir)
     shutil.rmtree(staged, ignore_errors=True)
     os.makedirs(staged)
     ts = pd.Timestamp("2026-01-01")

@@ -625,42 +625,42 @@ def _quad_contains_point(v, p):
 # edge neighbors (op/cell.cc:135-142)
 # ---------------------------------------------------------------------------
 
-def _from_face_ij_wrap_scalar(face, i, j):
-    """Cross-face wrap for a single (face, i, j) possibly out of range."""
-    i = min(max(i, -1), MAX_SIZE)
-    j = min(max(j, -1), MAX_SIZE)
+def _from_face_ij_wrap(face, i, j):
+    """Cross-face wrap (public FromFaceIJWrap): leaf ids for (face, i, j)
+    that may lie one step off the face, via the linear uv projection onto
+    the neighbouring face.  Vectorized."""
+    i = np.clip(np.asarray(i, dtype=np.int64), -1, MAX_SIZE)
+    j = np.clip(np.asarray(j, dtype=np.int64), -1, MAX_SIZE)
     scale = 1.0 / MAX_SIZE
     limit = np.nextafter(1.0, 2.0)
-    u = max(-limit, min(limit, scale * (2 * (i - MAX_SIZE // 2) + 1)))
-    v = max(-limit, min(limit, scale * (2 * (j - MAX_SIZE // 2) + 1)))
-    x, y, z = face_uv_to_xyz(np.int64(face), u, v)
-    nf, nu, nv = xyz_to_face_uv(x, y, z)
-    ni = int(np.clip(np.floor(MAX_SIZE * (0.5 * (float(nu) + 1.0))), 0, MAX_SIZE - 1))
-    nj = int(np.clip(np.floor(MAX_SIZE * (0.5 * (float(nv) + 1.0))), 0, MAX_SIZE - 1))
-    return from_face_ij(np.array([int(nf)]), np.array([ni]), np.array([nj]))[0]
+    u = np.clip(scale * (2 * (i - MAX_SIZE // 2) + 1), -limit, limit)
+    v = np.clip(scale * (2 * (j - MAX_SIZE // 2) + 1), -limit, limit)
+    nf, nu, nv = xyz_to_face_uv(*face_uv_to_xyz(face, u, v))
+    ni = np.clip(np.floor(MAX_SIZE * (0.5 * (nu + 1.0))), 0, MAX_SIZE - 1)
+    nj = np.clip(np.floor(MAX_SIZE * (0.5 * (nv + 1.0))), 0, MAX_SIZE - 1)
+    return from_face_ij(nf, ni.astype(np.int64), nj.astype(np.int64))
 
 
 def edge_neighbors(ids):
     """4 edge neighbors per cell, shape (n, 4): down, right, up, left.
 
     Same-level neighbors; cross-face wrapping handled per the public
-    FromFaceIJWrap linear projection."""
+    FromFaceIJWrap linear projection.  Invalid ids get sentinel rows."""
     ids = np.atleast_1d(_u(ids))
     face, i, j, _ = to_face_ij(ids)
     lev = level(ids)
-    out = np.zeros((len(ids), 4), dtype=np.uint64)
-    for row in range(len(ids)):
-        l = int(lev[row])
-        if l < 0:
-            out[row, :] = CELL_SENTINEL
-            continue
-        size = 1 << (MAX_LEVEL - l)
-        f, ii, jj = int(face[row]), int(i[row]), int(j[row])
-        cand = [(ii, jj - size), (ii + size, jj), (ii, jj + size), (ii - size, jj)]
-        for k, (ci, cj) in enumerate(cand):
-            if 0 <= ci < MAX_SIZE and 0 <= cj < MAX_SIZE:
-                leaf = from_face_ij(np.array([f]), np.array([ci]), np.array([cj]))[0]
-            else:
-                leaf = _from_face_ij_wrap_scalar(f, ci, cj)
-            out[row, k] = parent(np.array([leaf]), l)[0]
+    ok = lev >= 0
+    face, lev = np.where(ok, face, 0), np.where(ok, lev, MAX_LEVEL)
+    size = np.int64(1) << (MAX_LEVEL - lev)
+    ci = i[:, None] + size[:, None] * np.array([0, 1, 0, -1])
+    cj = j[:, None] + size[:, None] * np.array([-1, 0, 1, 0])
+    f = np.broadcast_to(face[:, None], ci.shape)
+    inside = (ci >= 0) & (ci < MAX_SIZE) & (cj >= 0) & (cj < MAX_SIZE)
+    leaf = np.empty(ci.shape, dtype=np.uint64)
+    leaf[inside] = from_face_ij(f[inside], ci[inside], cj[inside])
+    off = ~inside
+    if off.any():
+        leaf[off] = _from_face_ij_wrap(f[off], ci[off], cj[off])
+    out = parent(leaf, np.broadcast_to(lev[:, None], ci.shape))
+    out[~ok] = CELL_SENTINEL
     return out

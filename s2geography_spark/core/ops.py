@@ -1282,16 +1282,34 @@ def buffered_covering_from_cells(cells, radius_m: float) -> List[int]:
     caller's to amortize across radii."""
     if len(cells) == 0:
         return []
-    lev = buffered_covering_level(radius_m)
-    arr = np.asarray(cells, dtype=np.int64).view(np.uint64)
-    target = np.minimum(C.level(arr), lev)
-    p = np.unique(C.parent(arr, target))
-    n1 = C.edge_neighbors(p)
-    ring1 = np.unique(np.concatenate([p, n1.ravel()]))
-    n2 = C.edge_neighbors(ring1)
-    out = np.unique(np.concatenate([ring1, n2.ravel()]))
-    out = out[out != C.CELL_SENTINEL] if hasattr(C, "CELL_SENTINEL") else out
+    _, out = buffered_covering_pairs(np.zeros(len(cells), dtype=np.int64),
+                                     cells, radius_m)
     return sorted(out.view(np.int64).tolist())
+
+
+def unique_pairs(a, b):
+    """Distinct (a, b) pairs of two aligned arrays, sorted by a then b."""
+    order = np.lexsort((b, a))
+    a, b = a[order], b[order]
+    keep = np.ones(len(a), dtype=bool)
+    keep[1:] = (a[1:] != a[:-1]) | (b[1:] != b[:-1])
+    return a[keep], b[keep]
+
+
+def buffered_covering_pairs(owner, cells, radius_m: float):
+    """buffered_covering_from_cells for many base coverings in one
+    vectorized pass: `cells[i]` belongs to covering `owner[i]`.  Returns
+    the distinct (owner, uint64 cell) pairs of every buffered covering,
+    sorted by owner then cell."""
+    owner = np.asarray(owner, dtype=np.int64)
+    arr = np.asarray(cells, dtype=np.int64).view(np.uint64)
+    target = np.minimum(C.level(arr), buffered_covering_level(radius_m))
+    o, c = unique_pairs(owner, C.parent(arr, target))
+    for _ in range(2):
+        o, c = unique_pairs(np.concatenate([o, np.repeat(o, 4)]),
+                            np.concatenate([c, C.edge_neighbors(c).ravel()]))
+    keep = c != C.CELL_SENTINEL
+    return o[keep], c[keep]
 
 
 def s2_covering_buffered(g: Optional[Geog], radius_m: float,

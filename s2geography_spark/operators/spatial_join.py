@@ -966,34 +966,203 @@ def geog_pair_join(left: DataFrame, right: DataFrame, *,
 @pandas_udf(T.DoubleType())
 def distance_to_geog_udf(geog: pd.Series, lng: pd.Series, lat: pd.Series) -> pd.Series:
     """Vectorized min distance (meters) from points to a repeating geography:
-    per distinct geography, one NumPy pass over its edges/vertices."""
-    n = len(geog)
-    out = np.full(n, np.nan)
+    per distinct geography, one ops.dist_to_points_rad pass over its
+    edges/vertices.  Null for a null point, a null geography or an EMPTY
+    one (st_distance's null)."""
+    from ..core import ops as _ops
+    out = np.full(len(geog), np.nan)
     lngv = lng.to_numpy(dtype=np.float64)
     latv = lat.to_numpy(dtype=np.float64)
     xyz = np.stack(C.lnglat_to_xyz(np.nan_to_num(lngv), np.nan_to_num(latv)), axis=-1)
     codes, uniques = pd.factorize(geog, use_na_sentinel=True)
     for u, key in enumerate(uniques):
-        g = from_wkb(bytes(key))
         rows = np.where(codes == u)[0]
-        p = xyz[rows]
-        d = np.full(len(rows), np.inf)
-        gp = g.points_xyz()
-        if len(gp):
-            d = np.minimum(d, sphere.angle(p[:, None, :], gp[None, :, :]).min(axis=1))
-        ea, eb = g.all_edges_xyz()
-        if len(ea):
-            d = np.minimum(d, sphere.point_arc_distance(
-                p[:, None, :], ea[None, :, :], eb[None, :, :]).min(axis=1))
-        ra, rb = g.ring_edges_xyz()
-        if len(ra):
-            inside = sphere.contains_points(p, ra, rb, model="closed")
-            d = np.where(inside, 0.0, d)
-        out[rows] = d * sphere.EARTH_RADIUS_METERS
+        out[rows] = _ops.dist_to_points_rad(from_wkb(bytes(key)), xyz[rows]) \
+            * sphere.EARTH_RADIUS_METERS
     res = pd.Series(out, dtype=object)
-    bad = geog.isna().to_numpy() | np.isnan(lngv) | np.isnan(latv)
-    res[bad] = None
+    res[~np.isfinite(out) | np.isnan(lngv) | np.isnan(latv)] = None
     return res
+
+
+class _DistanceDim:
+    """A dim small enough to hold in-process, for dwithin_join and
+    knn_join_covering: region ids, WKB and base coverings collected in
+    ONE job and shipped to the executors as one broadcast, so the point
+    side runs as a single map-only pass (partition-local kNN with the
+    small side replicated).  The decoded geographies and the per-radius
+    probe tables are built lazily and cached on the broadcast value,
+    which a reused Python worker keeps across tasks."""
+
+    def __init__(self, rows, rid_type):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+        ids = [r[0] for r in rows]
+        self.rid = pa.array(ids, type=to_arrow_type(rid_type))
+        # position in region_id ascending order, nulls first (Spark's asc)
+        order = sorted(range(len(ids)),
+                       key=lambda i: (ids[i] is not None, ids[i]))
+        self.rid_rank = np.empty(len(ids), dtype=np.int64)
+        self.rid_rank[order] = np.arange(len(ids))
+        self.wkb = [None if r[1] is None else bytes(r[1]) for r in rows]
+        covs = [r[2] or [] for r in rows]
+        self.owner = np.repeat(np.arange(len(rows)), [len(c) for c in covs])
+        self.cells = np.array([c for cov in covs for c in cov], dtype=np.int64)
+        self.base_min = int(C.level(self.cells).min()) if len(self.cells) \
+            else None
+        self._geogs = {}
+        self._probes = {}
+
+    def _probe(self, radius_m: float):
+        """(level, sorted cells, owning regions): every region's buffered
+        covering at radius_m (s2_covering_buffered analog — a superset of
+        'everything within radius'), expanded in one vectorized pass and
+        re-parented to the common level min(base min, level(radius))."""
+        t = self._probes.get(radius_m)
+        if t is None:
+            from ..core.ops import (buffered_covering_level,
+                                    buffered_covering_pairs, unique_pairs)
+            lev = min(self.base_min, buffered_covering_level(radius_m))
+            o, c = buffered_covering_pairs(self.owner, self.cells, radius_m)
+            c, o = unique_pairs(C.parent(c, lev), o)
+            t = self._probes[radius_m] = (lev, c, o)
+        return t
+
+    def candidates(self, leaf, radius_m: float):
+        """(point index, region index) for every region whose buffered
+        covering at radius_m holds the point's cell: one searchsorted
+        probe of the sorted cell table."""
+        lev, cells, owner = self._probe(radius_m)
+        q = C.parent(leaf, lev)
+        lo = np.searchsorted(cells, q, "left")
+        cnt = np.searchsorted(cells, q, "right") - lo
+        pi = np.repeat(np.arange(len(q)), cnt)
+        pos = lo[pi] + np.arange(len(pi)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        return pi, owner[pos]
+
+    def distances(self, xyz, ri):
+        """Meters from xyz[i] to region ri[i]; NaN for a null or EMPTY
+        geography, as distance_to_geog_udf."""
+        from ..core.ops import dist_to_points_rad
+        d = np.full(len(ri), np.nan)
+        order = np.argsort(ri, kind="stable")
+        for idx in np.split(order, np.flatnonzero(np.diff(ri[order])) + 1):
+            if not len(idx) or self.wkb[ri[idx[0]]] is None:
+                continue
+            r = ri[idx[0]]
+            g = self._geogs.get(r)
+            if g is None:
+                g = self._geogs[r] = from_wkb(self.wkb[r])
+            d[idx] = dist_to_points_rad(g, xyz[idx])
+        d[~np.isfinite(d)] = np.nan
+        return d * sphere.EARTH_RADIUS_METERS
+
+    def within(self, lng, lat, radius_m: float):
+        """(point index, region index, meters) of every pair within
+        radius_m; null coordinates match nothing."""
+        idx = np.flatnonzero(~(np.isnan(lng) | np.isnan(lat)))
+        if self.base_min is None:
+            idx = idx[:0]
+        pi, ri = self.candidates(C.from_lnglat(lng[idx], lat[idx]), radius_m)
+        pi = idx[pi]
+        d = self.distances(np.stack(C.lnglat_to_xyz(lng[pi], lat[pi]),
+                                    axis=-1), ri)
+        keep = d <= radius_m
+        return pi[keep], ri[keep], d[keep]
+
+    def _ranked(self, pi, ri, d):
+        """Drop null distances, order each point's pairs by (distance,
+        region_id) and number them from 1."""
+        ok = ~np.isnan(d)
+        pi, ri, d = pi[ok], ri[ok], d[ok]
+        o = np.lexsort((self.rid_rank[ri], d, pi))
+        pi, ri, d = pi[o], ri[o], d[o]
+        first = np.flatnonzero(np.r_[True, pi[1:] != pi[:-1]])
+        rank = np.arange(1, len(pi) + 1) \
+            - np.repeat(first, np.diff(np.r_[first, len(pi)]))
+        return pi, ri, d, rank
+
+    def knn(self, lng, lat, k: int, radius_m: float, rounds: int):
+        """(point index, region index, meters, rank) of every point's k
+        nearest regions: knn_join_covering's radius doubling, in-task.  A
+        point is resolved once its k-th candidate is within the round's
+        radius; the residue after `rounds` ranks every region densely."""
+        remaining = np.flatnonzero(~(np.isnan(lng) | np.isnan(lat)))
+        lng, lat = np.nan_to_num(lng), np.nan_to_num(lat)
+        xyz = np.stack(C.lnglat_to_xyz(lng, lat), axis=-1)
+        leaf = C.from_lnglat(lng, lat)
+        parts = []
+        for _ in range(rounds):
+            if not len(remaining) or self.base_min is None:
+                break
+            pi, ri = self.candidates(leaf[remaining], radius_m)
+            pi = remaining[pi]
+            pi, ri, d, rank = self._ranked(pi, ri, self.distances(xyz[pi], ri))
+            done = pi[(rank == k) & (d <= radius_m)]
+            keep = np.isin(pi, done) & (rank <= k)
+            parts.append((pi[keep], ri[keep], d[keep], rank[keep]))
+            remaining = np.setdiff1d(remaining, done)
+            radius_m *= 2.0
+        n = len(self.wkb)
+        # the dense residue in chunks of ~1M pairs, so a dim near the guard
+        # never materializes points x regions at once
+        step = max(1, 1_000_000 // max(n, 1))
+        for s in range(0, len(remaining), step):
+            pts = remaining[s:s + step]
+            pi, ri = np.repeat(pts, n), np.tile(np.arange(n), len(pts))
+            pi, ri, d, rank = self._ranked(pi, ri, self.distances(xyz[pi], ri))
+            keep = rank <= k
+            parts.append((pi[keep], ri[keep], d[keep], rank[keep]))
+        if not parts:
+            e = np.zeros(0, dtype=np.int64)
+            return e, e, np.zeros(0), e
+        return tuple(np.concatenate(c) for c in zip(*parts))
+
+
+def _covered_rows(rows_cap: int, bytes_cap: int):
+    """mapPartitions body of _distance_dim: the partition's (region_id,
+    WKB, base covering) rows, or a single None once the partition passes
+    `rows_cap` rows or `bytes_cap` geography bytes."""
+    def run(it):
+        from ..core.ops import s2_covering
+        rows, n_bytes = [], 0
+        for r in it:
+            rows.append(r)
+            n_bytes += len(r[1] or b"")
+            if len(rows) > rows_cap or n_bytes > bytes_cap:
+                return [None]
+        return [(r[0], r[1], None if r[1] is None
+                 else s2_covering(from_wkb(bytes(r[1])))) for r in rows]
+    return run
+
+
+def _distance_dim(regions: DataFrame, region_geog: str, region_id: str):
+    """The dim as a broadcast _DistanceDim when it passes the in-process
+    guard (MAX_BROADCAST_DIM_ROWS / _BYTES), else None.  ONE scan of the
+    dim in the common case: each partition ships its rows with their base
+    coverings while it stays within an even share of the guard.  Only
+    when a partition passes its share (a skewed or an over-guard dim)
+    does the exact guard (dim_is_broadcastable) decide, before a second,
+    uncapped collect."""
+    rdd = regions.select(region_id, region_geog).rdd
+    parts = max(rdd.getNumPartitions(), 1)
+    rows = rdd.mapPartitions(_covered_rows(
+        MAX_BROADCAST_DIM_ROWS // parts,
+        MAX_BROADCAST_DIM_BYTES // parts)).collect()
+    if None in rows:
+        if not dim_is_broadcastable(regions, region_geog):
+            return None
+        rows = rdd.mapPartitions(_covered_rows(
+            MAX_BROADCAST_DIM_ROWS, MAX_BROADCAST_DIM_BYTES)).collect()
+    dim = _DistanceDim(rows, regions.schema[region_id].dataType)
+    return regions.sparkSession.sparkContext.broadcast(dim)
+
+
+def _float_col(batch, name: str):
+    """A RecordBatch column as float64 NumPy, nulls as NaN."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    return pc.cast(batch.column(name), pa.float64()) \
+        .to_numpy(zero_copy_only=False)
 
 
 def _expand_covering_udf(radius_m: float):
@@ -1063,15 +1232,45 @@ def dwithin_join(points: DataFrame, regions: DataFrame, radius_m: float, *,
                  region_geog: str = "geog", region_id: str = "region_id",
                  distance_col: Optional[str] = None) -> DataFrame:
     """Join each point to every region within `radius_m` meters — the
-    st_dwithin JOIN operator on the buffered-covering path.
+    st_dwithin JOIN operator.  Returns region_id, the points' columns and
+    (when `distance_col` is set) the distance in meters.
 
-    Plan (no cross join, no CartesianProduct): each region emits its
-    buffered covering at the radius, normalized to the common coarsest
-    level (see _buffered_dims); points join on their level-L ancestor cell
-    (hash equi-join), then the exact vectorized distance refines with the
-    threshold pushed down (distance.cc:285-289).  Coverings are supersets,
-    so candidates are never missed; refine-only false positives are
-    dropped."""
+    The dim's size picks the plan, as in spatial_join.  A dim that passes
+    the in-process guard (MAX_BROADCAST_DIM_ROWS / _BYTES) is collected
+    once with its coverings and broadcast; ONE map-only pass over the
+    points then probes each point's cell against every region's buffered
+    covering at the radius (a sorted searchsorted probe) and refines the
+    candidates with the exact vectorized distance — two Spark jobs in
+    all (the dim collect and the caller's action; see _distance_dim).
+
+    A larger dim takes the buffered-covering equi-join (no cross join, no
+    CartesianProduct): each region emits its buffered covering at the
+    radius, normalized to the common coarsest level (see _buffered_dims);
+    points join on their level-L ancestor cell (hash equi-join), then the
+    exact vectorized distance refines with the threshold pushed down
+    (distance.cc:285-289).  Coverings are supersets, so candidates are
+    never missed; refine-only false positives are dropped."""
+    bc = _distance_dim(regions, region_geog, region_id)
+    if bc is not None:
+        import pyarrow as pa
+        radius = float(radius_m)
+        fields = [regions.schema[region_id]] + points.schema.fields
+        if distance_col is not None:
+            fields.append(T.StructField(distance_col, T.DoubleType()))
+        schema = T.StructType([T.StructField(f.name, f.dataType)
+                               for f in fields])
+
+        def run(batches):
+            dim = bc.value
+            for b in batches:
+                pi, ri, d = dim.within(_float_col(b, lng), _float_col(b, lat),
+                                       radius)
+                cols = [dim.rid.take(ri)] + b.take(pi).columns
+                if distance_col is not None:
+                    cols.append(pa.array(d))
+                yield pa.RecordBatch.from_arrays(cols, names=schema.names)
+
+        return points.mapInArrow(run, schema)
     dims = _buffered_dims(regions, region_geog, region_id)
     if dims is None:
         return points.limit(0).join(regions.select(region_id).limit(0))
@@ -1098,35 +1297,64 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
                       distance_col: str = "distance_m") -> DataFrame:
     """Scale-path kNN: buffered-covering candidate pruning with radius
     doubling (the distributed analog of S2ClosestEdgeQuery's chord-angle
-    pruning, SURVEY.md §2.6).
+    pruning, SURVEY.md §2.6).  Returns point_id, lng, lat, region_id,
+    distance_col and knn_rank (1..k, ties by region_id ascending; regions
+    at a null distance — null or EMPTY geography — are never ranked).
 
-    Round r: each region emits its buffered covering at radius r
-    (s2_covering_buffered — a superset of 'everything within r'); a point
-    joins on its cell key, so every region within r of the point IS a
-    candidate.  Points with >= k candidates at distance <= r are resolved
-    exactly (their true top-k are all within r); the rest retry at 2r.
-    max_rounds=None (default) doubles until the radius covers the sphere
-    (ceil(log2(pi*R/init)) rounds, ~7 from the 250 km default), at which
-    point every point is PROVABLY resolved — the dense fallback join only
-    runs for an explicit low max_rounds cap.
+    Round r: each region's buffered covering at radius r (a superset of
+    'everything within r') yields the candidates; a point whose k-th
+    nearest candidate is within r is resolved exactly (its true top-k
+    are all within r); the rest retry at 2r.  max_rounds=None (default)
+    doubles until the radius covers the sphere (ceil(log2(pi*R/init))
+    rounds, ~7 from the 250 km default), at which point every point is
+    PROVABLY resolved — the dense fallback only runs for an explicit low
+    max_rounds cap (or a point with fewer than k rankable regions).
 
-    Preferred over knn_join when |points| x |regions| is too large to
-    evaluate densely; per round the work is candidates-only.
+    The dim's size picks the plan, as in spatial_join.  A dim that passes
+    the in-process guard (MAX_BROADCAST_DIM_ROWS / _BYTES) is collected
+    once with its coverings and broadcast, and ONE map-only pass over the
+    points runs the whole loop — probe, refine, rank and the dense
+    fallback — inside each task (partition-local kNN with the small side
+    replicated): two Spark jobs in all, the dim collect and the
+    caller's action.
 
-    Scale notes: the buffered covering is computed DISTRIBUTED on the dim
-    DataFrame (no driver-side WKB collect — a 10^6-row dim x 3 KB WKB would
-    be ~3 GB on the driver); the resolved/remaining joins carry no
-    broadcast hints because the resolved set is fact-sized (AQE picks
-    broadcast when a side is actually small).
-
-    Every materialization is an eager localCheckpoint (r6): CacheManager
-    registration and the recache scan on every unpersist canonicalize the
-    FULL logical plan of every live cache entry — with the Hilbert key
-    chain in the lineage that is seconds of driver CPU per call (measured
-    3-23 s in the 'anti' step alone, which runs NO Spark job).  The
-    returned union of checkpointed parts needs no final materialization,
-    and there is nothing for the caller to unpersist.
+    A larger dim runs the rounds as distributed covering joins: the
+    buffered covering is computed on the dim DataFrame (no driver-side
+    WKB collect), and each round's resolved set and remaining points are
+    pinned with an eager localCheckpoint (r6: CacheManager registration
+    canonicalizes the FULL logical plan of every live cache entry on
+    every later (un)persist — seconds of driver CPU per call), so the
+    returned union needs no final materialization and there is nothing
+    for the caller to unpersist.
     """
+    limit = max_rounds if max_rounds is not None else \
+        int(np.ceil(np.log2(np.pi * sphere.EARTH_RADIUS_METERS
+                            / max(float(init_radius_m), 1.0)))) + 2
+    bc = _distance_dim(regions, region_geog, region_id)
+    if bc is not None:
+        import pyarrow as pa
+        radius = float(init_radius_m)
+        src = points.select(point_id, lng, lat)
+        schema = T.StructType(
+            [T.StructField(f.name, f.dataType) for f in src.schema.fields]
+            + [T.StructField(region_id, regions.schema[region_id].dataType),
+               T.StructField(distance_col, T.DoubleType()),
+               T.StructField("knn_rank", T.IntegerType(), False)])
+
+        def run(batches):
+            dim = bc.value
+            for b in batches:
+                pi, ri, d, rank = dim.knn(_float_col(b, lng),
+                                          _float_col(b, lat), k, radius,
+                                          max(limit, 1))
+                yield pa.RecordBatch.from_arrays(
+                    b.take(pi).columns
+                    + [dim.rid.take(ri), pa.array(d),
+                       pa.array(rank.astype(np.int32))],
+                    names=schema.names)
+
+        return src.mapInArrow(run, schema)
+
     from pyspark.sql import Window as W
 
     cols = [point_id, lng, lat, region_id, distance_col, "knn_rank"]
@@ -1145,9 +1373,6 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
     n_remaining = remaining.count()
     parts = []
     radius = float(init_radius_m)
-    limit = max_rounds if max_rounds is not None else \
-        int(np.ceil(np.log2(np.pi * sphere.EARTH_RADIUS_METERS
-                            / max(radius, 1.0)))) + 2
     for _round in range(max(limit, 1)):
         if n_remaining == 0 or dims is None:
             break
@@ -1209,7 +1434,9 @@ def knn_join(points: DataFrame, regions: DataFrame, k: int, *,
              distance_col: str = "distance_m") -> DataFrame:
     """k nearest regions per point (S2ClosestEdgeQuery semantics over the
     broadcast dim: exact distances, window top-k; ties broken by
-    `region_id`).
+    `region_id`).  A pair at a null distance (null point, null or EMPTY
+    geography) is dropped before ranking: Spark's asc() sorts nulls
+    FIRST, which ranked such a region every point's nearest.
 
     Plan: broadcast nested-loop pairing (points x |regions|) with the
     distance computed by one vectorized kernel per distinct region per
@@ -1222,7 +1449,8 @@ def knn_join(points: DataFrame, regions: DataFrame, k: int, *,
     pair = points.crossJoin(F.broadcast(regions))
     pair = pair.withColumn(distance_col,
                            distance_to_geog_udf(F.col(region_geog),
-                                                F.col(lng), F.col(lat)))
+                                                F.col(lng), F.col(lat))) \
+        .where(F.col(distance_col).isNotNull())
     w = W.partitionBy(point_id).orderBy(F.col(distance_col).asc(),
                                         F.col(region_id).asc())
     return (pair.withColumn("knn_rank", F.row_number().over(w))

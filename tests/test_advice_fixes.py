@@ -362,3 +362,33 @@ def test_subdivided_prefilter_guard_falls_back(spark, monkeypatch):
                            refine_mode="subdivided", prefilter=True)
            .select("lng", "lat", "region_id").collect()}
     assert got == want and len(got) > 0
+
+
+def test_stream_staging_dir_deletes_stale_app_dirs(spark, tmp_path):
+    """Per-application streaming staging dirs: another application's dir
+    of the same kind and basename is deleted once it is an hour old; a
+    fresh one (possibly a running application's) and other kinds stay."""
+    import os
+    import shutil
+    import time
+    import uuid
+    import __spark_entry__ as E
+    sf = str(tmp_path / f"sf_{uuid.uuid4().hex[:8]}")
+    base = os.path.basename(sf)
+    stale = f"/tmp/s2stream_dedup_{base}_local-1"
+    fresh = f"/tmp/s2stream_dedup_{base}_local-2"
+    other = f"/tmp/s2stream_regionwin_{base}_local-1"
+    try:
+        for d in (stale, fresh, other):
+            os.makedirs(d)
+        old = time.time() - 7200
+        os.utime(stale, (old, old))
+        os.utime(other, (old, old))
+        staged = E._stream_staging_dir(spark, "dedup", sf)
+        assert staged == (f"/tmp/s2stream_dedup_{base}_"
+                          f"{spark.sparkContext.applicationId}")
+        assert not os.path.exists(stale)
+        assert os.path.isdir(fresh) and os.path.isdir(other)
+    finally:
+        for d in (stale, fresh, other):
+            shutil.rmtree(d, ignore_errors=True)

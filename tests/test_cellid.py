@@ -196,3 +196,65 @@ def test_edge_neighbors_of_polar_face():
     nb = C.edge_neighbors(face_cell)
     assert sorted((nb.ravel() >> np.uint64(61)).tolist()) == [0, 1, 3, 4]
     assert (C.level(nb.ravel()) == 0).all()
+
+
+def _edge_neighbors_loop(ids):
+    """Per-cell reference for the vectorized edge_neighbors: one scalar
+    from_face_ij / FromFaceIJWrap projection and parent per neighbour."""
+    ids = np.atleast_1d(np.asarray(ids, dtype=np.uint64))
+    face, i, j, _ = C.to_face_ij(ids)
+    lev = C.level(ids)
+    out = np.zeros((len(ids), 4), dtype=np.uint64)
+    for row in range(len(ids)):
+        l = int(lev[row])
+        if l < 0:
+            out[row, :] = C.CELL_SENTINEL
+            continue
+        size = 1 << (C.MAX_LEVEL - l)
+        f, ii, jj = int(face[row]), int(i[row]), int(j[row])
+        cand = [(ii, jj - size), (ii + size, jj), (ii, jj + size),
+                (ii - size, jj)]
+        for k, (ci, cj) in enumerate(cand):
+            if not (0 <= ci < C.MAX_SIZE and 0 <= cj < C.MAX_SIZE):
+                ci = min(max(ci, -1), C.MAX_SIZE)
+                cj = min(max(cj, -1), C.MAX_SIZE)
+                scale = 1.0 / C.MAX_SIZE
+                limit = np.nextafter(1.0, 2.0)
+                u = max(-limit, min(limit, scale * (2 * (ci - C.MAX_SIZE // 2) + 1)))
+                v = max(-limit, min(limit, scale * (2 * (cj - C.MAX_SIZE // 2) + 1)))
+                x, y, z = C.face_uv_to_xyz(np.int64(f), u, v)
+                nf, nu, nv = C.xyz_to_face_uv(x, y, z)
+                f2 = int(nf)
+                ci = int(np.clip(np.floor(C.MAX_SIZE * (0.5 * (float(nu) + 1.0))),
+                                 0, C.MAX_SIZE - 1))
+                cj = int(np.clip(np.floor(C.MAX_SIZE * (0.5 * (float(nv) + 1.0))),
+                                 0, C.MAX_SIZE - 1))
+            else:
+                f2 = f
+            leaf = C.from_face_ij(np.array([f2]), np.array([ci]),
+                                  np.array([cj]))[0]
+            out[row, k] = C.parent(np.array([leaf]), l)[0]
+    return out
+
+
+def test_edge_neighbors_matches_per_cell_loop():
+    """Bit-identical to the per-cell loop over random cells at every
+    level, face corners and edges (the cross-face wrap), the poles and
+    invalid ids."""
+    rng = np.random.default_rng(7)
+    n = 400
+    lng = rng.uniform(-180, 180, n)
+    lat = np.degrees(np.arcsin(rng.uniform(-1, 1, n)))
+    cells = [C.parent(C.from_lnglat(lng, lat), rng.integers(0, 31, n))]
+    top = C.MAX_SIZE - 1
+    for f in range(6):
+        for ii, jj in [(0, 0), (top, 0), (0, top), (top, top), (0, 12345),
+                       (12345, top)]:
+            leaf = C.from_face_ij(np.array([f] * 5), np.array([ii] * 5),
+                                  np.array([jj] * 5))
+            cells.append(C.parent(leaf, np.array([0, 1, 5, 17, 30])))
+    cells.append(C.from_lnglat(np.array([0.0, 0.0, 45.0]),
+                               np.array([90.0, -90.0, 89.9999])))
+    cells.append(np.array([C.CELL_SENTINEL, 0], dtype=np.uint64))
+    ids = np.concatenate(cells)
+    assert np.array_equal(C.edge_neighbors(ids), _edge_neighbors_loop(ids))

@@ -1,0 +1,190 @@
+"""dwithin_join, knn_join_covering and knn_join against a scalar brute
+force, on both plans: the in-process broadcast dim (the default for a
+small dim) and the distributed covering joins (forced by lowering the
+dim guard).  The inputs carry null coordinates, null and EMPTY
+geographies, an exact distance tie, and points at the antimeridian and
+near the pole."""
+
+import numpy as np
+import pytest
+
+from s2geography_spark.core import ops
+from s2geography_spark.core.geog import Geog, from_wkb, from_wkt, to_wkb
+from s2geography_spark.operators import spatial_join as sj
+
+RADIUS = 1_200_000.0
+K = 2
+
+# (region_id, WKT or None).  7 and 3 are equidistant from (0, 0); 7 comes
+# first so that input order cannot pass for the region_id tie order.
+REGIONS = [
+    (7, "POINT (10 0)"),
+    (3, "POINT (-10 0)"),
+    (11, None),
+    (12, "POINT EMPTY"),
+    (20, "POINT (179.5 1)"),
+    (21, "POINT (-179.2 -2)"),
+    (30, "POLYGON ((-120 80, 0 80, 120 80, -120 80))"),
+    (40, "LINESTRING (30 20, 40 25, 50 20)"),
+    (50, "POLYGON ((-60 -30, -50 -30, -50 -20, -60 -20, -60 -30))"),
+    (60, "POINT (100 -45)"),
+    (61, "POINT (-100 45)"),
+]
+
+
+@pytest.fixture(scope="module")
+def dim(spark):
+    rows = [(rid, None if w is None else to_wkb(from_wkt(w)))
+            for rid, w in REGIONS]
+    return spark.createDataFrame(rows, "region_id long, geog binary")
+
+
+@pytest.fixture(scope="module")
+def points(spark):
+    rng = np.random.default_rng(11)
+    n = 240
+    lng = rng.uniform(-180, 180, n)
+    lat = np.degrees(np.arcsin(rng.uniform(-1, 1, n)))
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lng, lat))]
+    rows += [(1000, 0.0, 0.0),                     # the 3/7 tie
+             (1001, 179.99, 0.5), (1002, -179.99, -0.5),   # antimeridian
+             (1003, 45.0, 89.99), (1004, -135.0, -89.9),   # poles
+             (1005, None, 10.0), (1006, 10.0, None), (1007, None, None)]
+    return spark.createDataFrame(rows, "pid long, lng double, lat double")
+
+
+@pytest.fixture(scope="module")
+def brute(points):
+    """{pid: [(meters, region_id)]} over the rankable regions, sorted by
+    (distance, region_id), from the scalar s2_distance kernel."""
+    geogs = [(rid, from_wkt(w)) for rid, w in REGIONS if w is not None]
+    out = {}
+    for r in points.collect():
+        if r.lng is None or r.lat is None:
+            out[r.pid] = []
+            continue
+        p = Geog(points=np.array([[r.lng, r.lat]]))
+        ds = [(ops.s2_distance(g, p), rid) for rid, g in geogs]
+        out[r.pid] = sorted((d, rid) for d, rid in ds if d is not None)
+    return out
+
+
+@pytest.fixture(params=["broadcast", "distributed"])
+def plan(request, monkeypatch):
+    if request.param == "distributed":
+        monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", 0)
+    return request.param
+
+
+def test_brute_force_fixture_has_the_edge_cases(brute):
+    assert brute[1000][0][0] == brute[1000][1][0]
+    assert [rid for _, rid in brute[1000][:2]] == [3, 7]
+    assert brute[1005] == brute[1006] == brute[1007] == []
+
+
+def test_dwithin_matches_brute_force(points, dim, brute, plan):
+    got = {(r.pid, r.region_id): r.d for r in
+           sj.dwithin_join(points, dim, RADIUS, distance_col="d").collect()}
+    exp = {(pid, rid): d for pid, ds in brute.items() for d, rid in ds
+           if d <= RADIUS}
+    assert got.keys() == exp.keys()
+    assert {(1000, 3), (1000, 7), (1001, 20), (1002, 21),
+            (1003, 30)} <= got.keys()
+    for key, d in exp.items():
+        assert got[key] == pytest.approx(d, abs=1e-3)
+
+
+def _ranked(rows):
+    return {(r.pid, r.knn_rank): (r.region_id, r.distance_m) for r in rows}
+
+
+def _expected_knn(brute):
+    return {(pid, rank + 1): (rid, d) for pid, ds in brute.items()
+            for rank, (d, rid) in enumerate(ds[:K])}
+
+
+def _assert_knn(got, brute):
+    exp = _expected_knn(brute)
+    assert got.keys() == exp.keys()
+    for key, (rid, d) in exp.items():
+        assert got[key][0] == rid, key
+        assert got[key][1] == pytest.approx(d, abs=1e-3)
+
+
+def test_knn_covering_matches_brute_force(points, dim, brute, plan):
+    got = _ranked(sj.knn_join_covering(points, dim, K, point_id="pid",
+                                       init_radius_m=2_000_000.0).collect())
+    _assert_knn(got, brute)
+    assert got[(1000, 1)][0] == 3 and got[(1000, 2)][0] == 7
+
+
+def test_knn_covering_capped_matches_brute_force(points, dim, brute, plan):
+    """One small round: most points fall to the dense residue, which must
+    rank exactly as the covering rounds do."""
+    got = _ranked(sj.knn_join_covering(points, dim, K, point_id="pid",
+                                       init_radius_m=300_000.0,
+                                       max_rounds=1).collect())
+    _assert_knn(got, brute)
+
+
+def test_knn_join_never_ranks_null_distances(spark):
+    """A null-geography region has a null distance: Spark's asc() sorts
+    it first, so it must be dropped before ranking, and the capped
+    covering path (whose residue is knn_join) must agree."""
+    rows = [(1, to_wkb(from_wkt("POINT (1 1)"))),
+            (2, to_wkb(from_wkt("POINT (2 2)"))), (3, None),
+            (4, to_wkb(from_wkt("POINT (4 4)")))]
+    dim = spark.createDataFrame(rows, "region_id long, geog binary")
+    pts = spark.createDataFrame([(0, 0.0, 0.0)],
+                                "pid long, lng double, lat double")
+    dense = {(r.knn_rank, r.region_id) for r in
+             sj.knn_join(pts, dim, 2, point_id="pid").collect()}
+    assert dense == {(1, 1), (2, 2)}
+    capped = {(r.knn_rank, r.region_id) for r in
+              sj.knn_join_covering(pts, dim, 2, point_id="pid",
+                                   init_radius_m=1.0, max_rounds=1).collect()}
+    assert capped == dense
+
+
+def test_small_dim_runs_two_jobs(spark, points, dim):
+    """The in-process plan scans the dim once (the guarded collect) and
+    the points once (the caller's action); the distributed plans ran 8 to
+    139 jobs on this input."""
+    sc = spark.sparkContext
+    for i, run in enumerate([
+            lambda: sj.dwithin_join(points, dim, RADIUS).collect(),
+            lambda: sj.knn_join_covering(points, dim, K, point_id="pid",
+                                         init_radius_m=300_000.0).collect(),
+            lambda: sj.knn_join_covering(points, dim, K, point_id="pid",
+                                         init_radius_m=300_000.0,
+                                         max_rounds=1).collect()]):
+        group = f"s2_small_dim_jobs_{i}"
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert 0 < len(jobs) <= 2, (i, len(jobs))
+
+
+def test_skewed_dim_takes_the_exact_guard(spark, points, dim, brute,
+                                          monkeypatch):
+    """All rows in one of four partitions pass that partition's share of
+    the guard, so the exact guard decides: within it the dim is still
+    broadcast, one row over it the distributed plan runs."""
+    from pyspark.sql import functions as F
+    skewed = dim.repartition(4, F.lit(0))
+    calls = []
+    exact = sj.dim_is_broadcastable
+    monkeypatch.setattr(sj, "dim_is_broadcastable",
+                        lambda *a, **kw: calls.append(1) or exact(*a, **kw))
+    exp = {(pid, rid) for pid, ds in brute.items() for d, rid in ds
+           if d <= RADIUS}
+    for cap, broadcast in ((len(REGIONS), True), (len(REGIONS) - 1, False)):
+        monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", cap)
+        calls.clear()
+        out = sj.dwithin_join(points, skewed, RADIUS)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert calls and ("MapInArrow" in plan) == broadcast, plan
+        assert {(r.pid, r.region_id) for r in out.collect()} == exp
