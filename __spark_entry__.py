@@ -77,10 +77,10 @@ _PREPARED_REGIONS: dict = {}
 
 
 def _prepared_regions(spark: SparkSession):
-    """Memoized in-process PreparedRegions for the broadcast joins — the
+    """Memoized PreparedRegions for the joins and spatial_count — the
     reference's prepare-once/query-many S2ShapeIndex contract (the operator
     exposes prepare_regions for exactly this; rebuilding it per query
-    re-paid the driver-side covering/state prep on every invocation)."""
+    re-paid the covering/state prep on every invocation)."""
     from s2geography_spark.operators.spatial_join import prepare_regions
     # keyed by applicationId, not id(spark): a stopped session's id() (or a
     # matching sf_dir) can recycle, returning broadcasts that belong to a
@@ -90,24 +90,6 @@ def _prepared_regions(spark: SparkSession):
         _PREPARED_REGIONS.clear()  # entries for dead contexts are useless
         _PREPARED_REGIONS[key] = prepare_regions(spark, _regions(spark))
     return _PREPARED_REGIONS[key]
-
-
-_PREPARED_SUBDIVIDED: dict = {}
-
-
-def _prepared_regions_subdivided(spark: SparkSession):
-    """Memoized distributed PreparedRegions (prepare_regions_subdivided)
-    for spatial_count: the exploded per-cell state is the dominant
-    dim-side cost and is reusable across queries, exactly like
-    _prepared_regions for the broadcast path.  Keyed by applicationId."""
-    from s2geography_spark.operators.spatial_join import (
-        prepare_regions_subdivided)
-    key = spark.sparkContext.applicationId
-    if key not in _PREPARED_SUBDIVIDED:
-        _PREPARED_SUBDIVIDED.clear()
-        _PREPARED_SUBDIVIDED[key] = prepare_regions_subdivided(
-            spark, _regions(spark))
-    return _PREPARED_SUBDIVIDED[key]
 
 
 # ---------------------------------------------------------------------------
@@ -133,17 +115,15 @@ def q_geo_pip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_geo_pip_counts_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same per-region counts through the AGGREGATE-PUSHDOWN plan
-    (spatial_count, round 5): the interior mass never becomes join rows —
-    the fact's only wide exchange is groupBy(cell).count() (one ~16 B row
-    per occupied cell after partial aggregation), and only the
-    boundary-cell band flows through the parity refine.  Oracled against
-    the identical closed-form SQL as geo_pip_counts, proving the
-    decomposition sum(full-cell counts) + refined boundary count is
-    exactly the join-then-rollup answer."""
+    """Same per-region counts through spatial_count, which is
+    spatial_join(...).groupBy(region_id).count() on the same prepared dim:
+    the fact side stays map-only against the broadcast state table, and
+    the rollup's partial count makes its one exchange carry at most a row
+    per (map task, region).  Oracled against the identical closed-form
+    SQL as geo_pip_counts."""
     from s2geography_spark.operators.spatial_join import spatial_count
     pts = _customer_points(spark, sf_dir)
-    return spatial_count(pts, _prepared_regions_subdivided(spark), level=8,
+    return spatial_count(pts, _prepared_regions(spark), level=8,
                          count_col="n_points")
 
 

@@ -66,90 +66,33 @@ def ancestors_at_levels(cell_col, levels):
     return F.array(*[cell_parent(cell_col, int(l)) for l in sorted(levels)])
 
 
-# driver-materialization guardrails for the in-process prepare: above these
-# prepare_regions would pressure the driver (rows x ~KB WKB), so
-# spatial_join falls back to the distributed prepare automatically
+# in-process guard for dwithin_join / knn_join_covering: a dim within
+# these is collected once and broadcast (see _distance_dim).  The byte
+# bound also caps a broadcast state table (PreparedRegions.fits_broadcast)
 MAX_BROADCAST_DIM_ROWS = 200_000
 MAX_BROADCAST_DIM_BYTES = 256 * 1024 * 1024
 # the state table broadcasts (and the prefilter's 8 B/cell key set with it)
 # up to this many exploded cells
 MAX_BROADCAST_INDEX_ROWS = 8_000_000
-# prepare_regions builds the POST-EXPLOSION (cells x region attrs) relation
-# driver-side, so the guard must bound sum(size(covering)) — at level-8
-# coverings the explosion is ~16x the level-6 one for the same dim rows
-# (round-4 VERDICT item 5)
-MAX_BROADCAST_EXPLODED_CELLS = 2_000_000
 
 
-class DimTooLargeError(ValueError):
-    """Dim side exceeds a broadcast guardrail.  A DEDICATED type so the
-    automatic distributed-prepare fallback in spatial_join catches ONLY the
-    size overflow — a bare `except ValueError` also swallowed genuine data
-    errors (corrupt WKB raising during the driver-side decode) and
-    resurfaced them later on an executor with an unrelated stack trace."""
-
-
-def _dim_sidecars(regions: DataFrame):
-    """(rows, stats) a source attached to `regions`, each None when absent
-    or inconsistent with the DataFrame: stats must be a 3-tuple, every row
-    a dict carrying every column, and the row count must match the stats'.
-    A mismatch takes the collect/aggregate path instead of serving rows or
-    sizes that do not describe this DataFrame."""
-    rows = getattr(regions, "_s2_dim_rows", None)
-    stats = getattr(regions, "_s2_dim_stats", None)
-    if not (isinstance(stats, tuple) and len(stats) == 3):
-        stats = None
-    if rows is not None:
-        cols = set(regions.columns)
-        if not all(isinstance(r, dict) and r.keys() >= cols for r in rows):
-            rows = None
-    if rows is not None and stats is not None and len(rows) != stats[0]:
-        rows = stats = None
-    return rows, stats
-
-
-def dim_broadcast_stats(regions: DataFrame, region_geog: str,
-                        covering_col: str = None):
-    """(row_count, approx_geog_bytes, exploded_cell_count) in ONE small
-    aggregation job; cell count is None when covering_col isn't given.
-
-    A source that already knows its stats (regions_df, or any catalog-
-    backed table following the Iceberg table-statistics pattern) can
-    attach `df._s2_dim_stats = (rows, geog_bytes, covering_cells)` and
-    the job is skipped — derived DataFrames (select/filter) drop the
-    attribute, so stale stats cannot leak through transformations."""
-    has_cov = covering_col is not None and covering_col in regions.columns
-    _, st = _dim_sidecars(regions)
-    if st is not None:
-        n, b, c = st
-        return int(n), int(b), (int(c) if has_cov else None)
-    aggs = [F.count("*").alias("n"),
-            F.sum(F.octet_length(F.col(region_geog).cast("binary"))).alias("b")]
-    if has_cov:
-        aggs.append(F.sum(F.size(covering_col)).alias("c"))
-    row = regions.agg(*aggs).collect()[0]
-    cells = int(row.c or 0) if has_cov else None
-    return int(row.n or 0), int(row.b or 0), cells
-
-
-def dim_is_broadcastable(regions: DataFrame, region_geog: str,
-                         max_rows: int = None,
-                         max_bytes: int = None,
-                         covering_col: str = None,
-                         max_cells: int = None) -> bool:
-    n, b, c = dim_broadcast_stats(regions, region_geog, covering_col)
-    if c is not None and c > (max_cells if max_cells is not None
-                              else MAX_BROADCAST_EXPLODED_CELLS):
-        return False
-    return (n <= (max_rows if max_rows is not None else MAX_BROADCAST_DIM_ROWS)
-            and b <= (max_bytes if max_bytes is not None
-                      else MAX_BROADCAST_DIM_BYTES))
+def dim_is_broadcastable(regions: DataFrame, region_geog: str) -> bool:
+    """Whether the dim passes the in-process guard (MAX_BROADCAST_DIM_ROWS
+    rows and MAX_BROADCAST_DIM_BYTES geography bytes): one small
+    aggregation job."""
+    row = regions.agg(
+        F.count("*").alias("n"),
+        F.sum(F.octet_length(F.col(region_geog).cast("binary"))).alias("b")
+    ).collect()[0]
+    return (int(row.n or 0) <= MAX_BROADCAST_DIM_ROWS
+            and int(row.b or 0) <= MAX_BROADCAST_DIM_BYTES)
 
 
 class PreparedRegions:
     """Prepared dim side of the spatial join — the engine analog of the
     reference's ShapeIndexGeography 'prepared geometry' (geography.h:182-210),
-    built once and reused across any number of point-side joins.
+    built once by prepare_regions and reused across any number of
+    point-side joins.
 
     `exploded` has one row per (region, covering cell): the region's
     columns (minus geography and covering), the mixed cell key `_ck`, the
@@ -157,8 +100,7 @@ class PreparedRegions:
     interior cells) and the bbox prefilter columns `_xmin.._ymax`.
     `levels` lists the covering levels; `state_cells`/`state_bytes` size
     the state table, and `fits_broadcast` is what the planner reads to
-    broadcast it or shuffle the boundary band.  Built in-process by
-    prepare_regions or distributed by prepare_regions_subdivided."""
+    broadcast it or shuffle the boundary band."""
 
     def __init__(self, region_id: str, exploded: DataFrame, levels,
                  state_cells: int, state_bytes: int):
@@ -171,88 +113,20 @@ class PreparedRegions:
                                and state_bytes <= MAX_BROADCAST_DIM_BYTES)
 
 
-def _with_covering(regions: DataFrame, region_geog: str,
-                   covering_col: str) -> DataFrame:
-    if covering_col in regions.columns:
-        return regions
-    from ..functions.geo import s2_coveringcellids
-    return regions.withColumn(covering_col, s2_coveringcellids(region_geog))
-
-
 def prepare_regions(spark, regions: DataFrame, *, region_geog: str = "geog",
                     region_id: str = "region_id",
                     covering_col: str = "covering") -> PreparedRegions:
-    """In-process prepare for a dim small enough to hold on the driver:
-    ONE collect (none when the source carries its rows, see
-    _dim_sidecars), then bbox, covering levels, mixed join keys and the
-    per-cell subdivided state are all computed driver-side, and the
-    table is pinned with one eager localCheckpoint.  Raises
-    DimTooLargeError above the row, byte or exploded-cell guard (the
-    MAX_BROADCAST_DIM_* and MAX_BROADCAST_EXPLODED_CELLS constants)."""
-    from ..core import ops as _ops
-    regions = _with_covering(regions, region_geog, covering_col)
-    limits = (MAX_BROADCAST_DIM_ROWS, MAX_BROADCAST_DIM_BYTES,
-              MAX_BROADCAST_EXPLODED_CELLS)
-    n, b, c = dim_broadcast_stats(regions, region_geog, covering_col)
-    if any(v > lim for v, lim in zip((n, b, c or 0), limits)):
-        raise DimTooLargeError(
-            f"dim side too large for the broadcast path ({n} rows, "
-            f"{b} geography bytes, {c} exploded covering cells > "
-            f"{'/'.join(map(str, limits))}); use "
-            "prepare_regions_subdivided (distributed prepare)")
-    other_cols = [c for c in regions.columns
-                  if c not in (covering_col, region_geog)]
-    rows, _ = _dim_sidecars(regions)
-    if rows is None:
-        rows = regions.collect()
-    exploded_rows = []
-    levels = set()
-    state_bytes = 0
-    for r in rows:
-        w = r[region_geog]
-        cov = r[covering_col]
-        if w is None or cov is None:
-            continue
-        g = from_wkb(bytes(w))
-        bb = _ops.s2_bounds(g) or (None,) * 4
-        cells = np.array(cov, dtype=np.int64).view(np.uint64)
-        levels.update(int(l) for l in np.unique(C.level(cells)))
-        ck = (cells ^ (cells >> np.uint64(31))).view(np.int64).tolist()
-        base = tuple(r[c] for c in other_cols)
-        ra, rb = g.ring_edges_xyz()
-        for (full, state), k in zip(_cell_states(cells, ra, rb), ck):
-            state_bytes += len(state or b"")
-            exploded_rows.append(base + (full, state, k) + bb)
-    schema = T.StructType(
-        [regions.schema[c] for c in other_cols]
-        + [T.StructField("_full", T.BooleanType()),
-           T.StructField("_state", T.BinaryType()),
-           T.StructField("_ck", T.LongType()),
-           T.StructField("_xmin", T.DoubleType()),
-           T.StructField("_ymin", T.DoubleType()),
-           T.StructField("_xmax", T.DoubleType()),
-           T.StructField("_ymax", T.DoubleType())])
-    # a createDataFrame'd list is a Python RDD that every query would
-    # re-pickle through a Python worker to scan (~0.8 s per join at 21k
-    # cells); checkpoint blocks are plain rows with no CacheManager entry
-    exploded = spark.createDataFrame(exploded_rows, schema) \
-        .localCheckpoint(eager=True)
-    return PreparedRegions(region_id, exploded, levels, len(exploded_rows),
-                           state_bytes)
-
-
-def prepare_regions_subdivided(
-        spark, regions: DataFrame, *, region_geog: str = "geog",
-        region_id: str = "region_id",
-        covering_col: str = "covering") -> PreparedRegions:
-    """Distributed prepare for a dim of any size: the per-region
-    subdivided_state_udf runs on the executors (nothing is collected to
-    the driver), the exploded state table is pinned with ONE eager
-    localCheckpoint, and one aggregation over it records the state size
-    and the covering levels.  localCheckpoint blocks carry no CacheManager
-    entry, so the ContextCleaner frees them with the DataFrame."""
-    from ..functions.geo import st_boundingbox
-    regions = _with_covering(regions, region_geog, covering_col)
+    """Prepare a dim of any size: the per-region subdivided_state_udf runs
+    on the executors (nothing is collected to the driver), the exploded
+    state table is pinned with ONE eager localCheckpoint, and one
+    aggregation over it records the state size and the covering levels.
+    A dim without `covering_col` gets the adaptive s2_coveringcellids
+    covering.  localCheckpoint blocks carry no CacheManager entry, so the
+    ContextCleaner frees them with the DataFrame."""
+    from ..functions.geo import s2_coveringcellids, st_boundingbox
+    if covering_col not in regions.columns:
+        regions = regions.withColumn(covering_col,
+                                     s2_coveringcellids(region_geog))
     ex = (regions
           .withColumn("_bb", st_boundingbox(F.col(region_geog)))
           .withColumn("_sub", subdivided_state_udf(F.col(region_geog),
@@ -274,6 +148,10 @@ def prepare_regions_subdivided(
         .collect()[0]
     return PreparedRegions(region_id, ex.drop("_cell"), st.lev,
                            int(st.n or 0), int(st.b or 0))
+
+
+# the name the benchmarks import
+prepare_regions_subdivided = prepare_regions
 
 
 def choose_salt(points: DataFrame, *, lng: str = "lng", lat: str = "lat",
@@ -348,10 +226,9 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
 
     points: any DataFrame with lng/lat columns (degrees).
     regions: a :class:`PreparedRegions`, or a dim DataFrame with polygon
-    WKB (+ optional covering array<long>), which is prepared here: by
-    prepare_regions when `broadcast` and the dim passes its guard, else by
-    prepare_regions_subdivided.  Prepare once and pass the result to
-    amortize the dim side across many joins.
+    WKB (+ optional covering array<long>), which is prepared here by
+    prepare_regions.  Prepare once and pass the result to amortize the dim
+    side across many joins.
     Returns points' columns + regions' columns (minus internals).
 
     One planner: when the prepared state table fits a broadcast and
@@ -360,6 +237,9 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     candidates split on the interior flag: interior-cell candidates are
     contained by construction and skip the refine, and only the boundary
     band rides the (salted) hash exchange into the parity refine.
+
+    broadcast: has no effect; the plan follows from `fits_broadcast` and
+    refine_mode alone.  Kept so existing callers keep working.
 
     level: when set, the dim covering must be at exactly this fixed S2
     level; each point then emits a SINGLE join key (its level-L ancestor)
@@ -414,20 +294,10 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
         if salt:
             raise ValueError("key_col (bucketed fact) excludes salting")
 
-    if isinstance(regions, PreparedRegions):
-        prep = regions
-    else:
-        prep = None
-        kw = dict(region_geog=region_geog, region_id=region_id,
-                  covering_col=covering_col)
-        if broadcast:
-            try:
-                prep = prepare_regions(points.sparkSession, regions, **kw)
-            except DimTooLargeError:
-                pass
-        if prep is None:
-            prep = prepare_regions_subdivided(points.sparkSession, regions,
-                                              **kw)
+    prep = regions if isinstance(regions, PreparedRegions) else \
+        prepare_regions(points.sparkSession, regions,
+                        region_geog=region_geog, region_id=region_id,
+                        covering_col=covering_col)
 
     if key_col is not None:
         # use the STORED key attribute: Catalyst only recognizes a bucketed
@@ -538,50 +408,28 @@ def spatial_count(points: DataFrame, regions, *,
                   covering_col: str = "covering",
                   level: int = 8, leaf_col: Optional[str] = None,
                   count_col: str = "n") -> DataFrame:
-    """Aggregate-pushdown contains COUNT: per-region point counts WITHOUT
-    materializing join rows for the interior mass.
+    """Per-region contains COUNT: spatial_join(points, regions,
+    level=level).groupBy(region_id).count(), one row per matched region
+    (`region_id`, `count_col`).  On a broadcastable state table the fact
+    side stays map-only and the rollup's partial (map-side) count makes
+    its one exchange carry at most a row per (map task, region).
 
-    The fixed-level covering splits each region into FULL cells (provably
-    interior — every point in them is contained, no refine needed,
-    reference INDEXED/SUBDIVIDED distinction index.h:52-91) and boundary
-    cells, so the count decomposes:
-
-        count(region) = sum of per-cell point counts over its full cells
-                      + refined boundary-band candidate count
-
-    The full-cell term touches the fact only through groupBy(cell).count():
-    partial (map-side) aggregation means the one fact-wide exchange carries
-    a row per DISTINCT OCCUPIED CELL (~16 B), not per point — at 100 TB
-    that is kilobytes of cell counts instead of terabytes of candidate
-    rows.  Only the boundary band (points whose cell key appears in some
-    non-full covering cell — a broadcast semi-join picks them out) flows
-    through the subdivided parity refine, against the non-full slice of
-    the same prepared state spatial_join uses.
-
-    Returns one row per matched region: (`region_id`, `count_col`).
-    Equivalent to spatial_join(points, regions, predicate="contains",
-    level=level).groupBy(region_id).count() (asserted in tests) at a
-    fraction of the exchange volume.
-
-    regions: a dim DataFrame (prepared internally — pass a
+    regions: a PreparedRegions, or a dim DataFrame (prepared here; pass a
     PreparedRegions to amortize across calls).  The covering must be at
-    fixed `level` (one join key per point)."""
-    spark = points.sparkSession
+    fixed `level`, since each point emits one key, its level-L ancestor;
+    a raw dim without `covering_col` gets a fixed-level covering."""
     if isinstance(regions, PreparedRegions):
         prep = regions
-        region_id = prep.region_id
     else:
         if covering_col not in regions.columns:
-            # the decomposition requires a fixed-`level` covering (points
-            # emit ONE key via their level-L ancestor); the adaptive
-            # covering prepare_regions_subdivided would attach silently
-            # never matches other levels (r5 ADVICE)
+            # the adaptive covering prepare_regions would attach has cells
+            # at other levels, which never match (r5 ADVICE)
             regions = regions.withColumn(
                 covering_col,
                 fixed_level_covering_udf(int(level))(F.col(region_geog)))
-        prep = prepare_regions_subdivided(
-            spark, regions, region_geog=region_geog, region_id=region_id,
-            covering_col=covering_col)
+        prep = prepare_regions(
+            points.sparkSession, regions, region_geog=region_geog,
+            region_id=region_id, covering_col=covering_col)
     if prep.levels and prep.levels != [int(level)]:
         raise ValueError(
             f"spatial_count(level={level}) requires a fixed-level-{level} "
@@ -589,58 +437,9 @@ def spatial_count(points: DataFrame, regions, *,
             f"levels {prep.levels}: cells at other levels would silently "
             "never match a point's single level-ancestor key "
             "(undercounted or empty results)")
-    ex = prep.exploded
-    if leaf_col is not None:
-        pts = points.withColumn("_leaf", F.col(leaf_col)) \
-            .withColumn("_ckp", cell_join_key(
-                cell_parent(F.col("_leaf"), int(level))))
-    else:
-        # level-truncated chain (see spatial_join): this query embeds the
-        # fact-side key derivation in BOTH branches (cell counts + boundary
-        # band), so chain length × 2 rides every Catalyst/AQE pass
-        pts = with_leaf_cell(points, lng, lat, "_leaf", level=int(level)) \
-            .withColumn("_ckp", cell_join_key(F.col("_leaf")))
-    pts = pts.select("_ckp", lng, lat)
-    # term 1: full-cell mass — MAP-ONLY (r6, closing the r5 verdict's
-    # 'fold the full-cell join into the groupBy'): each point inner-joins
-    # the broadcast (full cell -> region) map directly.  The r5 shape
-    # shuffled groupBy(cell) partials FIRST and then joined — an extra
-    # exchange + AQE stage whose only saving over partial aggregation of
-    # the final rollup (which ships <= one row per (task, region) anyway)
-    # was never realized; measured 6.9 s -> ~1.3 s at sf0.1 together with
-    # the single-rollup union below.  The broadcast map is the same
-    # relation (and the same index-rows bound) the r5 plan broadcast.
-    full_cells = ex.where(F.col("_full")).select(region_id, "_ck")
-    full_rows = (pts.join(F.broadcast(full_cells),
-                          pts["_ckp"] == full_cells["_ck"], "inner")
-                 .select(region_id))
-    # term 2: boundary band — semi-join down to candidate rows, then the
-    # same bbox-conditioned parity refine as spatial_join's subdivided plan
-    bex = ex.where(~F.col("_full"))
-    if prep.fits_broadcast:
-        # the boundary join below is itself a broadcast hash join — no
-        # fact exchange exists for a semi-join prefilter to protect, so
-        # the distinct-keys broadcast + left-semi stage is pure overhead
-        # (r6: two fewer stages)
-        bpts = pts
-    else:
-        bkeys = bex.select(F.col("_ck").alias("_ckf")).distinct()
-        bpts = pts.join(F.broadcast(bkeys), pts["_ckp"] == F.col("_ckf"),
-                        "left_semi")
-    cand = bpts.join(
-        F.broadcast(bex) if prep.fits_broadcast
-        else bex.hint("SHUFFLE_HASH"), _join_cond(bpts, bex, lng, lat),
-        "inner")
-    refined = cand.where(F.coalesce(
-        parity_refine_udf(F.col("_state"), F.col(lng), F.col(lat)),
-        F.lit(False)))
-    # ONE exchange total: the union's count() does partial (map-side)
-    # aggregation, so the only shuffle in the whole plan carries at most
-    # one row per (map task, matched region) — the aggregate-pushdown
-    # property the operator exists for, with two fewer exchanges and
-    # ~half the AQE stages of the r5 two-term sum
-    return (full_rows.unionByName(refined.select(region_id))
-            .groupBy(region_id).agg(F.count("*").alias(count_col)))
+    return (spatial_join(points, prep, lng=lng, lat=lat, level=int(level),
+                         leaf_col=leaf_col)
+            .groupBy(prep.region_id).agg(F.count("*").alias(count_col)))
 
 
 # ---------------------------------------------------------------------------
@@ -769,17 +568,6 @@ def _pack_state(rin: bool, ref, edges) -> bytes:
     return bytes([1 if rin else 0]) + head.tobytes() + body.tobytes()
 
 
-def _cell_states(cells_u64, ra, rb):
-    """Per covering cell of ONE region: (full, packed state blob), the
-    blob None for an interior cell.  Shared by both prepare builders."""
-    return [(True, None) if full else
-            (False, _pack_state(bool(rin),
-                                (np.nan,) * 3 if ref is None else ref,
-                                np.zeros((0, 6)) if edges is None
-                                or len(edges) == 0 else edges))
-            for full, rin, ref, edges in _subdivide_region(cells_u64, ra, rb)]
-
-
 @pandas_udf(_SUBDIV_STATE_TYPE)
 def subdivided_state_udf(wkb: pd.Series, covering: pd.Series) -> pd.Series:
     """Dim-side prep: per region row, the subdivided-cell state array
@@ -791,8 +579,11 @@ def subdivided_state_udf(wkb: pd.Series, covering: pd.Series) -> pd.Series:
             continue
         cells = np.array(cov, dtype=np.int64).view(np.uint64)
         ra, rb = from_wkb(bytes(b)).ring_edges_xyz()
-        out.append([{"full": f, "state": st}
-                    for f, st in _cell_states(cells, ra, rb)])
+        out.append([
+            {"full": True, "state": None} if full else
+            {"full": False, "state": _pack_state(
+                bool(rin), (np.nan,) * 3 if ref is None else ref, edges)}
+            for full, rin, ref, edges in _subdivide_region(cells, ra, rb)])
     return pd.Series(out, dtype=object)
 
 
@@ -1060,8 +851,9 @@ class _DistanceDim:
         """(point index, region index, meters) of every pair within
         radius_m; null coordinates match nothing."""
         idx = np.flatnonzero(~(np.isnan(lng) | np.isnan(lat)))
-        if self.base_min is None:
-            idx = idx[:0]
+        if self.base_min is None:       # no covering cells: nothing to probe
+            e = np.zeros(0, dtype=np.int64)
+            return e, e, np.zeros(0)
         pi, ri = self.candidates(C.from_lnglat(lng[idx], lat[idx]), radius_m)
         pi = idx[pi]
         d = self.distances(np.stack(C.lnglat_to_xyz(lng[pi], lat[pi]),
@@ -1273,7 +1065,10 @@ def dwithin_join(points: DataFrame, regions: DataFrame, radius_m: float, *,
         return points.mapInArrow(run, schema)
     dims = _buffered_dims(regions, region_geog, region_id)
     if dims is None:
-        return points.limit(0).join(regions.select(region_id).limit(0))
+        rid = F.lit(None).cast(regions.schema[region_id].dataType)
+        empty = points.limit(0).select(rid.alias(region_id), "*")
+        return empty if distance_col is None else \
+            empty.withColumn(distance_col, F.lit(None).cast("double"))
     lev, dim = dims(radius_m)
     cand = (points
             .transform(lambda d: with_leaf_cell(d, lng, lat, "_leaf",

@@ -80,26 +80,10 @@ def regions_df(spark: SparkSession, n_regions: int = 96,
     embedded-covering checkpoint idea, geography_interface.h:150-158).
     Rows are memoized driver-side (deterministic)."""
     rows = _region_rows(n_regions, with_covering, covering_level)
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows,
         "region_id long, lng0 double, lat0 double, lng1 double, lat1 double,"
         " geog binary, covering array<long>")
-    # table-statistics sidecar (the Iceberg/catalog-stats pattern): the
-    # source KNOWS its row count / geography bytes / exploded covering
-    # cells, so broadcast-guard consumers (dim_broadcast_stats) can skip
-    # their pre-collect stats aggregation job — measured 0.4 s of the
-    # flagship's 1.1 s in-timer dim prep (r6)
-    df._s2_dim_stats = (
-        len(rows),
-        sum(len(r[5]) for r in rows if r[5] is not None),
-        sum(len(r[6]) for r in rows if r[6] is not None))
-    # the rows themselves, keyed by column name: PreparedRegions collects
-    # the (guarded-small) dim to the driver — but for this source the
-    # driver BUILT the rows, so the collect job is a round-trip of data
-    # the process already holds (r6; ~0.35 s per flagship prep)
-    cols = ("region_id", "lng0", "lat0", "lng1", "lat1", "geog", "covering")
-    df._s2_dim_rows = [dict(zip(cols, r)) for r in rows]
-    return df
 
 
 def special_regions_df(spark: SparkSession) -> DataFrame:

@@ -142,16 +142,15 @@ def main():
     sections.append((
         "Aggregate-pushdown contains count (spatial_count)",
         """What to verify:
-- The fact side's ONLY wide operator is `HashAggregate` keyed on the cell
-  key with a `partial_count` BEFORE its Exchange — the shuffle carries one
-  row per occupied cell, not per point (the 100 TB lever: candidate rows
-  for the interior mass are never materialized).
-- The full-cell term then joins those per-cell counts to the dim's full
-  cells with a `BroadcastHashJoin` — tiny build side, no fact rows.
-- The boundary band: a broadcast left-SEMI join prunes the fact to
-  boundary-cell rows first, and only that band reaches `ArrowEvalPython`
-  (the parity refine) via a second BroadcastHashJoin.
-- The final union/rollup aggregates a few hundred rows — negligible.""",
+- It is the flagship join's plan plus the rollup: ONE
+  `BroadcastHashJoin` of the fact side against the prepared state table
+  (`_full`, `_state`, `_ck`, bbox), with the bbox test in its join
+  condition, and `ArrowEvalPython` running `parity_refine_udf` on the
+  candidates (interior-cell candidates pass with a null state).
+- No left-SEMI join and no fact-side Exchange: the fact side is map-only.
+- The ONLY `Exchange hashpartitioning` is the region rollup, after a
+  map-side `partial_count`, so it carries at most one row per (map task,
+  region), never one per point.""",
         plan_of(sc)))
 
     out = ["# PLANS — physical-plan audit of the key operators",

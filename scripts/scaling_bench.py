@@ -336,7 +336,7 @@ for a scan-shaped workload.
 
 ## Shuffle path, PREPARED dim (repeated-join configuration)
 
-`prepare_regions_subdivided` builds the exploded subdivided-state table
+`prepare_regions` builds the exploded subdivided-state table
 once (eager localCheckpoint; the per-region state UDF and the
 broadcast-fit stats are paid OUTSIDE the join timer) and every subsequent
 join reuses it — the ShapeIndex-reuse analog of the broadcast path's
@@ -368,7 +368,7 @@ whose key set genuinely cannot broadcast.
 
 ## Subdivided-state broadcast (distributed prepare, refine_mode='auto')
 
-The dim is prepared distributed (broadcast=False), and the planner still
+The dim is prepared on the executors (prepare_regions), and the planner
 broadcasts its per-cell SUBDIVIDED state (ref-point containment bit + only
 the ring edges intersecting each covering cell, ~150 B/boundary cell — the
 reference's S2ShapeIndex INDEXED/SUBDIVIDED design as columnar state)

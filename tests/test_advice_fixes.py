@@ -5,8 +5,8 @@
    mantissa silently corrupts 64-bit cell ids).
 2. s2_touches must test edge crossings all-edges x all-edges in both
    argument orders (a line straight through a polygon is NOT touching).
-3. The broadcast spatial-join path must fall back to the shuffle path when
-   the dim side exceeds the driver-materialization guardrail.
+3. A dim over the in-process guard must still join right (every dim is
+   prepared on the executors), whatever `broadcast` says.
 4. Checkpoint paths with URI schemes must be rejected up front (manifest IO
    is local-only).
 """
@@ -118,19 +118,16 @@ def test_touches_two_crossing_lines_false():
 
 
 # ---------------------------------------------------------------------------
-# 3. broadcast guardrail fallback
+# 3. over-guard dim
 # ---------------------------------------------------------------------------
 
 def test_large_dim_falls_back_to_shuffle_path(spark, monkeypatch):
-    """A dim over the in-process guard is prepared distributed instead
-    (nothing collected to the driver), and the join stays right."""
+    """A raw dim over the in-process guard joins right: the guard bounds
+    only the distance dim, and spatial_join prepares any dim on the
+    executors."""
     from s2geography_spark.operators import spatial_join as sj
     from s2geography_spark.sources.regions import regions_df
     monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", 4)
-    built = []
-    distributed = sj.prepare_regions_subdivided
-    monkeypatch.setattr(sj, "prepare_regions_subdivided",
-                        lambda *a, **kw: built.append(1) or distributed(*a, **kw))
     regions = regions_df(spark, 24)
     boxes = regions.collect()
     pts = spark.createDataFrame(
@@ -138,23 +135,11 @@ def test_large_dim_falls_back_to_shuffle_path(spark, monkeypatch):
          for i, r in enumerate(boxes[:2])] + [(2, -170.0, -70.0)],
         "pid long, lng double, lat double")
     out = sj.spatial_join(pts, regions, predicate="contains", broadcast=True)
-    assert built == [1]
     got = {(r.pid, r.region_id) for r in out.collect()}
     assert got == {(0, boxes[0].region_id), (1, boxes[1].region_id)}
-
-    with pytest.raises(ValueError, match="too large"):
-        sj.prepare_regions(spark, regions)
-
-
-def test_prepare_regions_guard_raises(spark, monkeypatch):
-    from s2geography_spark.operators import spatial_join as sj
-    from s2geography_spark.sources.regions import regions_df
-    regions = regions_df(spark, 24)
-    from s2geography_spark.functions.geo import s2_coveringcellids
-    regions = regions.withColumn("covering", s2_coveringcellids("geog"))
-    monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", 4)
-    with pytest.raises(ValueError, match="too large"):
-        sj.prepare_regions(spark, regions)
+    # broadcast= has no effect on the rows
+    off = sj.spatial_join(pts, regions, predicate="contains", broadcast=False)
+    assert sorted(out.collect()) == sorted(off.collect())
 
 
 # ---------------------------------------------------------------------------

@@ -94,6 +94,26 @@ def test_dwithin_matches_brute_force(points, dim, brute, plan):
         assert got[key] == pytest.approx(d, abs=1e-3)
 
 
+def test_dim_without_covering_cells(spark, points, dim, plan):
+    """Every geography null or EMPTY, so no region has a covering cell:
+    both plans return no rows, with the columns and types they return
+    for any other dim."""
+    nothing = dim.where("region_id IN (11, 12)")
+
+    def schema(df):
+        return [(f.name, f.dataType) for f in df.schema]
+
+    for col in ("d", None):
+        out = sj.dwithin_join(points, nothing, RADIUS, distance_col=col)
+        assert schema(out) == schema(
+            sj.dwithin_join(points, dim, RADIUS, distance_col=col))
+        assert out.collect() == []
+    knn = sj.knn_join_covering(points, nothing, K, point_id="pid")
+    assert knn.columns == ["pid", "lng", "lat", "region_id", "distance_m",
+                           "knn_rank"]
+    assert knn.collect() == []
+
+
 def _ranked(rows):
     return {(r.pid, r.knn_rank): (r.region_id, r.distance_m) for r in rows}
 

@@ -13,8 +13,8 @@ import numpy as np
 import pytest
 
 from s2geography_spark.core.geog import Geog, to_wkb
-from s2geography_spark.operators.spatial_join import (
-    prepare_regions, prepare_regions_subdivided, spatial_join)
+from s2geography_spark.operators.spatial_join import (prepare_regions,
+                                                      spatial_join)
 from s2geography_spark.sources.regions import region_corners, regions_df
 
 MARGIN = 1e-7          # radians (~0.6 m) between an oracle point and an edge
@@ -121,19 +121,18 @@ def _pairs(spark, rows, prep, **kw):
 def test_ngon_oracle_both_plans_both_predicates(spark, ngon_case):
     regions, rows, expected, exact, vertices = ngon_case
     assert len(expected) > 500 and len(rows) > 4000
-    bcast = prepare_regions(spark, regions)
-    shuf = prepare_regions_subdivided(spark, regions)
-    assert bcast.fits_broadcast
+    prep = prepare_regions(spark, regions)
+    assert prep.fits_broadcast
     for predicate in ("contains", "intersects"):
-        got_b = _pairs(spark, rows, bcast, predicate=predicate)
-        got_s = _pairs(spark, rows, shuf, predicate=predicate,
+        got_b = _pairs(spark, rows, prep, predicate=predicate)
+        got_s = _pairs(spark, rows, prep, predicate=predicate,
                        refine_mode="subdivided", salt=3)
         assert got_b == expected, (predicate, len(got_b ^ expected))
         assert got_s == expected, (predicate, len(got_s ^ expected))
         # exact boundary points: identical rows on both plans, and every
         # vertex is kept by the polygon it lies on
-        ex_b = _pairs(spark, exact, bcast, predicate=predicate)
-        ex_s = _pairs(spark, exact, shuf, predicate=predicate,
+        ex_b = _pairs(spark, exact, prep, predicate=predicate)
+        ex_s = _pairs(spark, exact, prep, predicate=predicate,
                       refine_mode="subdivided")
         assert ex_b == ex_s, predicate
         assert vertices <= ex_b, (predicate, sorted(vertices - ex_b)[:5])

@@ -285,29 +285,6 @@ def test_interior_flags_vertex_in_cell():
     assert flags == [False, True]
 
 
-def test_prepared_regions_exploded_guard(spark, monkeypatch):
-    """VERDICT r4 #5: the broadcast guard must bound the POST-explosion
-    cell count, not just input rows/bytes; an oversized dim falls back to
-    the distributed prepare in spatial_join and raises in prepare_regions."""
-    from s2geography_spark.core.geog import from_wkt, to_wkb
-    from s2geography_spark.operators import spatial_join as sj
-
-    wkb = to_wkb(from_wkt("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))"))
-    regions = spark.createDataFrame([(1, bytearray(wkb))],
-                                    "region_id long, geog binary")
-    from s2geography_spark.functions.geo import s2_coveringcellids
-    regions = regions.withColumn("covering", s2_coveringcellids("geog"))
-    ncells = regions.select(F.sum(F.size("covering"))).collect()[0][0]
-    assert not sj.dim_is_broadcastable(regions, "geog",
-                                       covering_col="covering",
-                                       max_cells=ncells - 1)
-    assert sj.dim_is_broadcastable(regions, "geog", covering_col="covering",
-                                   max_cells=ncells)
-    monkeypatch.setattr(sj, "MAX_BROADCAST_EXPLODED_CELLS", ncells - 1)
-    with pytest.raises(ValueError, match="exploded covering cells"):
-        sj.prepare_regions(spark, regions)
-
-
 def test_subdivided_equals_rows_refine(spark, mentions):
     """The boundary-band shuffle and the state broadcast must both produce
     the brute-force pairs on the corpus, and the direct contains kernel's
@@ -514,11 +491,12 @@ def test_spatial_count_matches_join_rollup(spark, mentions):
     """spatial_count (aggregate pushdown: full-cell mass via per-cell
     counts, boundary band via parity refine) must equal the join-then-
     rollup counts exactly, on the corpus and on antimeridian/pole
-    regions."""
+    regions, in at most three Spark jobs per call on a prepared dim (the
+    state broadcast, the rollup's map stage and its result)."""
     from s2geography_spark.core import ops
     from s2geography_spark.core.geog import from_wkb
-    from s2geography_spark.operators.spatial_join import (
-        prepare_regions_subdivided, spatial_count)
+    from s2geography_spark.operators.spatial_join import (prepare_regions,
+                                                          spatial_count)
 
     regions = regions_df(spark, 24, covering_level=8)
     exp = {(r.region_id, r["count"]) for r in
@@ -528,10 +506,17 @@ def test_spatial_count_matches_join_rollup(spark, mentions):
            spatial_count(mentions, regions, level=8).collect()}
     assert got == exp and len(got) > 0
     # prepared-dim reuse gives the identical result
-    prep = prepare_regions_subdivided(spark, regions)
-    got_p = {(r.region_id, r.n) for r in
-             spatial_count(mentions, prep, level=8).collect()}
+    prep = prepare_regions(spark, regions)
+    sc = spark.sparkContext
+    sc.setJobGroup("s2_spatial_count_jobs", "s2_spatial_count_jobs")
+    try:
+        got_p = {(r.region_id, r.n) for r in
+                 spatial_count(mentions, prep, level=8).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert got_p == exp
+    jobs = sc.statusTracker().getJobIdsForGroup("s2_spatial_count_jobs")
+    assert 0 < len(jobs) <= 3, len(jobs)
     # non-broadcastable state falls back to the shuffle-join boundary term
     prep.fits_broadcast = False
     got_s = {(r.region_id, r.n) for r in
@@ -573,43 +558,6 @@ def test_spatial_join_rejects_bad_predicate_and_modes(spark):
                            match=r"\('auto', 'subdivided'\)") as e:
             spatial_join(pts, regions, refine_mode=mode)
         assert mode in str(e.value)
-
-
-def _sidecar_dim(spark, n=8):
-    """regions_df's rows as a plain DataFrame, so a test can attach its own
-    sidecars: (DataFrame, rows as dicts, (rows, geog bytes, cells))."""
-    src = regions_df(spark, n)
-    df = spark.createDataFrame([tuple(r.values()) for r in src._s2_dim_rows],
-                               src.schema)
-    return df, list(src._s2_dim_rows), src._s2_dim_stats
-
-
-@pytest.mark.parametrize("case", ["stats_arity", "row_count", "row_keys"])
-def test_bad_dim_sidecars_take_the_slow_path(spark, case):
-    """A sidecar that does not describe its DataFrame (wrong stats arity,
-    a row count that disagrees with the stats, rows missing a column) is
-    ignored: the prepare collects/aggregates and the join stays right."""
-    from s2geography_spark.operators.spatial_join import prepare_regions
-    df, rows, stats = _sidecar_dim(spark)
-    if case == "stats_arity":
-        df._s2_dim_stats = stats[:2]
-        df._s2_dim_rows = rows
-    elif case == "row_count":
-        df._s2_dim_stats = stats
-        df._s2_dim_rows = rows[:-1]          # one region silently missing
-    else:
-        df._s2_dim_stats = stats
-        df._s2_dim_rows = [{k: v for k, v in r.items() if k != "lng0"}
-                           for r in rows]
-    lng0, lat0, lng1, lat1 = region_corners(np.arange(8))
-    pts = spark.createDataFrame(
-        [(i, float(a + b) / 2, float(c + d) / 2)
-         for i, (a, b, c, d) in enumerate(zip(lng0, lng1, lat0, lat1))],
-        "pid long, lng double, lat double")
-    got = {(r.pid, r.region_id) for r in
-           spatial_join(pts, prepare_regions(spark, df))
-           .select("pid", "region_id").collect()}
-    assert got == {(i, i) for i in range(8)}
 
 
 def test_knn_join_custom_region_id(spark):
