@@ -98,7 +98,8 @@ def _prepared_regions(spark: SparkSession):
 
 def q_geo_pip_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial join: which customers' points fall in which regions
-    (cover -> explode -> broadcast equi-join -> vectorized PIP refine)."""
+    (cover -> explode -> one map-only pass probing the broadcast probe
+    table -> vectorized PIP refine of the boundary candidates)."""
     from s2geography_spark.operators.spatial_join import spatial_join
     pts = _customer_points(spark, sf_dir)
     joined = spatial_join(pts, _prepared_regions(spark),
@@ -117,7 +118,7 @@ def q_geo_pip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_geo_pip_counts_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same per-region counts through spatial_count, which is
     spatial_join(...).groupBy(region_id).count() on the same prepared dim:
-    the fact side stays map-only against the broadcast state table, and
+    the fact side stays map-only against the broadcast probe table, and
     the rollup's partial count makes its one exchange carry at most a row
     per (map task, region).  Oracled against the identical closed-form
     SQL as geo_pip_counts."""
@@ -1914,7 +1915,7 @@ def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: synthetic pages -> geo-entity extraction -> two-phase
-    spatial join (cover/explode/broadcast-join/PIP refine) -> region rollup."""
+    spatial join (cover/explode/in-task probe/PIP refine) -> region rollup."""
     from s2geography_spark.operators.spatial_join import spatial_join
     from s2geography_spark.sources.pages import extract_mentions, gazetteer_df, pages_df
     from s2geography_spark.sources.regions import regions_df

@@ -12,14 +12,24 @@ Plan shape (scales to 10^12 rows / 1000 executors):
       -> explode -> one row per (region, covering cell) carrying the
          cell's SUBDIVIDED state: interior flag + packed edge subset
          (PreparedRegions, built once and reused)              [map-only]
+      -> when it fits the in-process guard, collected ONCE and
+         broadcast as a probe table sorted by the mixed cell key
   points (the 10^12-row fact side)
-      leaf cell id from lng/lat (pure Column bit math, no WKB)   [map-only]
-      -> ancestors at exactly the levels present in the region
-         coverings (recorded on the prepared dim)              [map-only]
-      -> equi-join on cell_id: broadcast the state table when it fits,
-         else shuffle the boundary band on the (salted) cell key
-      -> refine with vectorized crossing parity against the matched
-         cell's edge subset; interior-cell candidates skip it   [map-only]
+      broadcast plan — ONE map-only Arrow UDF per batch, over only the
+      key/leaf/lng/lat columns (the other fact columns stay in the JVM,
+      so Catalyst still prunes them):
+      -> leaf cell id (NumPy, or the stored leaf/key column), its
+         ancestors at the dim's covering levels, a searchsorted probe of
+         the probe table, the bbox prefilter, and the crossing-parity
+         refine of the boundary-cell candidates only; each point's
+         matched region payload comes back as a list, and `inline`
+         emits the joined rows                                  [map-only]
+      shuffle plan (an oversized state table, or
+      refine_mode='subdivided'):
+      -> leaf cell id from lng/lat (pure Column bit math, no WKB) and
+         its ancestors at the dim's covering levels             [map-only]
+      -> interior cells join map-only, the boundary band shuffles on the
+         (salted) cell key into the vectorized crossing-parity refine
 
 With a broadcastable state table the whole join is shuffle-free: the only
 wide operation in a typical query is the user's downstream aggregation.
@@ -36,6 +46,8 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -66,14 +78,19 @@ def ancestors_at_levels(cell_col, levels):
     return F.array(*[cell_parent(cell_col, int(l)) for l in sorted(levels)])
 
 
-# in-process guard for dwithin_join / knn_join_covering: a dim within
-# these is collected once and broadcast (see _distance_dim).  The byte
-# bound also caps a broadcast state table (PreparedRegions.fits_broadcast)
+# in-process guard: a dim (dwithin_join / knn_join_covering, see
+# _distance_dim) or a prepared state table (the probe table of
+# spatial_join's broadcast plan, payload included) within these is
+# collected once and broadcast, and every Python worker holds a copy
 MAX_BROADCAST_DIM_ROWS = 200_000
 MAX_BROADCAST_DIM_BYTES = 256 * 1024 * 1024
-# the state table broadcasts (and the prefilter's 8 B/cell key set with it)
-# up to this many exploded cells
+# the shuffle plan's prefilter broadcasts the boundary cells' key set
+# (8 B/cell) and the interior slice up to this many exploded cells
 MAX_BROADCAST_INDEX_ROWS = 8_000_000
+# slack of the region bbox prefilter, in degrees: _join_cond (shuffle
+# plan) and _ProbeTable.pairs (broadcast plan) apply the same test with
+# it, so both plans keep the same candidates
+_BBOX_EPS = 1e-9
 
 
 def dim_is_broadcastable(regions: DataFrame, region_geog: str) -> bool:
@@ -88,6 +105,134 @@ def dim_is_broadcastable(regions: DataFrame, region_geog: str) -> bool:
             and int(row.b or 0) <= MAX_BROADCAST_DIM_BYTES)
 
 
+def _sorted_probe(keys, q):
+    """(query index, position in `keys`) of every match of the queries q
+    in the sorted key array: one searchsorted probe, ragged-expanded."""
+    lo = np.searchsorted(keys, q, "left")
+    cnt = np.searchsorted(keys, q, "right") - lo
+    qi = np.repeat(np.arange(len(q)), cnt)
+    pos = lo[qi] + np.arange(len(qi)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return qi, pos
+
+
+def _mix(cells):
+    """cell_join_key in NumPy: x ^ (x >>> 31) on the int64 bit pattern."""
+    u = np.asarray(cells).view(np.uint64)
+    return (u ^ (u >> np.uint64(31))).view(np.int64)
+
+
+# the prepared state table's internal columns; the rest is region payload
+_STATE_COLS = ("_ck", "_full", "_state", "_xmin", "_ymin", "_xmax", "_ymax")
+
+
+def _payload_type(schema) -> T.StructType:
+    """The region payload of a prepared state table's schema: what the
+    broadcast plan emits per matched (point, region) pair."""
+    return T.StructType([f for f in schema
+                         if f.name not in _STATE_COLS and f.name != "_cell"])
+
+
+class _ProbeTable:
+    """A broadcastable state table held in-process — the engine analog of
+    probing the reference's in-memory S2ShapeIndex: rows sorted by the
+    mixed cell key, with the interior flags, the bbox arrays, and the
+    state blobs and region payload as Arrow arrays (no Python object per
+    row), so each task of the broadcast plan joins its batch with one
+    searchsorted probe (partition-local, the small side replicated)."""
+
+    def __init__(self, tbl, payload: T.StructType):
+        from pyspark.sql.pandas.types import to_arrow_type
+        ck = tbl.column("_ck").to_numpy()
+        order = np.argsort(ck, kind="stable")
+        take = pa.array(order)
+        self.ck = ck[order]
+        self.full = tbl.column("_full").to_numpy()[order]
+        self.state = tbl.column("_state").take(take).combine_chunks()
+        # NaN for a region without a bbox, which _join_cond passes
+        self.bbox = np.stack([
+            np.asarray(tbl.column(c).to_numpy(), dtype=np.float64)[order]
+            for c in ("_xmin", "_ymin", "_xmax", "_ymax")])
+        # list<struct> of the payload, exactly the Arrow type Spark expects
+        # back from spatial_join's probe UDF
+        self.type = to_arrow_type(T.ArrayType(payload, containsNull=False))
+        fields = list(self.type.value_type)
+        self.payload = pa.StructArray.from_arrays(
+            [tbl.column(f.name).take(take).combine_chunks().cast(f.type)
+             for f in fields], fields=fields)
+
+    def pairs(self, pi, keys, lng=None, lat=None, leaf=None):
+        """(point index, table row) of every joined pair: probe point
+        pi[i]'s mixed cell key keys[i], keep what passes _join_cond's bbox
+        prefilter (lng/lat in degrees), and refine the boundary-cell
+        candidates with _parity_refine_impl.  With `leaf` (coords='leaf')
+        there is no bbox test and the refine uses the leaf-cell centres,
+        as parity_refine_leaf_udf does."""
+        qi, pos = _sorted_probe(self.ck, keys)
+        pi = pi[qi]
+        if leaf is None:
+            x, y = lng[pi], lat[pi]
+            xmin, ymin, xmax, ymax = self.bbox[:, pos]
+            lo_x, hi_x = xmin - _BBOX_EPS, xmax + _BBOX_EPS
+            lat_ok = (y >= ymin - _BBOX_EPS) & (y <= ymax + _BBOX_EPS)
+            lng_in = np.where(xmin <= xmax, (x >= lo_x) & (x <= hi_x),
+                              (x >= lo_x) | (x <= hi_x))
+            ok = np.isnan(xmin) | (lat_ok & lng_in)
+            pi, pos = pi[ok], pos[ok]
+        bnd = np.flatnonzero(~self.full[pos])
+        if len(bnd):
+            pb = pi[bnd]
+            x, y = (lng[pb], lat[pb]) if leaf is None else \
+                C.to_lnglat(leaf[pb])
+            hit = _parity_refine_impl(self.state.take(pos[bnd]).to_pandas(),
+                                      pd.Series(x), pd.Series(y))
+            keep = np.ones(len(pi), dtype=bool)
+            keep[bnd] = hit.eq(True).to_numpy()
+            pi, pos = pi[keep], pos[keep]
+        return pi, pos
+
+    def matches(self, n: int, pi, pos):
+        """Each of n points' matched payload rows, as one list<struct>
+        array: the pairs (pi[i], pos[i]) grouped by point.  A point
+        without a match gets a null list, which the JVM reads without
+        materializing an empty array."""
+        cnt = np.bincount(pi, minlength=n)
+        off = np.zeros(n + 1, dtype=np.int32)
+        np.cumsum(cnt, out=off[1:])
+        rows = pos[np.argsort(pi, kind="stable")]
+        return pa.ListArray.from_arrays(pa.array(off),
+                                        self.payload.take(rows),
+                                        type=self.type,
+                                        mask=pa.array(cnt == 0))
+
+
+def _capped_state(rows_cap: int, bytes_cap: int):
+    """mapInArrow body of prepare_regions' collect: the partition's state
+    rows, or one all-null row (a null `_ck`, which no state row has) once
+    the partition passes `rows_cap` rows or `bytes_cap` Arrow bytes (every
+    column, the region payload included)."""
+    def run(batches):
+        out, n_rows, n_bytes = [], 0, 0
+        for b in batches:
+            out.append(b)
+            n_rows += b.num_rows
+            n_bytes += b.nbytes
+            if n_rows > rows_cap or n_bytes > bytes_cap:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.nulls(1, f.type) for f in b.schema],
+                    names=b.schema.names)
+                return
+        yield from out
+    return run
+
+
+def _row_bytes(schema):
+    """A row's Arrow bytes as a Column, estimated: the value bytes of
+    string and binary columns plus 8 per other column."""
+    var = [F.coalesce(F.octet_length(f.name), F.lit(0)) for f in schema
+           if isinstance(f.dataType, (T.StringType, T.BinaryType))]
+    return sum(var, F.lit(8 * (len(schema) - len(var))))
+
+
 class PreparedRegions:
     """Prepared dim side of the spatial join — the engine analog of the
     reference's ShapeIndexGeography 'prepared geometry' (geography.h:182-210),
@@ -99,27 +244,44 @@ class PreparedRegions:
     interior flag `_full`, the packed subdivided state `_state` (null for
     interior cells) and the bbox prefilter columns `_xmin.._ymax`.
     `levels` lists the covering levels; `state_cells`/`state_bytes` size
-    the state table, and `fits_broadcast` is what the planner reads to
-    broadcast it or shuffle the boundary band."""
+    the state table (rows, and Arrow bytes with the region payload).
+    `probe` is the broadcast _ProbeTable of a state table within the
+    in-process guard, else None."""
 
     def __init__(self, region_id: str, exploded: DataFrame, levels,
-                 state_cells: int, state_bytes: int):
+                 state_cells: int, state_bytes: int, probe=None):
         self.region_id = region_id
         self.exploded = exploded
-        self.levels = sorted(levels)
+        self.levels = sorted(int(lev) for lev in levels)
         self.state_cells = state_cells
         self.state_bytes = state_bytes
-        self.fits_broadcast = (state_cells <= MAX_BROADCAST_INDEX_ROWS
-                               and state_bytes <= MAX_BROADCAST_DIM_BYTES)
+        self.probe = probe
+
+    @property
+    def fits_broadcast(self) -> bool:
+        """Whether spatial_join probes the state table in-task (a probe
+        table was broadcast) rather than shuffling the boundary band."""
+        return self.probe is not None
 
 
 def prepare_regions(spark, regions: DataFrame, *, region_geog: str = "geog",
                     region_id: str = "region_id",
                     covering_col: str = "covering") -> PreparedRegions:
     """Prepare a dim of any size: the per-region subdivided_state_udf runs
-    on the executors (nothing is collected to the driver), the exploded
-    state table is pinned with ONE eager localCheckpoint, and one
-    aggregation over it records the state size and the covering levels.
+    on the executors and the exploded state table is pinned with ONE eager
+    localCheckpoint.  A state table within the in-process guard
+    (MAX_BROADCAST_DIM_ROWS cells and MAX_BROADCAST_DIM_BYTES Arrow bytes,
+    the region payload included: every Python worker of the broadcast
+    plan holds a copy) is then collected ONCE as Arrow and broadcast as
+    the probe table; its size and covering levels are read from it.  That
+    collect is one job: each partition ships its rows while it stays
+    within an even share of the guard.  Only when a partition passes its
+    share does the exact guard (one aggregation, which also records the
+    size and levels; the bytes estimated by _row_bytes) decide, before an
+    uncapped collect — so a table over the guard never reaches the
+    driver, and a table within it is collected whatever its skew, as in
+    _distance_dim.
+
     A dim without `covering_col` gets the adaptive s2_coveringcellids
     covering.  localCheckpoint blocks carry no CacheManager entry, so the
     ContextCleaner frees them with the DataFrame."""
@@ -142,12 +304,29 @@ def prepare_regions(spark, regions: DataFrame, *, region_geog: str = "geog",
           .withColumn("_xmax", F.col("_bb.xmax"))
           .withColumn("_ymax", F.col("_bb.ymax")).drop("_bb")
           .localCheckpoint(eager=True))
-    st = ex.agg(F.count("*").alias("n"),
-                F.sum(F.octet_length("_state")).alias("b"),
-                F.collect_set(cell_level(F.col("_cell"))).alias("lev")) \
-        .collect()[0]
-    return PreparedRegions(region_id, ex.drop("_cell"), st.lev,
-                           int(st.n or 0), int(st.b or 0))
+    parts = max(ex.rdd.getNumPartitions(), 1)
+    nullable = T.StructType([T.StructField(f.name, f.dataType)
+                             for f in ex.schema])
+    tbl = ex.mapInArrow(_capped_state(MAX_BROADCAST_DIM_ROWS // parts,
+                                      MAX_BROADCAST_DIM_BYTES // parts),
+                        nullable).toArrow()
+    if tbl.column("_ck").null_count:
+        st = ex.agg(F.count("*").alias("n"),
+                    F.sum(_row_bytes(ex.schema)).alias("b"),
+                    F.collect_set(cell_level(F.col("_cell"))).alias("lev")) \
+            .collect()[0]
+        n, n_bytes, levels = int(st.n or 0), int(st.b or 0), st.lev
+        tbl = ex.toArrow() if (n <= MAX_BROADCAST_DIM_ROWS
+                               and n_bytes <= MAX_BROADCAST_DIM_BYTES) \
+            else None
+    probe = None
+    if tbl is not None:
+        n, n_bytes = tbl.num_rows, tbl.nbytes
+        levels = np.unique(C.level(tbl.column("_cell").to_numpy()))
+        probe = spark.sparkContext.broadcast(
+            _ProbeTable(tbl, _payload_type(ex.schema)))
+    return PreparedRegions(region_id, ex.drop("_cell"), levels, n, n_bytes,
+                           probe)
 
 
 # the name the benchmarks import
@@ -186,10 +365,13 @@ def _join_cond(p: DataFrame, e: DataFrame, lng: str, lat: str, *,
     prefilter (predicates.cc:174-186 analog), and the salt replica match
     when `salted`.  The bbox test is part of the JOIN CONDITION — a
     post-join .where() would be combined with the refine predicate and
-    pulled ABOVE ArrowEvalPython by Catalyst's python-UDF extraction."""
+    pulled ABOVE ArrowEvalPython by Catalyst's python-UDF extraction.
+    _ProbeTable.pairs applies the same bbox test in NumPy on the
+    broadcast plan; the two must stay in step (both use _BBOX_EPS), or
+    the plans return different rows."""
     c = p["_ckp"] == e["_ck"]
     if bbox:
-        eps = 1e-9
+        eps = _BBOX_EPS
         lat_ok = (p[lat] >= e["_ymin"] - eps) & (p[lat] <= e["_ymax"] + eps)
         lng_in = F.when(
             e["_xmin"] <= e["_xmax"],
@@ -200,6 +382,68 @@ def _join_cond(p: DataFrame, e: DataFrame, lng: str, lat: str, *,
     if salted:
         c = c & (p["_salt"] == e["_salt_r"])
     return c
+
+
+def _int_col(batch, name: str):
+    """A RecordBatch column as int64 NumPy (nulls as 0) and its validity."""
+    col = batch.column(name)
+    return (pc.fill_null(pc.cast(col, pa.int64()), 0).to_numpy(),
+            col.is_valid().to_numpy(zero_copy_only=False))
+
+
+def _probe_join(points: DataFrame, prep: PreparedRegions, *, lng: str,
+                lat: str, level: Optional[int], leaf_col: Optional[str],
+                key_col: Optional[str], leaf_mode: bool) -> DataFrame:
+    """spatial_join's broadcast plan: ONE map-only Python pass over the
+    points.  The scalar Arrow UDF `spatial_probe` keys each batch in NumPy
+    (from the stored key_col, from leaf_col, or from lng/lat; the
+    ancestors at every level in prep.levels when `level` is None), probes
+    the broadcast _ProbeTable and returns each point's matched region
+    payload as a list, which `inline` turns into the joined rows in the
+    JVM.  Only the key, leaf and lng/lat columns cross into Python, so
+    Catalyst still prunes the fact columns a query does not read.  Rows
+    with a null key, leaf or coordinate match nothing."""
+    from pyspark.sql.functions import arrow_udf
+    bc = prep.probe
+    levels = prep.levels if level is None else [int(level)]
+    # the leaf is read to key the point (no key_col) or to refine it
+    # (coords='leaf'); lng/lat for the bbox test and the refine otherwise
+    cols = {"key": key_col,
+            "leaf": leaf_col if leaf_mode or key_col is None else None,
+            "x": None if leaf_mode else lng,
+            "y": None if leaf_mode else lat}
+    cols = {k: c for k, c in cols.items() if c is not None}
+
+    def spatial_probe(s: pa.Array) -> pa.Array:
+        t = bc.value
+        b = pa.RecordBatch.from_struct_array(s)
+        x = y = leaf = None
+        ok = np.ones(len(b), dtype=bool)
+        if not leaf_mode:
+            x, y = _float_col(b, "x"), _float_col(b, "y")
+        if "leaf" in cols:
+            leaf, ok = _int_col(b, "leaf")
+        if "key" in cols:
+            keys, ok_key = _int_col(b, "key")
+            pi = np.flatnonzero(ok & ok_key)
+            keys = keys[pi]
+        else:
+            if leaf is None:
+                ok = ~(np.isnan(x) | np.isnan(y))
+                leaf = C.from_lnglat(np.nan_to_num(x), np.nan_to_num(y))
+            idx = np.flatnonzero(ok)
+            pi = np.tile(idx, len(levels))
+            keys = np.concatenate(
+                [_mix(C.parent(leaf[idx], lev)) for lev in levels]
+                or [np.zeros(0, dtype=np.int64)])
+        pi, pos = t.pairs(pi, keys, x, y, leaf if leaf_mode else None)
+        return t.matches(len(b), pi, pos)
+
+    probe = arrow_udf(spatial_probe,
+                      T.ArrayType(_payload_type(prep.exploded.schema),
+                                  containsNull=False))
+    arg = F.struct(*[F.col(c).alias(k) for k, c in cols.items()])
+    return points.select("*", F.inline(probe(arg)))
 
 
 REFINE_MODES = ("auto", "subdivided")
@@ -232,11 +476,15 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     Returns points' columns + regions' columns (minus internals).
 
     One planner: when the prepared state table fits a broadcast and
-    refine_mode is 'auto', it broadcasts and the fact side stays MAP-ONLY.
-    Otherwise (refine_mode='subdivided', or an oversized state) the
-    candidates split on the interior flag: interior-cell candidates are
-    contained by construction and skip the refine, and only the boundary
-    band rides the (salted) hash exchange into the parity refine.
+    refine_mode is 'auto', the whole join is ONE map-only Arrow UDF over
+    the points' key/leaf/lng/lat columns against the probe table
+    prepare_regions broadcast (key, searchsorted probe, bbox prefilter,
+    parity refine of the boundary candidates, payload gather — see
+    _probe_join), then `inline`: no exchange and no join job.  Otherwise (refine_mode='subdivided', or an oversized
+    state) the candidates split on the interior flag: interior-cell
+    candidates are contained by construction and skip the refine, and
+    only the boundary band rides the (salted) hash exchange into the
+    parity refine.
 
     broadcast: has no effect; the plan follows from `fits_broadcast` and
     refine_mode alone.  Kept so existing callers keep working.
@@ -250,22 +498,24 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
 
     leaf_col: name of a pre-computed leaf-cell column on the points side
     (the 'embedded covering' ingest pattern, geography_interface.h:150-158);
-    when None the leaf id is computed here as a pure Column.
+    when None the leaf id is computed here (in NumPy on the broadcast
+    plan, as a pure Column on the shuffle plan).
 
     key_col: name of a pre-computed fixed-level MIXED join-key column
     (cell_join_key(cell_parent(leaf, level)) materialized at ingest).  The
     join then uses that stored attribute directly, so a fact table BUCKETED
-    by it joins with NO fact-side exchange — the 100 TB pattern: pay the
-    bucketing shuffle once at ingest, run every subsequent join/rerun
-    exchange-free on the fact side (only the small exploded dim shuffles to
-    the bucket count).  Requires `level` to match the ingest level;
-    mutually exclusive with salting (a bucketed fact cannot re-key — rely
-    on AQE skew handling or finer buckets instead).
+    by it joins with NO fact-side exchange on the shuffle plan too — the
+    100 TB pattern: pay the bucketing shuffle once at ingest, run every
+    subsequent join/rerun exchange-free on the fact side (only the small
+    exploded dim shuffles to the bucket count).  Requires `level` to match
+    the ingest level; mutually exclusive with salting (a bucketed fact
+    cannot re-key — rely on AQE skew handling or finer buckets instead).
 
     coords='leaf': CELL-CENTER corpus (reference compact tagged encoding,
     encoding.py CELL_CENTER) — the fact side carries ONLY the 8 B leaf id
     in `leaf_col` and the refine reconstructs the exact cell center; the
-    lng/lat columns are ignored and may be absent.
+    lng/lat columns are ignored and may be absent.  Requires leaf_col,
+    also with key_col (the key only finds the candidates).
 
     prefilter (shuffle plan only): broadcast the boundary cells' DISTINCT
     key set (8 B/cell — broadcastable even when nothing else about the dim
@@ -285,9 +535,10 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     if coords not in ("lnglat", "leaf"):
         raise ValueError(f"coords must be 'lnglat' or 'leaf': {coords!r}")
     leaf_mode = coords == "leaf"
-    if leaf_mode and leaf_col is None and key_col is None:
-        raise ValueError("coords='leaf' requires leaf_col (the corpus "
-                         "has no lng/lat to derive the leaf id from)")
+    if leaf_mode and leaf_col is None:
+        raise ValueError("coords='leaf' requires leaf_col, with or without "
+                         "key_col (the corpus has no lng/lat, and the "
+                         "refine reads the leaf-cell centre from leaf_col)")
     if key_col is not None:
         if level is None:
             raise ValueError("key_col requires level (the ingest key level)")
@@ -299,12 +550,18 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
                         region_geog=region_geog, region_id=region_id,
                         covering_col=covering_col)
 
+    if prep.fits_broadcast and refine_mode == "auto":
+        return _probe_join(points, prep, lng=lng, lat=lat, level=level,
+                           leaf_col=leaf_col, key_col=key_col,
+                           leaf_mode=leaf_mode)
+
     if key_col is not None:
         # use the STORED key attribute: Catalyst only recognizes a bucketed
         # scan's HashPartitioning when the join key IS that attribute (an
         # equivalent expression over `leaf` would not match)
-        pts = points.withColumn("_leaf", F.lit(None).cast("long")) \
-            .withColumn("_ckp", F.col(key_col))
+        pts = points.withColumn("_ckp", F.col(key_col))
+        if leaf_mode:
+            pts = pts.withColumn("_leaf", F.col(leaf_col))
     else:
         if leaf_col is not None:
             pts = points.withColumn("_leaf", F.col(leaf_col))
@@ -336,22 +593,10 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     refine = parity_refine_leaf_udf(F.col("_state"), F.col("_leaf")) \
         if leaf_mode else \
         parity_refine_udf(F.col("_state"), F.col(lng), F.col(lat))
-    drop_cols = ["_ckp", "_ck", "_full", "_state",
-                 "_xmin", "_ymin", "_xmax", "_ymax"] \
-        + (["_leaf"] if leaf_mode else [])
+    drop_cols = ["_ckp", *_STATE_COLS] + (["_leaf"] if leaf_mode else [])
 
     def cond(e, p, salted=False):
         return _join_cond(p, e, lng, lat, bbox=not leaf_mode, salted=salted)
-
-    if prep.fits_broadcast and refine_mode == "auto":
-        # state fits a broadcast: fact side is map-only (one scan, zero
-        # fact exchange); interior candidates pass with a NULL state blob
-        # (a null bitmap on the wire)
-        cand = pts.join(F.broadcast(ex), cond(ex, pts), "inner")
-        refined = cand.where(
-            F.when(F.col("_full"), F.lit(True))
-            .otherwise(F.coalesce(refine, F.lit(False))))
-        return refined.drop(*drop_cols)
 
     # FULL/BOUNDARY dim split (round 5): candidates matched through a
     # provably-interior covering cell are contained by construction, so
@@ -410,9 +655,9 @@ def spatial_count(points: DataFrame, regions, *,
                   count_col: str = "n") -> DataFrame:
     """Per-region contains COUNT: spatial_join(points, regions,
     level=level).groupBy(region_id).count(), one row per matched region
-    (`region_id`, `count_col`).  On a broadcastable state table the fact
-    side stays map-only and the rollup's partial (map-side) count makes
-    its one exchange carry at most a row per (map task, region).
+    (`region_id`, `count_col`).  On a broadcastable state table the join
+    is the map-only probe pass and the rollup's partial (map-side) count
+    makes its one exchange carry at most a row per (map task, region).
 
     regions: a PreparedRegions, or a dim DataFrame (prepared here; pass a
     PreparedRegions to amortize across calls).  The covering must be at
@@ -785,7 +1030,6 @@ class _DistanceDim:
     which a reused Python worker keeps across tasks."""
 
     def __init__(self, rows, rid_type):
-        import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
         ids = [r[0] for r in rows]
         self.rid = pa.array(ids, type=to_arrow_type(rid_type))
@@ -823,11 +1067,7 @@ class _DistanceDim:
         covering at radius_m holds the point's cell: one searchsorted
         probe of the sorted cell table."""
         lev, cells, owner = self._probe(radius_m)
-        q = C.parent(leaf, lev)
-        lo = np.searchsorted(cells, q, "left")
-        cnt = np.searchsorted(cells, q, "right") - lo
-        pi = np.repeat(np.arange(len(q)), cnt)
-        pos = lo[pi] + np.arange(len(pi)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        pi, pos = _sorted_probe(cells, C.parent(leaf, lev))
         return pi, owner[pos]
 
     def distances(self, xyz, ri):
@@ -951,8 +1191,6 @@ def _distance_dim(regions: DataFrame, region_geog: str, region_id: str):
 
 def _float_col(batch, name: str):
     """A RecordBatch column as float64 NumPy, nulls as NaN."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
     return pc.cast(batch.column(name), pa.float64()) \
         .to_numpy(zero_copy_only=False)
 
@@ -1044,7 +1282,6 @@ def dwithin_join(points: DataFrame, regions: DataFrame, radius_m: float, *,
     never missed; refine-only false positives are dropped."""
     bc = _distance_dim(regions, region_geog, region_id)
     if bc is not None:
-        import pyarrow as pa
         radius = float(radius_m)
         fields = [regions.schema[region_id]] + points.schema.fields
         if distance_col is not None:
@@ -1127,7 +1364,6 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
                             / max(float(init_radius_m), 1.0)))) + 2
     bc = _distance_dim(regions, region_geog, region_id)
     if bc is not None:
-        import pyarrow as pa
         radius = float(init_radius_m)
         src = points.select(point_id, lng, lat)
         schema = T.StructType(
@@ -1213,10 +1449,12 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
                             distance_col=distance_col)
         parts.append(fallback.select(*cols))
     if not parts:
+        # the broadcast plan's types: the dim's id type, a non-null rank
         return remaining.drop("_leaf").limit(0) \
-            .withColumn(region_id, F.lit(None).cast("long")) \
+            .withColumn(region_id, F.lit(None).cast(
+                regions.schema[region_id].dataType)) \
             .withColumn(distance_col, F.lit(None).cast("double")) \
-            .withColumn("knn_rank", F.lit(None).cast("int")).select(*cols)
+            .withColumn("knn_rank", F.lit(0)).select(*cols)
     out = parts[0]
     for part in parts[1:]:
         out = out.unionByName(part)

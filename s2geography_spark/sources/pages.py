@@ -19,6 +19,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import arrow_df
+
 GAZETTEER_SIZE = 240
 LANGS = ["en", "de", "fr", "es", "pt"]
 
@@ -38,7 +40,8 @@ def gazetteer_df(spark: SparkSession) -> DataFrame:
     lng, lat = gazetteer_lnglat(ks)
     rows = [(f"City{k}", int(k), float(x), float(y))
             for k, x, y in zip(ks, lng, lat)]
-    return spark.createDataFrame(rows, "city string, city_k int, lng double, lat double")
+    return arrow_df(spark, rows,
+                    "city string, city_k int, lng double, lat double")
 
 
 def pages_df(spark: SparkSession, n_pages: int) -> DataFrame:

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..core import ops
 from ..core.geog import Geog, to_wkb
+from . import arrow_df
 
 
 def region_corners(r: np.ndarray):
@@ -80,8 +81,8 @@ def regions_df(spark: SparkSession, n_regions: int = 96,
     embedded-covering checkpoint idea, geography_interface.h:150-158).
     Rows are memoized driver-side (deterministic)."""
     rows = _region_rows(n_regions, with_covering, covering_level)
-    return spark.createDataFrame(
-        rows,
+    return arrow_df(
+        spark, rows,
         "region_id long, lng0 double, lat0 double, lng1 double, lat1 double,"
         " geog binary, covering array<long>")
 
@@ -99,5 +100,6 @@ def special_regions_df(spark: SparkSession) -> DataFrame:
         (1000, "antimeridian", to_wkb(am), ops.s2_covering(am, max_cells=8)),
         (1001, "north_pole", to_wkb(pole), ops.s2_covering(pole, max_cells=8)),
     ]
-    return spark.createDataFrame(
-        rows, "region_id long, name string, geog binary, covering array<long>")
+    return arrow_df(
+        spark, rows, "region_id long, name string, geog binary, "
+        "covering array<long>")

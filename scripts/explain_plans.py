@@ -41,18 +41,22 @@ def main():
     joined = spatial_join(mentions, prep, level=6, leaf_col="leaf")
     agg = joined.groupBy("region_id").agg(F.count("*").alias("n"))
     sections.append((
-        "Flagship spatial join (cover join + parity refine + rollup)",
+        "Flagship spatial join (in-task probe + parity refine + rollup)",
         """What to verify:
-- ONE `BroadcastHashJoin ... BuildRight` on the mixed cell key (`_ck`) — the
-  fact side never shuffles for the join.
-- `Scan parquet` ReadSchema lists ONLY the needed columns (leaf, lng, lat +
-  user-selected) — column pruning reached the scan.
-- The polygon WKB appears nowhere in the plan: the broadcast side is the
-  prepared per-cell state table (`_full`, `_state` blob, `_ck`, bbox),
-  and `ArrowEvalPython` runs `parity_refine_udf` over the `_state` blob.
-- The bbox prefilter is the BroadcastHashJoin's `Join condition` — false
-  candidates die inside the join, before ArrowEvalPython (a post-join
-  .where() would be pulled above the Python node by UDF extraction).
+- ONE `ArrowEvalPython [spatial_probe(...)]` over the fact side and no
+  join operator: each task keys its batch from `leaf`, probes the
+  broadcast probe table (the prepared per-cell state table sorted by
+  `_ck`) with searchsorted, applies the bbox prefilter and runs the
+  parity refine on the boundary-cell candidates only; `Generate inline`
+  turns each point's matched payload list into rows.  No
+  `BroadcastExchange` and no `Exchange hashpartitioning(_ckp`: the fact
+  side never shuffles for the join.
+- `Scan parquet` ReadSchema lists only the fact columns the query reads
+  (here `leaf`, `lng`, `lat`): the UDF receives only the columns it
+  probes and refines with, so Catalyst prunes the rest.
+- The polygon WKB appears nowhere in the plan: the probe table carries
+  only the per-cell state (`_full`, `_state` blob, `_ck`, bbox) and the
+  region payload.
 - Exactly one `Exchange` in the whole query: the final rollup's
   hash aggregation (map-side partial_count first).""",
         plan_of(agg)))
@@ -143,10 +147,10 @@ def main():
         "Aggregate-pushdown contains count (spatial_count)",
         """What to verify:
 - It is the flagship join's plan plus the rollup: ONE
-  `BroadcastHashJoin` of the fact side against the prepared state table
-  (`_full`, `_state`, `_ck`, bbox), with the bbox test in its join
-  condition, and `ArrowEvalPython` running `parity_refine_udf` on the
-  candidates (interior-cell candidates pass with a null state).
+  `ArrowEvalPython [spatial_probe(...)]` over only the fact columns the
+  join reads (lng, lat), probing the broadcast probe table in-task — no
+  join operator, no broadcast exchange job, and the refine runs inside
+  the same task on the boundary-cell candidates only.
 - No left-SEMI join and no fact-side Exchange: the fact side is map-only.
 - The ONLY `Exchange hashpartitioning` is the region rollup, after a
   map-side `partial_count`, so it carries at most one row per (map task,

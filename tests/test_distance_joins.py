@@ -114,6 +114,23 @@ def test_dim_without_covering_cells(spark, points, dim, plan):
     assert knn.collect() == []
 
 
+def test_knn_empty_points_keep_the_dim_types(spark, plan):
+    """No points: both plans return no rows with the dim's id type (here
+    string) and a non-null rank, as for any other input."""
+    dim = spark.createDataFrame(
+        [("a", to_wkb(from_wkt("POINT (10 0)"))),
+         ("b", to_wkb(from_wkt("POINT (-10 0)")))],
+        "region_id string, geog binary")
+    none = spark.createDataFrame([], "pid long, lng double, lat double")
+    out = sj.knn_join_covering(none, dim, K, point_id="pid")
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in out.schema] == [
+        ("pid", "bigint", True), ("lng", "double", True),
+        ("lat", "double", True), ("region_id", "string", True),
+        ("distance_m", "double", True), ("knn_rank", "int", False)]
+    assert out.collect() == []
+
+
 def _ranked(rows):
     return {(r.pid, r.knn_rank): (r.region_id, r.distance_m) for r in rows}
 

@@ -77,9 +77,11 @@ def test_knn_covering_single_prelevel_job(spark):
 
 
 def test_bucketed_fact_join_no_fact_exchange(spark):
-    """key_col over a bucketed fact on the default plan: the state table
-    broadcasts, so the fact scan feeds the join with no exchange at all,
-    and the rows match brute force and the unbucketed join."""
+    """key_col over a bucketed fact on the default plan: the probe table
+    is broadcast, so the fact scan feeds one map-only probe pass with no
+    exchange at all, and the rows match brute force and the unbucketed
+    join.  coords='leaf' with key_col refines from leaf_col on both
+    plans, and without leaf_col it is refused up front."""
     from s2geography_spark.functions.cells import cell_join_key, cell_parent
     from s2geography_spark.operators.spatial_join import (leaf_cell_udf,
                                                           spatial_join)
@@ -99,7 +101,8 @@ def test_bucketed_fact_join_no_fact_exchange(spark):
                          key_col="ck")
         plan = _plan(j)
         assert "Exchange hashpartitioning(_ckp" not in plan, plan
-        assert "BroadcastHashJoin" in plan, plan
+        assert "spatial_probe(" in plan, plan
+        assert "BroadcastHashJoin" not in plan, plan
         ref = spatial_join(spark.table("_bkt_plan_test"),
                            regions_df(spark, 24, covering_level=6),
                            predicate="contains", broadcast=False, level=6,
@@ -108,6 +111,17 @@ def test_bucketed_fact_join_no_fact_exchange(spark):
         exp = {(r.lng, r.lat, r.region_id) for r in ref.collect()}
         assert got == exp == _box_pairs({(r.lng, r.lat) for r in
                                          pts.collect()}) and got
+        for mode in ("auto", "subdivided"):
+            leaf = spatial_join(spark.table("_bkt_plan_test"),
+                                regions_df(spark, 24, covering_level=6),
+                                level=6, key_col="ck", leaf_col="leaf",
+                                coords="leaf", refine_mode=mode)
+            assert {(r.lng, r.lat, r.region_id)
+                    for r in leaf.collect()} == exp, mode
+        with pytest.raises(ValueError, match="coords='leaf' requires leaf_col"):
+            spatial_join(spark.table("_bkt_plan_test"),
+                         regions_df(spark, 24, covering_level=6), level=6,
+                         key_col="ck", coords="leaf")
     finally:
         spark.sql("DROP TABLE IF EXISTS _bkt_plan_test")
 
@@ -148,12 +162,10 @@ def test_bucketed_fact_join_subdivided_no_fact_exchange(spark):
 
 def test_spatial_count_partial_agg_before_exchange(spark):
     """spatial_count's 100 TB claim, plan-asserted (r6 one-exchange
-    shape): both dim terms join through BROADCAST hash joins (fact side
-    map-only), the single shuffle Exchange is the final rollup whose
-    map-side partial_count bounds it at <= one row per (task, region),
-    and — because the boundary join is itself a broadcast — there is NO
-    semi-join stage left in the plan (it would protect an exchange that
-    does not exist)."""
+    shape): the join is the map-only probe pass (the spatial_probe Arrow
+    UDF, no join operator and no cell-key exchange), the single shuffle Exchange is
+    the final rollup whose map-side partial_count bounds it at <= one row
+    per (task, region), and there is NO semi-join stage in the plan."""
     from s2geography_spark.operators.spatial_join import spatial_count
     from s2geography_spark.sources.regions import regions_df
     pts = spark.createDataFrame([(1, 10.0, 10.0)],
@@ -162,8 +174,10 @@ def test_spatial_count_partial_agg_before_exchange(spark):
                         level=8)
     plan = _plan(cnt)
     assert "partial_count" in plan       # map-side combine before the rollup
-    assert "BroadcastHashJoin" in plan   # dim terms broadcast
-    assert "LeftSemi" not in plan        # redundant under broadcast state
+    assert "spatial_probe(" in plan      # the in-task probe of the dim
+    assert "BroadcastHashJoin" not in plan
+    assert "Exchange hashpartitioning(_ckp" not in plan
+    assert "LeftSemi" not in plan
     # exactly ONE shuffle exchange: the final region rollup
     n_exchange = sum(1 for ln in plan.splitlines()
                      if "Exchange hashpartitioning" in ln)

@@ -184,18 +184,38 @@ def test_spatial_join_shuffle_cogroup_matches(spark, mentions):
 
 
 def test_spatial_join_index_mode_matches(spark, mentions):
-    """The map-only candidate plan that replaced the index mode: the
-    distributed prepare's state table broadcasts (no fact-side exchange)
-    and matches brute force."""
+    """The map-only plan that replaced the index mode: the prepared state
+    table is probed in-task (the spatial_probe Arrow UDF, no fact-side
+    exchange) and matches brute force."""
     regions = regions_df(spark, 24)
     joined = spatial_join(mentions.limit(500), regions, predicate="contains",
                           broadcast=False)
     plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    assert "spatial_probe(" in plan
     assert "Exchange hashpartitioning(_ckp" not in plan
     got = {(r.url, r.mention_idx, r.region_id)
            for r in joined.select("url", "mention_idx", "region_id").collect()}
     assert got == brute_force_pairs(mentions.limit(500).collect(), 24)
+
+
+def test_probe_plan_prunes_fact_columns(spark, mentions, tmp_path):
+    """Only the columns the probe reads cross into Python on the broadcast
+    plan: a query that keeps the region id of a wide fact scans neither
+    the url nor the crawl timestamp, and gets the rows of the full join."""
+    path = str(tmp_path / "wide")
+    mentions.write.parquet(path)
+    wide = spark.read.parquet(path)
+    assert {"url", "warc_ts"} <= set(wide.columns)
+    joined = spatial_join(wide, regions_df(spark, 24))
+    q = joined.select("mention_idx", "region_id")
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert "spatial_probe(" in plan
+    read = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
+    assert read and all("url" not in ln and "warc_ts" not in ln
+                        for ln in read), read
+    got = sorted(tuple(r) for r in q.collect())
+    assert got and got == sorted((r.mention_idx, r.region_id)
+                                 for r in joined.collect())
 
 
 def test_boundary_band_broadcast_matches_shuffle(spark):
@@ -338,7 +358,7 @@ def test_subdivided_broadcast_mode(spark, mentions):
                       refine_mode="subdivided")
          .select(*key).collect()}
     assert a == b and len(a) > 0
-    prep.fits_broadcast = False
+    prep.probe = None
     sh = spatial_join(mentions, prep, predicate="contains")
     assert "ShuffledHashJoin" in \
         sh._jdf.queryExecution().executedPlan().toString()
@@ -479,7 +499,7 @@ def test_prepared_subdivided_regions(spark, mentions):
     with pytest.raises(ValueError, match="refine_mode must be one of"):
         spatial_join(mentions, prep, broadcast=False, refine_mode="rows")
     # an over-guard state makes auto take the shuffling form
-    prep.fits_broadcast = False
+    prep.probe = None
     got_fb = {tuple(r) for r in
               spatial_join(mentions, prep, predicate="contains",
                            broadcast=False, refine_mode="auto")
@@ -491,8 +511,8 @@ def test_spatial_count_matches_join_rollup(spark, mentions):
     """spatial_count (aggregate pushdown: full-cell mass via per-cell
     counts, boundary band via parity refine) must equal the join-then-
     rollup counts exactly, on the corpus and on antimeridian/pole
-    regions, in at most three Spark jobs per call on a prepared dim (the
-    state broadcast, the rollup's map stage and its result)."""
+    regions, in at most two Spark jobs per call on a prepared dim (the
+    rollup's map stage, which probes the dim in-task, and its result)."""
     from s2geography_spark.core import ops
     from s2geography_spark.core.geog import from_wkb
     from s2geography_spark.operators.spatial_join import (prepare_regions,
@@ -516,9 +536,9 @@ def test_spatial_count_matches_join_rollup(spark, mentions):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert got_p == exp
     jobs = sc.statusTracker().getJobIdsForGroup("s2_spatial_count_jobs")
-    assert 0 < len(jobs) <= 3, len(jobs)
+    assert 0 < len(jobs) <= 2, len(jobs)
     # non-broadcastable state falls back to the shuffle-join boundary term
-    prep.fits_broadcast = False
+    prep.probe = None
     got_s = {(r.region_id, r.n) for r in
              spatial_count(mentions, prep, level=8).collect()}
     assert got_s == exp
@@ -579,3 +599,94 @@ def test_knn_join_custom_region_id(spark):
                              region_id="rid", init_radius_m=1000.0,
                              max_rounds=1).collect()}
     assert cov == dense
+
+
+@pytest.mark.parametrize("guard", ["over", "skewed"])
+def test_state_table_guard_on_the_collect(spark, mentions, monkeypatch,
+                                          guard):
+    """prepare_regions collects the state table for the in-task probe only
+    within the in-process guard.  All the dim's cells in one partition
+    pass that partition's even share, so the exact guard decides: one
+    cell over the guard and the driver only ever sees the over-share
+    marker rows, and the join takes the boundary-band shuffle; exactly at
+    the guard the table is collected and probed.  Both give the rows of
+    the unguarded broadcast plan."""
+    from s2geography_spark.operators import spatial_join as sj
+    key = ["url", "mention_idx", "region_id"]
+    regions = regions_df(spark, 24)
+    exp = {tuple(r) for r in
+           spatial_join(mentions, regions).select(*key).collect()}
+    skewed = regions.repartition(4, F.lit(0))
+    n = sj.prepare_regions(spark, skewed).state_cells
+    monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS",
+                        n - 1 if guard == "over" else n)
+    seen = []
+    to_arrow = type(regions).toArrow
+
+    def spy(df):
+        t = to_arrow(df)
+        seen.append(t)
+        return t
+
+    monkeypatch.setattr(type(regions), "toArrow", spy)
+    prep = sj.prepare_regions(spark, skewed)
+    assert prep.state_cells == n
+    plan = spatial_join(mentions, prep)._jdf.queryExecution() \
+        .executedPlan().toString()
+    markers = [t.num_rows == t.column("_ck").null_count for t in seen]
+    if guard == "over":
+        assert not prep.fits_broadcast and prep.probe is None
+        assert markers and all(markers)
+        assert "spatial_probe(" not in plan
+        assert "Exchange hashpartitioning(_ckp" in plan
+    else:
+        assert prep.fits_broadcast and markers == [True, False]
+        assert seen[-1].num_rows == n
+        assert "spatial_probe(" in plan
+    got = {tuple(r) for r in
+           spatial_join(mentions, prep).select(*key).collect()}
+    assert got == exp and len(got) > 0
+
+
+def test_probe_guard_counts_the_payload(spark, mentions, monkeypatch):
+    """The in-process guard on the probe table counts the region payload
+    with the state blobs, since every Python worker holds the whole
+    table: a wide payload column pushes a dim that fits without it onto
+    the shuffle plan, with the same rows."""
+    from s2geography_spark.operators import spatial_join as sj
+    regions = regions_df(spark, 24)
+    narrow = sj.prepare_regions(spark, regions)
+    monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_BYTES",
+                        2 * narrow.state_bytes)
+    assert sj.prepare_regions(spark, regions).fits_broadcast
+    wide = sj.prepare_regions(
+        spark, regions.withColumn("doc", F.repeat(F.lit("x"), 10_000)))
+    assert not wide.fits_broadcast
+    assert wide.state_bytes > 2 * narrow.state_bytes
+    key = ["url", "mention_idx", "region_id"]
+    got = {tuple(r) for r in
+           spatial_join(mentions, wide).select(*key).collect()}
+    assert got and got == {tuple(r) for r in spatial_join(
+        mentions, narrow).select(*key).collect()}
+
+
+def test_sources_are_arrow_relations(spark):
+    """The region dims and the gazetteer are local relations built from
+    Arrow, not Python RDDs (each scan of an ExistingRDD starts a Python
+    worker), with the DDL schemas they have always had."""
+    from pyspark.sql import types as T
+    dim = ("region_id long, lng0 double, lat0 double, lng1 double, "
+           "lat1 double, geog binary, covering array<long>")
+    for df, ddl in [
+            (regions_df(spark, 8), dim),
+            (regions_df(spark, 8, covering_level=6), dim),
+            (regions_df(spark, 4, with_covering=False), dim),
+            (special_regions_df(spark),
+             "region_id long, name string, geog binary, "
+             "covering array<long>"),
+            (gazetteer_df(spark),
+             "city string, city_k int, lng double, lat double")]:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+        assert df.schema == T.StructType.fromDDL(ddl)
+        assert df.count() > 0
