@@ -141,10 +141,11 @@ def face_uv_to_xyz(face, u, v):
     v = np.asarray(v, dtype=np.float64)
     one = np.ones(np.broadcast(face, u, v).shape, dtype=np.float64)
     u, v = np.broadcast_to(u, one.shape), np.broadcast_to(v, one.shape)
-    conds = [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5]
-    x = np.select(conds, [one, -u, -u, -one, v, v])
-    y = np.select(conds, [u, one, -v, -v, -one, u])
-    z = np.select(conds, [v, v, one, -u, -u, -one])
+    # one pick per element (an invalid face, 6 or 7, gets the zeros)
+    zero = np.zeros_like(one)
+    x = np.choose(face, [one, -u, -u, -one, v, v, zero], mode="clip")
+    y = np.choose(face, [u, one, -v, -v, -one, u, zero], mode="clip")
+    z = np.choose(face, [v, v, one, -u, -u, -one, zero], mode="clip")
     return x, y, z
 
 

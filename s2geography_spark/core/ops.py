@@ -1045,91 +1045,183 @@ def s2_cell_from_point(g: Optional[Geog]) -> Optional[int]:
     return int(ids.view(np.int64)[0])
 
 
+_FACES = np.array([(f << 61) | (1 << 60) for f in range(6)], dtype=np.uint64)
+
+
+class RaggedEdges:
+    """The edge sets of many owners in one set of arrays: owner i's edges
+    run a[lo[i]:lo[i] + cnt[i]] -> b[...], each with a bounding cap and
+    its great circle's plane for the cell prefilter (near_cells)."""
+
+    def __init__(self, pairs):
+        """pairs: one (a, b) edge-endpoint array pair per owner."""
+        self.cnt = np.array([len(a) for a, _ in pairs], dtype=np.int64)
+        self.lo = np.cumsum(self.cnt) - self.cnt
+        self.a = np.vstack([a for a, _ in pairs] + [np.zeros((0, 3))])
+        self.b = np.vstack([b for _, b in pairs] + [np.zeros((0, 3))])
+        self.caps = sphere.arc_caps(self.a, self.b)
+        self.planes = sphere.arc_planes(self.a, self.b)
+
+    def near_cells(self, owner, quads):
+        """Yield, CHUNK cell edges at a time, the (cell, edge) index pairs of
+        each cell (quads: the (m, 4, 3) vertices; owner: its owner) and
+        every edge of its owner that may touch it.  A pair left out has
+        caps apart by more than CAP_SLACK, the cell clear of the edge's
+        great circle and the edge clear of the cell edges' great circles:
+        no edge distance within CAP_SLACK, no vertex of the edge in the
+        cell, and no arcs_cross, not even by rounding."""
+        qb = quads[:, [1, 2, 3, 0]]
+        cc, cr = sphere.convex_caps(quads)
+        qn, qs = sphere.arc_planes(quads, qb)
+        (ec, er), (en, es) = self.caps, self.planes
+        near_plane = sphere.near_plane
+        chunk = sphere.CHUNK // 4
+        for s0 in range(0, len(quads), chunk):
+            o = owner[s0:s0 + chunk]
+            qi, ei = sphere.ragged_rows(self.lo[o], self.cnt[o])
+            qi = qi + s0
+            near = sphere.caps_meet(cc[qi], cr[qi], ec[ei], er[ei])
+            # apart, a pair still crosses by rounding where a cell corner
+            # lies on the edge's circle or an endpoint on a cell edge's:
+            # a cap test against the circle, then the points themselves
+            f = np.flatnonzero(~near)
+            q, e = qi[f], ei[f]
+            g = near_plane(cc[q], en[e], cr[q] + es[e])
+            q, e = q[g], e[g]
+            near[f[g]] = near_plane(quads[q], en[e][:, None],
+                                    es[e][:, None]).any(axis=1)
+            f = np.flatnonzero(~near)
+            q, e = qi[f], ei[f]
+            g = near_plane(ec[e][:, None], qn[q],
+                           er[e][:, None] + qs[q]).any(axis=1)
+            q, e = q[g], e[g]
+            near[f[g]] = (near_plane(self.a[e][:, None], qn[q], qs[q])
+                          | near_plane(self.b[e][:, None], qn[q], qs[q])
+                          ).any(axis=1)
+            yield qi[near], ei[near]
+
+    def contains(self, owner, pts, model):
+        """sphere.contains_points of each point against its owner's edges
+        (ring edges), model 'open' or 'closed', with identical answers:
+        the same winding terms and sum (winding_number_ragged), and the
+        same boundary test, run only where it can flip the answer and
+        near an edge.  Each distinct (owner, point) is tested once."""
+        order = np.lexsort((pts[:, 2], pts[:, 1], pts[:, 0], owner))
+        ps, os_ = pts[order], owner[order]
+        first = np.ones(len(order), dtype=bool)
+        first[1:] = (os_[1:] != os_[:-1]) | (ps[1:] != ps[:-1]).any(axis=1)
+        u = order[first]
+        p, lo, cnt = pts[u], self.lo[owner[u]], self.cnt[owner[u]]
+        inside = sphere.winding_number_ragged(p, lo, cnt, self.a, self.b) > 0
+        opened = model == "open"
+        cand = np.flatnonzero(inside == opened)
+        for s0 in range(0, len(cand), sphere.CHUNK):
+            pi = cand[s0:s0 + sphere.CHUNK]
+            qi, ei = sphere.ragged_rows(lo[pi], cnt[pi])
+            ec, er = self.caps[0][ei], self.caps[1][ei]
+            r = np.flatnonzero(sphere.caps_meet(p[pi[qi]], 0.0, ec, er))
+            if len(r):
+                qi, ei = qi[r], ei[r]
+                onb = sphere.point_arc_distance(p[pi[qi]], self.a[ei],
+                                                self.b[ei]) <= 1e-15
+                inside[pi[qi[onb]]] = not opened
+        out = np.empty(len(pts), dtype=bool)
+        out[order] = inside[np.cumsum(first) - 1]
+        return out
+
+
 class _CovererState:
-    """Per-geography precomputed state for the coverer's cell tests
-    (leaf cells of vertices, edge arrays) — computed once per covering."""
+    """The coverer's cell tests over many geographies at once: each
+    geography's vertex leaf cells, edges and polygon ring edges, computed
+    once per covering and concatenated by owner, so that ONE call tests
+    every (owner, cell) pair."""
 
-    def __init__(self, g: Geog):
-        v = g.all_vertices_xyz()
-        self.empty = len(v) == 0
-        if self.empty:
-            return
-        self.leafs = C.from_xyz(v[:, 0], v[:, 1], v[:, 2])
-        self.ea, self.eb = g.all_edges_xyz()
-        self.ra, self.rb = g.ring_edges_xyz()
+    def __init__(self, geogs):
+        verts = [g.all_vertices_xyz() for g in geogs]
+        vown = np.repeat(np.arange(len(geogs)), [len(v) for v in verts])
+        v = np.vstack(verts) if verts else np.zeros((0, 3))
+        leafs = C.from_xyz(v[:, 0], v[:, 1], v[:, 2])
+        # (owner, leaf) as one sortable key: owner * (V + 1) + leaf rank
+        self._uleaf = np.unique(leafs)
+        self._kstride = len(self._uleaf) + 1
+        self._vkey = np.sort(vown * self._kstride
+                             + np.searchsorted(self._uleaf, leafs))
+        self.edges = RaggedEdges([g.all_edges_xyz() for g in geogs])
+        self.rings = RaggedEdges([g.ring_edges_xyz() for g in geogs])
 
-    def may_intersect_batch(self, cids: np.ndarray) -> np.ndarray:
-        """Vectorized cell/geography intersection test over many cells."""
+    def vertex_in(self, owner, cids):
+        """A vertex of the owner lies in the cell (its leaf id in range)."""
+        base = owner * self._kstride
+        lo = base + np.searchsorted(self._uleaf, C.range_min(cids), "left")
+        hi = base + np.searchsorted(self._uleaf, C.range_max(cids), "right")
+        return np.searchsorted(self._vkey, hi) > np.searchsorted(self._vkey, lo)
+
+    def crosses(self, owner, quads):
+        """An edge of the owner crosses an edge of the cell (quads: the
+        cells' (m, 4, 3) vertices): arcs_cross over the near pairs."""
+        out = np.zeros(len(quads), dtype=bool)
+        e = self.edges
+        for qi, ei in e.near_cells(owner, quads):
+            if not len(qi):
+                continue
+            hit = sphere.arcs_cross(
+                quads[qi], quads[qi][:, [1, 2, 3, 0]], e.a[ei][:, None, :],
+                e.b[ei][:, None, :]).any(axis=1)
+            out[qi[hit]] = True
+        return out
+
+    def corners_in(self, owner, quads, model):
+        """(m, 4): each cell corner inside a polygon of the owner."""
+        return self.rings.contains(np.repeat(owner, 4), quads.reshape(-1, 3),
+                                   model).reshape(-1, 4)
+
+    def classify(self, owner, cids):
+        """Per (owner, cell) pair: 0 disjoint, 1 intersecting, 2 interior
+        (no vertex inside, no edge crossing and all 4 corners inside the
+        closed polygons: the boundary does not enter the cell, so every
+        descendant intersects too).  The corners are tested only on the
+        cells the vertex and crossing tests leave undecided."""
+        owner = np.asarray(owner, dtype=np.int64)
         cids = np.asarray(cids, dtype=np.uint64)
-        n = len(cids)
-        if self.empty or n == 0:
-            return np.zeros(n, dtype=bool)
-        rmin = C.range_min(cids)
-        rmax = C.range_max(cids)
-        # 1) any vertex's leaf cell inside each cell's range: (n, v)
-        hit = ((self.leafs[None, :] >= rmin[:, None])
-               & (self.leafs[None, :] <= rmax[:, None])).any(axis=1)
-        todo = ~hit
-        if todo.any():
-            quads = C.cell_vertices_xyz(cids[todo])  # (m, 4, 3)
-            qa = quads
-            qb = quads[:, [1, 2, 3, 0]]
-            sub = np.zeros(int(todo.sum()), dtype=bool)
-            # 2) any geog edge crosses a cell edge: (m, 4, e)
-            if len(self.ea):
-                crosses = sphere.arcs_cross(
-                    qa[:, :, None, :], qb[:, :, None, :],
-                    self.ea[None, None, :, :], self.eb[None, None, :, :])
-                sub |= crosses.any(axis=(1, 2))
-            # 3) any cell corner inside a polygon of g
-            if len(self.ra):
-                corners = quads.reshape(-1, 3)
-                inside = sphere.contains_points(
-                    corners, self.ra, self.rb, model="closed").reshape(-1, 4)
-                sub |= inside.any(axis=1)
-            hit[np.where(todo)[0]] = sub
-        return hit
+        out = self.vertex_in(owner, cids).astype(np.int8)
+        todo = np.flatnonzero(out == 0)
+        if len(todo):
+            quads = C.cell_vertices_xyz(cids[todo])         # (m, 4, 3)
+            out[todo] = self.crosses(owner[todo], quads)
+            und = out[todo] == 0
+            if und.any():
+                n_in = self.corners_in(owner[todo][und], quads[und],
+                                       "closed").sum(axis=1)
+                out[todo[und]] = np.where(n_in == 4, 2, n_in > 0)
+        return out
 
-    def may_intersect(self, cid: int) -> bool:
-        return bool(self.may_intersect_batch(np.array([cid], dtype=np.uint64))[0])
+    def may_intersect_batch(self, cids):
+        """Vectorized cell/geography intersection test over many cells of
+        the first (usually only) geography."""
+        return self.classify(np.zeros(len(cids), dtype=np.int64), cids) > 0
 
-    def fully_inside_batch(self, cids: np.ndarray) -> np.ndarray:
+    def fully_inside_batch(self, cids):
         """Vectorized 'cell entirely inside the region interior' test:
         all 4 corners strictly inside, no region edge crosses a cell edge,
         and no region vertex inside the cell (a hole or island boundary
         inside the cell would otherwise be missed)."""
         cids = np.asarray(cids, dtype=np.uint64)
-        n = len(cids)
-        if self.empty or n == 0 or len(self.ra) == 0:
-            return np.zeros(n, dtype=bool)
-        quads = C.cell_vertices_xyz(cids)  # (n, 4, 3)
-        corners_in = sphere.contains_points(
-            quads.reshape(-1, 3), self.ra, self.rb,
-            model="open").reshape(-1, 4).all(axis=1)
-        out = corners_in.copy()
-        if out.any() and len(self.ea):
-            qa = quads[out]
-            qb = qa[:, [1, 2, 3, 0]]
-            crosses = sphere.arcs_cross(
-                qa[:, :, None, :], qb[:, :, None, :],
-                self.ea[None, None, :, :], self.eb[None, None, :, :]
-            ).any(axis=(1, 2))
-            out[np.where(out)[0][crosses]] = False
-        if out.any():
-            rmin = C.range_min(cids[out])
-            rmax = C.range_max(cids[out])
-            vert_in = ((self.leafs[None, :] >= rmin[:, None])
-                       & (self.leafs[None, :] <= rmax[:, None])).any(axis=1)
-            out[np.where(out)[0][vert_in]] = False
+        owner = np.zeros(len(cids), dtype=np.int64)
+        quads = C.cell_vertices_xyz(cids)
+        out = self.corners_in(owner, quads, "open").all(axis=1)
+        i = np.flatnonzero(out)
+        out[i[self.crosses(owner[i], quads[i])]] = False
+        i = np.flatnonzero(out)
+        out[i[self.vertex_in(owner[i], cids[i])]] = False
         return out
 
 
-def _cell_may_intersect_geog(cid: int, g: Geog) -> bool:
-    """Exact-ish cell/geography intersection test (one-shot form)."""
-    return _CovererState(g).may_intersect(cid)
-
-
 MAX_COVER_LEVEL = 20
+
+
+def _point_set(g: Geog) -> bool:
+    """The point fast path: <= 32 points and no edges."""
+    return not g.lines and not g.polys and len(g.points) <= 32
 
 
 def s2_covering(g: Optional[Geog], max_cells: int = 8,
@@ -1142,17 +1234,16 @@ def s2_covering(g: Optional[Geog], max_cells: int = 8,
         return None
     if g.is_empty():
         return []
-    if not g.lines and not g.polys and len(g.points) <= 32:
+    if _point_set(g):
         ids = C.from_lnglat(g.points[:, 0], g.points[:, 1])
         return sorted(set(int(i) for i in ids.view(np.int64)))
 
-    state = _CovererState(g)
+    state = _CovererState([g])
     # seed with faces that may intersect
-    faces = np.array([(f << 61) | (1 << 60) for f in range(6)], dtype=np.uint64)
-    face_hits = state.may_intersect_batch(faces)
+    face_hits = state.may_intersect_batch(_FACES)
     heap = []  # biggest cells first => level asc
     seq = 0
-    for fc in faces[face_hits]:
+    for fc in _FACES[face_hits]:
         heapq.heappush(heap, (0, seq, int(fc)))
         seq += 1
     result = []
@@ -1178,33 +1269,70 @@ def s2_covering(g: Optional[Geog], max_cells: int = 8,
     return sorted(np.array(sorted(result), dtype=np.uint64).view(np.int64).tolist())
 
 
-def s2_covering_fixed_level(g: Optional[Geog], level: int) -> Optional[List[int]]:
-    """Covering with every cell at EXACTLY `level`, computed breadth-first:
-    the whole frontier's children are tested with ONE vectorized
-    may_intersect_batch per level instead of the adaptive coverer's
-    4-cell-at-a-time heap steps.  For a ~200-cell level-8 covering this is
-    ~100x fewer Python-loop iterations (the adaptive path cost 12.7 s for
-    96 regions; this one is sub-second), and the result is the same cell
-    set: descendants of intersecting cells that themselves intersect."""
-    if g is None:
-        return None
-    if g.is_empty():
-        return []
-    if not g.lines and not g.polys and len(g.points) <= 32:
-        ids = C.from_lnglat(g.points[:, 0], g.points[:, 1])
-        cells = np.unique(C.parent(ids, level))
-        return sorted(cells.view(np.int64).tolist())
-    state = _CovererState(g)
-    frontier = np.array([(f << 61) | (1 << 60) for f in range(6)],
-                        dtype=np.uint64)
-    frontier = frontier[state.may_intersect_batch(frontier)]
-    for _ in range(level):
-        if len(frontier) == 0:
+def fixed_level_coverings(geogs, level: int) -> List[Optional[List[int]]]:
+    """Coverings with every cell at EXACTLY `level`, of many geographies
+    in one breadth-first pass (the fixed-level analog of coverings.cc:
+    235-272, which covers each region once at prepare time): per level,
+    every geography's frontier children are classified together, one
+    vertex test, one crossing test and one corner test over all
+    (geography, cell) pairs, and an interior cell's descendants at
+    `level` are emitted by cell-id arithmetic, untested.  The cell set is
+    the descendants of intersecting cells that themselves intersect.
+    None -> None, EMPTY -> [], point sets (<= 32 points, no edges) -> the
+    distinct parents of their leaf cells.  Signed int64 ids, sorted."""
+    if not 0 <= level <= C.MAX_LEVEL:
+        raise ValueError(f"covering level {level} outside 0..{C.MAX_LEVEL}")
+    out: List[Optional[List[int]]] = [None] * len(geogs)
+    todo = []
+    for i, g in enumerate(geogs):
+        if g is None:
+            continue
+        if g.is_empty():
+            out[i] = []
+        elif _point_set(g):
+            ids = C.from_lnglat(g.points[:, 0], g.points[:, 1])
+            out[i] = np.unique(C.parent(ids, level).view(np.int64)).tolist()
+        else:
+            todo.append(i)
+    if not todo:
+        return out
+    state = _CovererState([geogs[i] for i in todo])
+    owner = np.repeat(np.arange(len(todo)), len(_FACES))
+    cells = np.tile(_FACES, len(todo))
+    res_o, res_c = [], []
+    for lev in range(level + 1):
+        cls = state.classify(owner, cells)
+        inner = cls == 2
+        if inner.any():
+            # all 4^(level - lev) descendants of each interior cell
+            step = C.lsb_for_level(level)
+            k = np.arange(4 ** (level - lev), dtype=np.uint64)
+            res_c.append((C.range_min(cells[inner])[:, None]
+                          + (step - np.uint64(1))
+                          + np.uint64(2) * step * k).ravel())
+            res_o.append(np.repeat(owner[inner], len(k)))
+        edge = cls == 1
+        if lev == level:
+            res_o.append(owner[edge])
+            res_c.append(cells[edge])
             break
-        kids = C.child(np.repeat(frontier, 4),
-                       np.tile(np.arange(4), len(frontier)))
-        frontier = kids[state.may_intersect_batch(kids)]
-    return sorted(frontier.view(np.int64).tolist())
+        owner = np.repeat(owner[edge], 4)
+        cells = C.child(np.repeat(cells[edge], 4),
+                        np.tile(np.arange(4), int(edge.sum())))
+    o = np.concatenate(res_o)
+    c = np.concatenate(res_c).view(np.int64)
+    order = np.lexsort((c, o))
+    bounds = np.searchsorted(o[order], np.arange(len(todo) + 1))
+    c = c[order]
+    for j, i in enumerate(todo):
+        out[i] = c[bounds[j]:bounds[j + 1]].tolist()
+    return out
+
+
+def s2_covering_fixed_level(g: Optional[Geog], level: int) -> Optional[List[int]]:
+    """Covering of one geography with every cell at EXACTLY `level`:
+    fixed_level_coverings with one input."""
+    return fixed_level_coverings([g], level)[0]
 
 
 def s2_interior_covering(g: Optional[Geog], max_cells: int = 8,
@@ -1218,14 +1346,13 @@ def s2_interior_covering(g: Optional[Geog], max_cells: int = 8,
         return None
     if g.is_empty() or not any(rings for rings in g.polys):
         return []
-    state = _CovererState(g)
-    faces = np.array([(f << 61) | (1 << 60) for f in range(6)], dtype=np.uint64)
-    inter = state.may_intersect_batch(faces)
-    full0 = state.fully_inside_batch(faces)
-    result = [int(c) for c in faces[full0]]
+    state = _CovererState([g])
+    inter = state.may_intersect_batch(_FACES)
+    full0 = state.fully_inside_batch(_FACES)
+    result = [int(c) for c in _FACES[full0]]
     heap = []
     seq = 0
-    for fc in faces[inter & ~full0]:
+    for fc in _FACES[inter & ~full0]:
         heapq.heappush(heap, (0, seq, int(fc)))
         seq += 1
     while heap and len(result) < max_cells:

@@ -143,17 +143,21 @@ def winding_number(pts, ring_edges_a, ring_edges_b):
     Method: sum of signed tangent-plane turn angles — equals 2*pi*winding for
     closed rings.  O(n*m) vectorized; callers chunk for memory.
     """
-    p = pts[:, None, :]  # (n, 1, 3)
-    a = ring_edges_a[None, :, :]  # (1, m, 3)
-    b = ring_edges_b[None, :, :]
+    turns = turn_angles(pts[:, None, :], ring_edges_a[None, :, :],
+                        ring_edges_b[None, :, :])  # (n, m)
+    w = turns.sum(axis=1) / (2.0 * np.pi)
+    return np.rint(w).astype(np.int64)
+
+
+def turn_angles(p, a, b):
+    """Signed tangent-plane turn angle at p of each directed edge a -> b
+    (the terms of winding_number). Broadcasts."""
     da = a - dot(a, p)[..., None] * p
     db = b - dot(b, p)[..., None] * p
     cross_ab = np.cross(da, db)
     s = dot(cross_ab, p)
     c = dot(da, db)
-    turns = np.arctan2(s, c)  # (n, m)
-    w = turns.sum(axis=1) / (2.0 * np.pi)
-    return np.rint(w).astype(np.int64)
+    return np.arctan2(s, c)
 
 
 def point_on_boundary(pts, edges_a, edges_b, eps=1e-15):
@@ -165,8 +169,13 @@ def point_on_boundary(pts, edges_a, edges_b, eps=1e-15):
     return (d <= eps).any(axis=1)
 
 
+# points per batch of the (point x edge) kernels, which bounds their
+# temporaries; the ragged ones batch their (point, edge) pairs the same way
+CHUNK = 4096
+
+
 def contains_points(pts, edges_a, edges_b, model="semi_open", eps=1e-15,
-                    chunk=4096):
+                    chunk=CHUNK):
     """Point-in-polygon for many points vs one polygon's ring edge set.
 
     model: 'open' boundary excluded / 'closed' boundary included /
@@ -190,6 +199,99 @@ def contains_points(pts, edges_a, edges_b, model="semi_open", eps=1e-15,
             onb = point_on_boundary(pts[sl], edges_a, edges_b, eps)
             inside = inside | onb
         out[sl] = inside
+    return out
+
+
+# ---------------------------------------------------------------------------
+# bounding caps (a conservative prefilter before the exact kernels)
+# ---------------------------------------------------------------------------
+
+# slack of the cap tests, radians: the exact kernels' rounding can report
+# a boundary contact of arcs this far apart (1e-15 / arc length for arcs
+# down to ~1e-9 rad), so caps this close are still tested
+CAP_SLACK = 1e-6
+# bound on the rounding error of sign()'s determinant of unit vectors,
+# with a 10x margin
+DET_EPS = 1e-14
+
+
+def arc_caps(a, b):
+    """(centre, angular radius) of a cap holding each arc a -> b: its
+    normalized midpoint and half its length; radius pi where a and b are
+    nearly antipodal (no reliable midpoint)."""
+    m = a + b
+    n = np.linalg.norm(m, axis=-1)
+    ok = n > CAP_SLACK
+    centre = m / np.where(ok, n, 1.0)[..., None]
+    return centre, np.where(ok, 0.5 * angle(a, b), np.pi)
+
+
+def convex_caps(v):
+    """(centre, angular radius) of a cap holding each convex spherical
+    polygon v (..., k, 3), radius < pi/2: the normalized vertex sum and
+    the largest angle to a vertex (such a cap is convex, so it holds the
+    polygon's geodesic hull)."""
+    centre = normalize(v.sum(axis=-2))
+    return centre, angle(centre[..., None, :], v).max(axis=-1)
+
+
+def caps_meet(c1, r1, c2, r2):
+    """Whether caps (c1, r1) and (c2, r2) may touch, conservatively: the
+    chord between the centres against the sum of the radii, CAP_SLACK
+    added.  False guarantees the exact kernels find no crossing and no
+    boundary contact between what the caps hold."""
+    d = np.linalg.norm(c1 - c2, axis=-1)
+    return d <= 2.0 * np.sin(np.minimum(r1 + r2, np.pi) / 2.0) + CAP_SLACK
+
+
+def arc_planes(a, b):
+    """(unit normal, slack) of each arc's great circle: the slack, in
+    radians, is how far off the circle a point may lie and still get a
+    rounded-wrong sign() against the arc (CAP_SLACK added; pi for a
+    degenerate arc)."""
+    n = np.cross(a, b)
+    nn = np.linalg.norm(n, axis=-1)
+    with np.errstate(divide="ignore"):
+        slack = np.where(nn > 0, DET_EPS / nn + CAP_SLACK, np.pi)
+    return n / np.where(nn > 0, nn, 1.0)[..., None], slack
+
+
+def near_plane(p, n, slack):
+    """Whether the point p lies within `slack` radians of the great circle
+    with unit normal n."""
+    return np.abs(dot(p, n)) <= np.sin(np.minimum(slack, np.pi / 2))
+
+
+def ragged_rows(lo, cnt):
+    """Flatten ragged (query, item) pairs: query i owns the items lo[i] ..
+    lo[i] + cnt[i] - 1.  Returns the query index and the item index of
+    every pair, queries in order."""
+    cnt = np.asarray(cnt, dtype=np.int64)
+    qi = np.repeat(np.arange(len(cnt)), cnt)
+    item = np.repeat(np.asarray(lo, dtype=np.int64) - (np.cumsum(cnt) - cnt),
+                     cnt) + np.arange(len(qi))
+    return qi, item
+
+
+def winding_number_ragged(pts, lo, cnt, edges_a, edges_b):
+    """winding_number for many points, each against its own edge run:
+    point i against edges lo[i] .. lo[i] + cnt[i] - 1 (0 without edges).
+    Per point the same terms and the same pairwise sum as
+    winding_number, so the answers are identical."""
+    n = len(pts)
+    out = np.zeros(n, dtype=np.int64)
+    for s0 in range(0, n, CHUNK):
+        sl = slice(s0, min(s0 + CHUNK, n))
+        c = cnt[sl]
+        qi, ei = ragged_rows(lo[sl], c)
+        if len(qi) == 0:
+            continue
+        has = c > 0
+        w = np.zeros(len(c))
+        w[has] = np.add.reduceat(
+            turn_angles(pts[sl][qi], edges_a[ei], edges_b[ei]),
+            (np.cumsum(c) - c)[has])
+        out[sl] = np.rint(w / (2.0 * np.pi)).astype(np.int64)
     return out
 
 

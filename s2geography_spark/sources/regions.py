@@ -53,23 +53,22 @@ def _region_rows(n_regions: int, with_covering: bool, covering_level=None):
     if key not in _ROWS_CACHE:
         rs = np.arange(n_regions)
         lng0, lat0, lng1, lat1 = region_corners(rs)
-        rows = []
-        for i in range(n_regions):
-            g = densified_rect(float(lng0[i]), float(lat0[i]),
-                               float(lng1[i]), float(lat1[i]))
-            if not with_covering:
-                cov = None
-            elif covering_level is None:
-                cov = ops.s2_covering(g, max_cells=8)
-            else:
-                # fixed-level covering: every cell at exactly covering_level
-                # (single-key join: the point side emits one parent cell);
-                # breadth-first batched coverer — the adaptive heap costs
-                # ~100x more Python iterations at level 8
-                cov = ops.s2_covering_fixed_level(g, covering_level)
-            rows.append((int(rs[i]), float(lng0[i]), float(lat0[i]),
-                         float(lng1[i]), float(lat1[i]), to_wkb(g), cov))
-        _ROWS_CACHE[key] = rows
+        geogs = [densified_rect(float(lng0[i]), float(lat0[i]),
+                                float(lng1[i]), float(lat1[i]))
+                 for i in range(n_regions)]
+        if not with_covering:
+            covs = [None] * n_regions
+        elif covering_level is None:
+            covs = [ops.s2_covering(g, max_cells=8) for g in geogs]
+        else:
+            # fixed-level coverings: every cell at exactly covering_level
+            # (single-key join: the point side emits one parent cell), all
+            # regions in one batched pass
+            covs = ops.fixed_level_coverings(geogs, covering_level)
+        _ROWS_CACHE[key] = [
+            (int(rs[i]), float(lng0[i]), float(lat0[i]), float(lng1[i]),
+             float(lat1[i]), to_wkb(g), cov)
+            for i, (g, cov) in enumerate(zip(geogs, covs))]
     return _ROWS_CACHE[key]
 
 
@@ -78,8 +77,11 @@ def regions_df(spark: SparkSession, n_regions: int = 96,
                covering_level=None) -> DataFrame:
     """Small broadcastable polygon dimension: region_id, corner columns,
     geog WKB, and (optionally) the precomputed covering (the reference's
-    embedded-covering checkpoint idea, geography_interface.h:150-158).
-    Rows are memoized driver-side (deterministic)."""
+    embedded-covering checkpoint idea, geography_interface.h:150-158):
+    the adaptive 8-cell covering, or with `covering_level` every cell at
+    that level, all regions covered in one fixed_level_coverings pass (a
+    level outside 0..30 raises ValueError).  Rows are memoized
+    driver-side (deterministic)."""
     rows = _region_rows(n_regions, with_covering, covering_level)
     return arrow_df(
         spark, rows,

@@ -293,15 +293,17 @@ def test_interior_flags_vertex_in_cell():
     clean interior cell still is."""
     from s2geography_spark.core import cellid as C
     from s2geography_spark.core.geog import from_wkt
-    from s2geography_spark.operators.spatial_join import _subdivide_region
+    from s2geography_spark.core.ops import RaggedEdges
+    from s2geography_spark.operators.spatial_join import _subdivide_regions
 
     g = from_wkt("POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), "
                  "(5.01 5.01, 5.01 5.03, 5.03 5.03, 5.03 5.01, 5.01 5.01))")
-    ra, rb = g.ring_edges_xyz()
     hole_cell = C.from_lnglat(np.array([5.02]), np.array([5.02]), lev=8)
     clean_cell = C.from_lnglat(np.array([2.0]), np.array([2.0]), lev=10)
-    flags = [full for full, *_ in _subdivide_region(
-        np.concatenate([hole_cell, clean_cell]).astype(np.uint64), ra, rb)]
+    flags = _subdivide_regions(
+        np.concatenate([hole_cell, clean_cell]).astype(np.uint64),
+        np.zeros(2, dtype=np.int64),
+        RaggedEdges([g.ring_edges_xyz()]))[0].tolist()
     assert flags == [False, True]
 
 
