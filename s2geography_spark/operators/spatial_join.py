@@ -43,6 +43,7 @@ of the region, so refine-only false positives are dropped, never misses.
 from __future__ import annotations
 
 import itertools
+from functools import reduce
 from typing import Optional
 
 import numpy as np
@@ -82,7 +83,9 @@ def ancestors_at_levels(cell_col, levels):
 # in-process guard: a dim (dwithin_join / knn_join_covering, see
 # _distance_dim) or a prepared state table (the probe table of
 # spatial_join's broadcast plan, payload included) within these is
-# collected once and broadcast, and every Python worker holds a copy
+# collected once and broadcast, and every Python worker holds a copy.
+# Over it, the distance joins run the same kernel per cell (_CellDim)
+# and spatial_join shuffles the boundary band.
 MAX_BROADCAST_DIM_ROWS = 200_000
 MAX_BROADCAST_DIM_BYTES = 256 * 1024 * 1024
 # the shuffle plan's prefilter broadcasts the boundary cells' key set
@@ -495,7 +498,8 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     the points' key/leaf/lng/lat columns against the probe table
     prepare_regions broadcast (key, hash probe, bbox prefilter,
     parity refine of the boundary candidates, payload gather — see
-    _probe_join), then `inline`: no exchange and no join job.  Otherwise (refine_mode='subdivided', or an oversized
+    _probe_join), then `inline`: no exchange and no join job.
+    Otherwise (refine_mode='subdivided', or an oversized
     state) the candidates split on the interior flag: interior-cell
     candidates are contained by construction and skip the refine, and
     only the boundary band rides the (salted) hash exchange into the
@@ -1004,7 +1008,7 @@ def geog_pair_join(left: DataFrame, right: DataFrame, *,
 
 
 # ---------------------------------------------------------------------------
-# distributed kNN join
+# distance joins: dwithin and kNN
 # ---------------------------------------------------------------------------
 
 @pandas_udf(T.DoubleType())
@@ -1029,13 +1033,14 @@ def distance_to_geog_udf(geog: pd.Series, lng: pd.Series, lat: pd.Series) -> pd.
 
 
 class _DistanceDim:
-    """A dim small enough to hold in-process, for dwithin_join and
-    knn_join_covering: region ids, WKB and base coverings collected in
-    ONE job and shipped to the executors as one broadcast, so the point
-    side runs as a single map-only pass (partition-local kNN with the
-    small side replicated).  The decoded geographies and the per-radius
-    probe tables are built lazily and cached on the broadcast value,
-    which a reused Python worker keeps across tasks."""
+    """The distance kernel of dwithin_join and knn_join_covering over
+    (region id, WKB, base covering) rows.  A dim within the guard is
+    collected in ONE job and shipped to the executors as one broadcast,
+    so the point side runs as a single map-only pass (partition-local kNN
+    with the small side replicated); over the guard _CellDim builds one
+    per cell from the cell's regions.  The decoded geographies and the
+    per-radius probe tables are built lazily and cached on the instance,
+    which for the broadcast a reused Python worker keeps across tasks."""
 
     def __init__(self, rows, rid_type):
         from pyspark.sql.pandas.types import to_arrow_type
@@ -1121,11 +1126,14 @@ class _DistanceDim:
             - np.repeat(first, np.diff(np.r_[first, len(pi)]))
         return pi, ri, d, rank
 
-    def knn(self, lng, lat, k: int, radius_m: float, rounds: int):
+    def knn(self, lng, lat, k: int, radius_m: float, rounds: int,
+            dense: bool = True):
         """(point index, region index, meters, rank) of every point's k
         nearest regions: knn_join_covering's radius doubling, in-task.  A
         point is resolved once its k-th candidate is within the round's
-        radius; the residue after `rounds` ranks every region densely."""
+        radius; the residue after `rounds` ranks every region densely, or
+        (dense=False) comes back as one marker per point: region index
+        -1, a NaN distance and rank 0."""
         remaining = np.flatnonzero(~(np.isnan(lng) | np.isnan(lat)))
         lng, lat = np.nan_to_num(lng), np.nan_to_num(lat)
         xyz = np.stack(C.lnglat_to_xyz(lng, lat), axis=-1)
@@ -1142,6 +1150,11 @@ class _DistanceDim:
             parts.append((pi[keep], ri[keep], d[keep], rank[keep]))
             remaining = np.setdiff1d(remaining, done)
             radius_m *= 2.0
+        if not dense:
+            m = len(remaining)
+            parts.append((remaining, np.full(m, -1), np.full(m, np.nan),
+                          np.zeros(m, dtype=np.int64)))
+            return tuple(np.concatenate(c) for c in zip(*parts))
         n = len(self.wkb)
         # the dense residue in chunks of ~1M pairs, so a dim near the guard
         # never materializes points x regions at once
@@ -1203,66 +1216,75 @@ def _float_col(batch, name: str):
         .to_numpy(zero_copy_only=False)
 
 
-def _expand_covering_udf(radius_m: float):
-    """array<long> base covering -> array<long> buffered covering at
-    radius_m: pure vectorized cell math per row (no WKB decode) — lets the
-    expensive geography covering be computed ONCE and expanded per radius
-    (the dwithin/kNN radius-doubling loops reuse the same base)."""
-    from ..core.ops import buffered_covering_from_cells
+def _in_task(points: DataFrame, bc, body, schema) -> DataFrame:
+    """The plan of a dim within the guard: ONE map-only pass running
+    `body(dim, batch)` on the points against the broadcast _DistanceDim."""
+    def run(batches):
+        dim = bc.value
+        for b in batches:
+            yield body(dim, b)
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def udf(cov: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if c is None else
-             buffered_covering_from_cells(np.asarray(c, dtype=np.int64),
-                                          radius_m)
-             for c in cov], dtype=object)
-
-    return udf
+    return points.mapInArrow(run, schema)
 
 
-def _buffered_dims(regions: DataFrame, region_geog: str, region_id: str):
-    """Shared dim side of dwithin_join and knn_join_covering: the region
-    covering is radius-independent, so it is computed ONCE and pinned with
-    an eager localCheckpoint (a bare plan would re-run the covering UDF
-    for every reader).  localCheckpoint rather than persist: CacheManager
-    registration canonicalizes the full logical plan on every subsequent
-    (un)persist/action — pure driver CPU that dominated the small-dim
-    benches (r6) — while checkpoint blocks are plan-free and released by
-    the ContextCleaner with the DataFrame.
+class _CellDim:
+    """The plan of a dim over the guard: the _DistanceDim kernel per
+    cell.  The (region_id, geography, base covering) rows are pinned with
+    a lazy localCheckpoint, materialized by the one job that reads their
+    coarsest covering level.  A pass at a radius sends each region to the
+    cells of its buffered covering (s2_covering_buffered analog — a
+    superset of 'everything within radius') at the common level
+    min(base min, level(radius)), and each point to its own cell there;
+    a cogroup builds a _DistanceDim from each cell's regions and runs the
+    map-only plan's per-batch body on the cell's points.  A point is in
+    one cell, which holds every region within the radius of it, so a
+    pass neither misses nor repeats a pair.  At radius pi*R every face
+    cell holds every region."""
 
-    Two jobs: the checkpoint and the base covering's min level.  Returns
-    None when the dim has no covering cells, else `at(radius_m) ->
-    (level, dim)`: the buffered covering at the radius (s2_covering_buffered
-    analog, coverings.cc:80-87 — a superset of 'everything within radius')
-    expanded from the base with vectorized cell math, normalized to the
-    common coarsest level min(base min, level(radius)) — driver arithmetic,
-    no job — and keyed by the mixed cell key `_ck`."""
-    from ..core.ops import buffered_covering_level
-    from ..functions.geo import s2_coveringcellids
+    def __init__(self, regions: DataFrame, region_geog: str, region_id: str):
+        from ..functions.geo import s2_coveringcellids
+        self.rows = regions.select(
+            region_id, region_geog,
+            s2_coveringcellids(F.col(region_geog)).alias("_cov")) \
+            .localCheckpoint(eager=False)
+        # None: no region has a covering cell, so no cell holds a region
+        self.base_min = self.rows.agg(F.min(F.array_min(
+            F.transform("_cov", cell_level)))).first()[0]
+        self.rid_type = regions.schema[region_id].dataType
 
-    base_cov = regions.select(
-        region_id, s2_coveringcellids(F.col(region_geog)).alias("_bcov")) \
-        .localCheckpoint(eager=True)
-    base_min = base_cov.agg(
-        F.min(F.array_min(F.transform(F.col("_bcov"), cell_level))).alias("l")
-    ).collect()[0].l
-    if base_min is None:
-        return None
+    def join(self, points: DataFrame, lng: str, lat: str, radius_m: float,
+             body, schema) -> DataFrame:
+        from pyspark.sql.functions import arrow_udf
+        lev = ops.buffered_covering_level(radius_m)
+        if self.base_min is not None:
+            lev = min(lev, int(self.base_min))
+        rid_type = self.rid_type        # the UDFs must not pickle self
 
-    def at(radius_m: float):
-        lev = min(int(base_min), buffered_covering_level(float(radius_m)))
-        covx = base_cov.select(region_id, F.explode(
-            _expand_covering_udf(float(radius_m))(F.col("_bcov")))
-            .alias("_cell"))
-        dim = (covx.select(region_id,
-                           cell_parent(F.col("_cell"), lev).alias("_cell"))
-               .distinct()
-               .withColumn("_ck", cell_join_key(F.col("_cell")))
-               .drop("_cell"))
-        return lev, dim
+        def cell_keys(cov: pa.Array) -> pa.Array:
+            o, c = ops.buffered_covering_pairs(
+                pc.list_parent_indices(cov).to_numpy(),
+                pc.list_flatten(cov).to_numpy(), radius_m)
+            o, c = ops.unique_pairs(o, C.parent(c, lev))
+            off = np.searchsorted(o, np.arange(len(cov) + 1))
+            return pa.ListArray.from_arrays(pa.array(off, pa.int32()),
+                                            pa.array(_mix(c)),
+                                            mask=cov.is_null())
 
-    return at
+        def cell(pts: pa.Table, regs: pa.Table) -> pa.Table:
+            dim = _DistanceDim(list(zip(*(regs.column(i).to_pylist()
+                                          for i in range(3)))), rid_type)
+            pts = pts.drop_columns(["_ck"])
+            b = pa.RecordBatch.from_arrays(
+                [c.combine_chunks() for c in pts.columns], schema=pts.schema)
+            return pa.Table.from_batches([body(dim, b)])
+
+        keys = arrow_udf(cell_keys, T.ArrayType(T.LongType()))
+        regions = self.rows.select("*", F.explode(keys("_cov")).alias("_ck"))
+        keyed = (with_leaf_cell(points, lng, lat, "_ck", level=lev)
+                 .withColumn("_ck", cell_join_key(F.col("_ck")))
+                 .where(F.col("_ck").isNotNull()))
+        return keyed.groupBy("_ck").cogroup(regions.groupBy("_ck")) \
+            .applyInArrow(cell, schema)
 
 
 def dwithin_join(points: DataFrame, regions: DataFrame, radius_m: float, *,
@@ -1273,60 +1295,35 @@ def dwithin_join(points: DataFrame, regions: DataFrame, radius_m: float, *,
     st_dwithin JOIN operator.  Returns region_id, the points' columns and
     (when `distance_col` is set) the distance in meters.
 
-    The dim's size picks the plan, as in spatial_join.  A dim that passes
-    the in-process guard (MAX_BROADCAST_DIM_ROWS / _BYTES) is collected
-    once with its coverings and broadcast; ONE map-only pass over the
-    points then probes each point's cell against every region's buffered
-    covering at the radius (a hash probe) and refines the
-    candidates with the exact vectorized distance — two Spark jobs in
-    all (the dim collect and the caller's action; see _distance_dim).
+    One kernel for every dim size (_DistanceDim.within): a hash probe of
+    each point's cell against every region's buffered covering at the
+    radius, then the exact vectorized distance.  Coverings are supersets,
+    so candidates are never missed; refine-only false positives are
+    dropped.  The dim's size picks where it runs, as in spatial_join.  A
+    dim within the in-process guard (MAX_BROADCAST_DIM_ROWS / _BYTES) is
+    collected once and broadcast, and ONE map-only pass runs it: two
+    Spark jobs in all (see _distance_dim).  A larger dim runs it per cell
+    in one cogroup pass (_CellDim).  A cell runs in one task, so AQE's
+    skew-join split does not apply to a hot cell there (no salting)."""
+    radius = float(radius_m)
+    fields = [regions.schema[region_id]] + points.schema.fields
+    if distance_col is not None:
+        fields.append(T.StructField(distance_col, T.DoubleType()))
+    schema = T.StructType([T.StructField(f.name, f.dataType)
+                           for f in fields])
 
-    A larger dim takes the buffered-covering equi-join (no cross join, no
-    CartesianProduct): each region emits its buffered covering at the
-    radius, normalized to the common coarsest level (see _buffered_dims);
-    points join on their level-L ancestor cell (hash equi-join), then the
-    exact vectorized distance refines with the threshold pushed down
-    (distance.cc:285-289).  Coverings are supersets, so candidates are
-    never missed; refine-only false positives are dropped."""
+    def body(dim, b):
+        pi, ri, d = dim.within(_float_col(b, lng), _float_col(b, lat), radius)
+        cols = [dim.rid.take(ri)] + b.take(pi).columns
+        if distance_col is not None:
+            cols.append(pa.array(d))
+        return pa.RecordBatch.from_arrays(cols, names=schema.names)
+
     bc = _distance_dim(regions, region_geog, region_id)
     if bc is not None:
-        radius = float(radius_m)
-        fields = [regions.schema[region_id]] + points.schema.fields
-        if distance_col is not None:
-            fields.append(T.StructField(distance_col, T.DoubleType()))
-        schema = T.StructType([T.StructField(f.name, f.dataType)
-                               for f in fields])
-
-        def run(batches):
-            dim = bc.value
-            for b in batches:
-                pi, ri, d = dim.within(_float_col(b, lng), _float_col(b, lat),
-                                       radius)
-                cols = [dim.rid.take(ri)] + b.take(pi).columns
-                if distance_col is not None:
-                    cols.append(pa.array(d))
-                yield pa.RecordBatch.from_arrays(cols, names=schema.names)
-
-        return points.mapInArrow(run, schema)
-    dims = _buffered_dims(regions, region_geog, region_id)
-    if dims is None:
-        rid = F.lit(None).cast(regions.schema[region_id].dataType)
-        empty = points.limit(0).select(rid.alias(region_id), "*")
-        return empty if distance_col is None else \
-            empty.withColumn(distance_col, F.lit(None).cast("double"))
-    lev, dim = dims(radius_m)
-    cand = (points
-            .transform(lambda d: with_leaf_cell(d, lng, lat, "_leaf",
-                                                level=lev))
-            .withColumn("_ck", cell_join_key(F.col("_leaf")))
-            .join(dim, "_ck").drop("_ck", "_leaf"))
-    cand = cand.join(regions.select(region_id, region_geog), region_id)
-    d = distance_to_geog_udf(F.col(region_geog), F.col(lng), F.col(lat))
-    if distance_col is not None:
-        return (cand.withColumn(distance_col, d)
-                .where(F.col(distance_col) <= float(radius_m))
-                .drop(region_geog))
-    return cand.where(d <= float(radius_m)).drop(region_geog)
+        return _in_task(points, bc, body, schema)
+    return _CellDim(regions, region_geog, region_id).join(
+        points, lng, lat, radius, body, schema)
 
 
 def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
@@ -1350,123 +1347,61 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
     PROVABLY resolved — the dense fallback only runs for an explicit low
     max_rounds cap (or a point with fewer than k rankable regions).
 
-    The dim's size picks the plan, as in spatial_join.  A dim that passes
-    the in-process guard (MAX_BROADCAST_DIM_ROWS / _BYTES) is collected
-    once with its coverings and broadcast, and ONE map-only pass over the
-    points runs the whole loop — probe, refine, rank and the dense
-    fallback — inside each task (partition-local kNN with the small side
-    replicated): two Spark jobs in all, the dim collect and the
-    caller's action.
-
-    A larger dim runs the rounds as distributed covering joins: the
-    buffered covering is computed on the dim DataFrame (no driver-side
-    WKB collect), and each round's resolved set and remaining points are
-    pinned with an eager localCheckpoint (r6: CacheManager registration
-    canonicalizes the FULL logical plan of every live cache entry on
-    every later (un)persist — seconds of driver CPU per call), so the
-    returned union needs no final materialization and there is nothing
-    for the caller to unpersist.
+    One kernel for every dim size (_DistanceDim.knn); the dim's size
+    picks where it runs, as in spatial_join.  A dim within the in-process
+    guard (MAX_BROADCAST_DIM_ROWS / _BYTES) is collected once and
+    broadcast, and ONE map-only pass runs the whole loop — probe, refine,
+    rank and the dense fallback — in each task: two Spark jobs in all.  A
+    larger dim runs one cogroup pass per round with the kernel per cell
+    (_CellDim); an unresolved point comes back as a rank-0 marker row,
+    and the markers, pinned with an eager localCheckpoint, are the next
+    round's points (one isEmpty per round).  The residue takes a last pass
+    at radius pi*R, where every cell holds every region, so the dense
+    fallback is exact and nothing is broadcast.  A cell runs in one task,
+    so AQE's skew-join split does not apply to a hot cell there (no
+    salting).
     """
+    half_turn = np.pi * sphere.EARTH_RADIUS_METERS
     limit = max_rounds if max_rounds is not None else \
-        int(np.ceil(np.log2(np.pi * sphere.EARTH_RADIUS_METERS
-                            / max(float(init_radius_m), 1.0)))) + 2
+        int(np.ceil(np.log2(half_turn / max(float(init_radius_m), 1.0)))) + 2
+    src = points.select(point_id, lng, lat)
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in src.schema.fields]
+        + [T.StructField(region_id, regions.schema[region_id].dataType),
+           T.StructField(distance_col, T.DoubleType()),
+           T.StructField("knn_rank", T.IntegerType(), False)])
+
+    def body_at(radius: float, rounds: int, dense: bool = True):
+        def body(dim, b):
+            pi, ri, d, rank = dim.knn(_float_col(b, lng), _float_col(b, lat),
+                                      k, radius, rounds, dense)
+            rid = dim.rid.take(ri if dense else pa.array(ri, mask=ri < 0))
+            return pa.RecordBatch.from_arrays(
+                b.take(pi).columns
+                + [rid, pa.array(d), pa.array(rank.astype(np.int32))],
+                names=schema.names)
+        return body
+
     bc = _distance_dim(regions, region_geog, region_id)
     if bc is not None:
-        radius = float(init_radius_m)
-        src = points.select(point_id, lng, lat)
-        schema = T.StructType(
-            [T.StructField(f.name, f.dataType) for f in src.schema.fields]
-            + [T.StructField(region_id, regions.schema[region_id].dataType),
-               T.StructField(distance_col, T.DoubleType()),
-               T.StructField("knn_rank", T.IntegerType(), False)])
-
-        def run(batches):
-            dim = bc.value
-            for b in batches:
-                pi, ri, d, rank = dim.knn(_float_col(b, lng),
-                                          _float_col(b, lat), k, radius,
-                                          max(limit, 1))
-                yield pa.RecordBatch.from_arrays(
-                    b.take(pi).columns
-                    + [dim.rid.take(ri), pa.array(d),
-                       pa.array(rank.astype(np.int32))],
-                    names=schema.names)
-
-        return src.mapInArrow(run, schema)
-
-    from pyspark.sql import Window as W
-
-    cols = [point_id, lng, lat, region_id, distance_col, "knn_rank"]
-    # base covering + its min level: two jobs up front; each round's
-    # common level is then driver arithmetic — no per-round collect() (the
-    # round-2 plan paid ~1-2 scheduling jobs per radius doubling just to
-    # learn a number that is a deterministic function of the radius)
-    dims = _buffered_dims(regions, region_geog, region_id)
-    # per-round materialization: each round's resolved set and the
-    # shrinking `remaining` are computed once — without it the left_anti
-    # lineage chain recomputes every earlier round's candidate join +
-    # window on each action (observed 2x+ wall-clock on the sf0.1 bench)
-    remaining = points.select(point_id, lng, lat) \
-        .transform(lambda d: with_leaf_cell(d, lng, lat, "_leaf")) \
-        .localCheckpoint(eager=True)
-    n_remaining = remaining.count()
-    parts = []
+        return _in_task(src, bc, body_at(float(init_radius_m), max(limit, 1)),
+                        schema)
+    dim = _CellDim(regions, region_geog, region_id)
     radius = float(init_radius_m)
-    for _round in range(max(limit, 1)):
-        if n_remaining == 0 or dims is None:
-            break
-        if _round > 0:
-            # truncate the previous round's anti-join lineage exactly when
-            # a next round will actually build on it (the last round's
-            # anti-join stays LAZY: with every point resolved it is never
-            # executed at all)
-            remaining = remaining.localCheckpoint(eager=True)
-        lev, dim = dims(radius)
-        cand = (remaining
-                .withColumn("_ck", cell_join_key(cell_parent(F.col("_leaf"), lev)))
-                .join(dim, "_ck").drop("_ck"))
-        cand = cand.join(regions.select(region_id, region_geog), region_id)
-        cand = cand.withColumn(distance_col, distance_to_geog_udf(
-            F.col(region_geog), F.col(lng), F.col(lat))).drop(region_geog)
-        w = W.partitionBy(point_id).orderBy(F.col(distance_col).asc(),
-                                            F.col(region_id).asc())
-        ranked = cand.withColumn("knn_rank", F.row_number().over(w))
-        # resolved: the k-th nearest candidate is within the proven radius.
-        # No distinct(): row_number emits EXACTLY one rank-k row per
-        # point_id, so the key set is unique by construction — the
-        # distinct was a full extra exchange per round (guide §2.4)
-        kth = (ranked.where((F.col("knn_rank") == k)
-                            & (F.col(distance_col) <= radius))
-               .select(point_id))
-        part = (ranked.join(kth, point_id, "left_semi")
-                .where(F.col("knn_rank") <= k).select(*cols)
-                .localCheckpoint(eager=True))
-        # a resolved point contributes exactly k rows (rank 1..k all
-        # exist), so the remaining count is arithmetic on the part count —
-        # the round-2 loop paid a second count() job on the anti-join
-        n_part = part.count()
-        parts.append(part)
-        remaining = remaining.join(kth, point_id, "left_anti")
-        n_remaining -= n_part // k
+    rounds = max(limit, 1) if dim.base_min is not None else 0
+    parts = []
+    while rounds and radius < half_turn:
+        out = dim.join(src, lng, lat, radius, body_at(radius, 1, False),
+                       schema).localCheckpoint(eager=True)
+        parts.append(out.where(F.col("knn_rank") > 0))
+        src = out.where(F.col("knn_rank") == 0).select(point_id, lng, lat)
+        if src.isEmpty():
+            return reduce(DataFrame.unionByName, parts)
+        rounds -= 1
         radius *= 2.0
-    if n_remaining > 0:
-        fallback = knn_join(remaining.drop("_leaf"),
-                            regions.select(region_id, region_geog), k,
-                            point_id=point_id, lng=lng, lat=lat,
-                            region_geog=region_geog, region_id=region_id,
-                            distance_col=distance_col)
-        parts.append(fallback.select(*cols))
-    if not parts:
-        # the broadcast plan's types: the dim's id type, a non-null rank
-        return remaining.drop("_leaf").limit(0) \
-            .withColumn(region_id, F.lit(None).cast(
-                regions.schema[region_id].dataType)) \
-            .withColumn(distance_col, F.lit(None).cast("double")) \
-            .withColumn("knn_rank", F.lit(0)).select(*cols)
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return out
+    parts.append(dim.join(src, lng, lat, half_turn, body_at(half_turn, 1),
+                          schema))
+    return reduce(DataFrame.unionByName, parts)
 
 
 def knn_join(points: DataFrame, regions: DataFrame, k: int, *,

@@ -1,7 +1,7 @@
 """dwithin_join, knn_join_covering and knn_join against a scalar brute
 force, on both plans: the in-process broadcast dim (the default for a
-small dim) and the distributed covering joins (forced by lowering the
-dim guard).  The inputs carry null coordinates, null and EMPTY
+small dim) and the same kernel run per cell (forced by lowering the dim
+guard).  The inputs carry null coordinates, null and EMPTY
 geographies, an exact distance tie, and points at the antimeridian and
 near the pole."""
 
@@ -83,8 +83,9 @@ def test_brute_force_fixture_has_the_edge_cases(brute):
 
 
 def test_dwithin_matches_brute_force(points, dim, brute, plan):
-    got = {(r.pid, r.region_id): r.d for r in
-           sj.dwithin_join(points, dim, RADIUS, distance_col="d").collect()}
+    rows = sj.dwithin_join(points, dim, RADIUS, distance_col="d").collect()
+    got = {(r.pid, r.region_id): r.d for r in rows}
+    assert len(rows) == len(got)        # no pair is emitted twice
     exp = {(pid, rid): d for pid, ds in brute.items() for d, rid in ds
            if d <= RADIUS}
     assert got.keys() == exp.keys()
@@ -132,7 +133,9 @@ def test_knn_empty_points_keep_the_dim_types(spark, plan):
 
 
 def _ranked(rows):
-    return {(r.pid, r.knn_rank): (r.region_id, r.distance_m) for r in rows}
+    got = {(r.pid, r.knn_rank): (r.region_id, r.distance_m) for r in rows}
+    assert len(rows) == len(got)        # no (point, rank) row twice
+    return got
 
 
 def _expected_knn(brute):
@@ -167,7 +170,8 @@ def test_knn_covering_capped_matches_brute_force(points, dim, brute, plan):
 def test_knn_join_never_ranks_null_distances(spark):
     """A null-geography region has a null distance: Spark's asc() sorts
     it first, so it must be dropped before ranking, and the capped
-    covering path (whose residue is knn_join) must agree."""
+    covering path (whose residue is ranked densely in-task) must
+    agree."""
     rows = [(1, to_wkb(from_wkt("POINT (1 1)"))),
             (2, to_wkb(from_wkt("POINT (2 2)"))), (3, None),
             (4, to_wkb(from_wkt("POINT (4 4)")))]
@@ -185,8 +189,8 @@ def test_knn_join_never_ranks_null_distances(spark):
 
 def test_small_dim_runs_two_jobs(spark, points, dim):
     """The in-process plan scans the dim once (the guarded collect) and
-    the points once (the caller's action); the distributed plans ran 8 to
-    139 jobs on this input."""
+    the points once (the caller's action); the distributed plans run 8
+    to 30 (test_distributed_plans_job_pins)."""
     sc = spark.sparkContext
     for i, run in enumerate([
             lambda: sj.dwithin_join(points, dim, RADIUS).collect(),
@@ -203,6 +207,77 @@ def test_small_dim_runs_two_jobs(spark, points, dim):
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert 0 < len(jobs) <= 2, (i, len(jobs))
+
+
+def _jobs(sc, group, run):
+    """The Spark jobs that `run()` launches, counted by job group."""
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_distributed_plans_job_pins(spark, points, dim, monkeypatch):
+    """Over the guard the kernel runs per cell: one job for the dim's
+    coverings, then per kNN round one checkpoint and one isEmpty.  The
+    window/checkpoint plans this replaced ran 12, 163 and 31 jobs on
+    these calls."""
+    monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", 0)
+    sc = spark.sparkContext
+    for i, (cap, run) in enumerate([
+            (8, lambda: sj.dwithin_join(points, dim, RADIUS).collect()),
+            (30, lambda: sj.knn_join_covering(
+                points, dim, K, point_id="pid",
+                init_radius_m=300_000.0).collect()),
+            (12, lambda: sj.knn_join_covering(
+                points, dim, K, point_id="pid", init_radius_m=300_000.0,
+                max_rounds=1).collect())]):
+        n = _jobs(sc, f"s2_cell_dim_jobs_{i}", run)
+        assert 0 < n <= cap, (i, n)
+
+
+def test_both_plans_return_one_schema(points, dim, monkeypatch):
+    """Names, types and nullability agree across the two plans, the
+    non-null knn_rank included."""
+    def schemas():
+        outs = [sj.dwithin_join(points, dim, RADIUS),
+                sj.dwithin_join(points, dim, RADIUS, distance_col="d"),
+                sj.knn_join_covering(points, dim, K, point_id="pid",
+                                     init_radius_m=2_000_000.0)]
+        return [[(f.name, f.dataType.simpleString(), f.nullable)
+                 for f in out.schema] for out in outs]
+
+    small = schemas()
+    monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", 0)
+    assert schemas() == small
+    assert small[2][-1] == ("knn_rank", "int", False)
+
+
+def test_distributed_knn_residue_broadcasts_nothing(points, dim, brute,
+                                                    monkeypatch):
+    """Over the guard the kNN residue (a capped loop, or a point with
+    fewer than k rankable regions) runs per cell at radius pi*R: no plan
+    broadcasts the dim or ranks with a window, and the residue ranks every
+    rankable region exactly."""
+    monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", 0)
+    capped = sj.knn_join_covering(points, dim, K, point_id="pid",
+                                  init_radius_m=300_000.0, max_rounds=1)
+    every = sj.knn_join_covering(points, dim, len(REGIONS), point_id="pid",
+                                 init_radius_m=15_000_000.0)
+    for out in (capped, every):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        for node in ("BroadcastNestedLoopJoin", "BroadcastExchange",
+                     "Window"):
+            assert node not in plan, (node, plan)
+    got = _ranked(every.collect())
+    assert got.keys() == {(pid, rank + 1) for pid, ds in brute.items()
+                          for rank in range(len(ds))}
+    for pid, ds in brute.items():
+        for rank, (d, rid) in enumerate(ds):
+            assert got[(pid, rank + 1)][0] == rid
+            assert got[(pid, rank + 1)][1] == pytest.approx(d, abs=1e-3)
 
 
 def test_skewed_dim_takes_the_exact_guard(spark, points, dim, brute,
