@@ -135,8 +135,8 @@ def q_geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (distance, region_id).  The 96-center dim passes the in-process
     guard, so it is collected once and broadcast and the whole loop runs
     in one map-only pass over the customers (two Spark jobs); the
-    oracle checks this path end-to-end.  The dense knn_join is checked
-    separately by geo_knn_dense."""
+    oracle checks this path end-to-end.  knn_join, the same kernel
+    without the round cap, is checked separately by geo_knn_dense."""
     from s2geography_spark.functions.geo import _point_wkb_udf
     from s2geography_spark.operators.spatial_join import knn_join_covering
     pts = _customer_points(spark, sf_dir).where(F.col("c_custkey") <= 500)
@@ -155,10 +155,11 @@ def q_geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_geo_knn_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DENSE kNN building block (broadcast pairing + vectorized
-    distance + window top-k — the small-dim path the covering query falls
-    back to), against the same brute-force SQL oracle as geo_knn: both
-    must produce identical top-3 rankings."""
+    """knn_join, the kNN operator that carries both sides' columns: the
+    covering query's kernel at its default radius doubling (250 km, no
+    round cap), in one map-only pass over the broadcast 96-center dim,
+    against the same brute-force SQL oracle as geo_knn: both must produce
+    identical top-3 rankings."""
     from s2geography_spark.functions.geo import _point_wkb_udf
     from s2geography_spark.operators.spatial_join import knn_join
     pts = _customer_points(spark, sf_dir).where(F.col("c_custkey") <= 500)

@@ -177,7 +177,7 @@ _FACTORIZE_MAX_UNIQUE = 4096
 def _repeating_lhs_points_rhs(a: pd.Series, b: pd.Series):
     """(codes, uniques, xyz, rhs_nan) when the rhs is all 2D point WKB and
     the lhs repeats enough to amortize a per-distinct-geography NumPy pass
-    (the pd.factorize batching pattern of distance_to_geog_udf); else
+    (pd.factorize batching: one pass per distinct lhs); else
     None.  rhs_nan marks null OR empty rhs points."""
     pts = _fast_points(b)
     if pts is None:

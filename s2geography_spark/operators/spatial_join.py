@@ -80,12 +80,11 @@ def ancestors_at_levels(cell_col, levels):
     return F.array(*[cell_parent(cell_col, int(l)) for l in sorted(levels)])
 
 
-# in-process guard: a dim (dwithin_join / knn_join_covering, see
-# _distance_dim) or a prepared state table (the probe table of
-# spatial_join's broadcast plan, payload included) within these is
-# collected once and broadcast, and every Python worker holds a copy.
-# Over it, the distance joins run the same kernel per cell (_CellDim)
-# and spatial_join shuffles the boundary band.
+# in-process guard: a dim within these (the rows of a distance dim with
+# their base coverings, or a prepared state table with its region
+# payload) is collected once by _guarded_collect and broadcast, and every
+# Python worker holds a copy.  Over it, the distance joins run the same
+# kernel per cell (_CellDim) and spatial_join shuffles the boundary band.
 MAX_BROADCAST_DIM_ROWS = 200_000
 MAX_BROADCAST_DIM_BYTES = 256 * 1024 * 1024
 # the shuffle plan's prefilter broadcasts the boundary cells' key set
@@ -95,18 +94,6 @@ MAX_BROADCAST_INDEX_ROWS = 8_000_000
 # plan) and _ProbeTable.pairs (broadcast plan) apply the same test with
 # it, so both plans keep the same candidates
 _BBOX_EPS = 1e-9
-
-
-def dim_is_broadcastable(regions: DataFrame, region_geog: str) -> bool:
-    """Whether the dim passes the in-process guard (MAX_BROADCAST_DIM_ROWS
-    rows and MAX_BROADCAST_DIM_BYTES geography bytes): one small
-    aggregation job."""
-    row = regions.agg(
-        F.count("*").alias("n"),
-        F.sum(F.octet_length(F.col(region_geog).cast("binary"))).alias("b")
-    ).collect()[0]
-    return (int(row.n or 0) <= MAX_BROADCAST_DIM_ROWS
-            and int(row.b or 0) <= MAX_BROADCAST_DIM_BYTES)
 
 
 class _HashProbe:
@@ -221,11 +208,12 @@ class _ProbeTable:
                                         mask=pa.array(cnt == 0))
 
 
-def _capped_state(rows_cap: int, bytes_cap: int):
-    """mapInArrow body of prepare_regions' collect: the partition's state
-    rows, or one all-null row (a null `_ck`, which no state row has) once
-    the partition passes `rows_cap` rows or `bytes_cap` Arrow bytes (every
-    column, the region payload included)."""
+def _capped_batches(rows_cap: int, bytes_cap: int):
+    """mapInArrow body of _guarded_collect: the partition's rows with a
+    null `_over` column, or one marker row (`_over` true, every other
+    column null) once the partition passes `rows_cap` rows or `bytes_cap`
+    Arrow bytes.  Only the marker column tells the marker from a data row:
+    a dim may hold a row of nulls."""
     def run(batches):
         out, n_rows, n_bytes = [], 0, 0
         for b in batches:
@@ -234,10 +222,11 @@ def _capped_state(rows_cap: int, bytes_cap: int):
             n_bytes += b.nbytes
             if n_rows > rows_cap or n_bytes > bytes_cap:
                 yield pa.RecordBatch.from_arrays(
-                    [pa.nulls(1, f.type) for f in b.schema],
-                    names=b.schema.names)
+                    [pa.nulls(1, f.type) for f in b.schema]
+                    + [pa.array([True])], names=b.schema.names + ["_over"])
                 return
-        yield from out
+        for b in out:
+            yield b.append_column("_over", pa.nulls(b.num_rows, pa.bool_()))
     return run
 
 
@@ -247,6 +236,38 @@ def _row_bytes(schema):
     var = [F.coalesce(F.octet_length(f.name), F.lit(0)) for f in schema
            if isinstance(f.dataType, (T.StringType, T.BinaryType))]
     return sum(var, F.lit(8 * (len(schema) - len(var))))
+
+
+def _exact_guard(df: DataFrame, *stats):
+    """The exact in-process guard: one aggregation of the row count `n`,
+    the bytes `b` (estimated by _row_bytes) and the `stats` columns."""
+    return df.agg(F.count("*").alias("n"),
+                  F.sum(_row_bytes(df.schema)).alias("b"), *stats) \
+        .collect()[0]
+
+
+def _guarded_collect(df: DataFrame, *stats):
+    """(table, row): `df` as one Arrow table within the in-process guard
+    (MAX_BROADCAST_DIM_ROWS rows, MAX_BROADCAST_DIM_BYTES bytes), else
+    None; and the exact guard's row when it ran, else None.  ONE Spark job
+    in the common case: each partition ships its rows while within an
+    even share of the guard.  Only when one passes its share does the
+    exact guard (_exact_guard, with `stats`) decide, before an uncapped
+    collect: a dim over the guard never reaches the driver, and one
+    within it is collected whatever its skew."""
+    parts = max(df.rdd.getNumPartitions(), 1)
+    marked = T.StructType([T.StructField(f.name, f.dataType)
+                           for f in df.schema]
+                          + [T.StructField("_over", T.BooleanType())])
+    tbl = df.mapInArrow(_capped_batches(MAX_BROADCAST_DIM_ROWS // parts,
+                                        MAX_BROADCAST_DIM_BYTES // parts),
+                        marked).toArrow()
+    if tbl.column("_over").null_count == tbl.num_rows:
+        return tbl.drop_columns(["_over"]), None
+    st = _exact_guard(df, *stats)
+    fits = (int(st.n or 0) <= MAX_BROADCAST_DIM_ROWS
+            and int(st.b or 0) <= MAX_BROADCAST_DIM_BYTES)
+    return (df.toArrow() if fits else None), st
 
 
 class PreparedRegions:
@@ -289,16 +310,13 @@ def prepare_regions(spark, regions: DataFrame, *, region_geog: str = "geog",
     table within the in-process guard (MAX_BROADCAST_DIM_ROWS cells and
     MAX_BROADCAST_DIM_BYTES Arrow bytes, the region payload included:
     every Python worker of the broadcast plan holds a copy) is collected
-    ONCE as Arrow and broadcast as the probe table; its size and covering
-    levels are read from it.  That collect is the whole prepare: ONE
-    Spark job, which also materializes the checkpoint blocks (every
-    partition is cached whole before the capped collect reads it).  Each
-    partition ships its rows while it stays within an even share of the
-    guard.  Only when a partition passes its share does the exact guard
-    (one aggregation, which also records the size and levels; the bytes
-    estimated by _row_bytes) decide, before an uncapped collect — so a
-    table over the guard never reaches the driver, and a table within it
-    is collected whatever its skew, as in _distance_dim.
+    ONCE as Arrow by _guarded_collect and broadcast as the probe table;
+    its size and covering levels are read from it.  That collect is the
+    whole prepare: ONE Spark job, which also materializes the checkpoint
+    blocks (every partition is cached whole before the capped collect
+    reads it).  When a partition passes its share of the guard, the exact
+    guard's aggregation also records the size and levels, which a table
+    over the guard keeps.
 
     A dim without `covering_col` gets the adaptive s2_coveringcellids
     covering.  localCheckpoint blocks carry no CacheManager entry, so the
@@ -322,23 +340,12 @@ def prepare_regions(spark, regions: DataFrame, *, region_geog: str = "geog",
           .withColumn("_xmax", F.col("_bb.xmax"))
           .withColumn("_ymax", F.col("_bb.ymax")).drop("_bb")
           .localCheckpoint(eager=False))
-    parts = max(ex.rdd.getNumPartitions(), 1)
-    nullable = T.StructType([T.StructField(f.name, f.dataType)
-                             for f in ex.schema])
-    tbl = ex.mapInArrow(_capped_state(MAX_BROADCAST_DIM_ROWS // parts,
-                                      MAX_BROADCAST_DIM_BYTES // parts),
-                        nullable).toArrow()
-    if tbl.column("_ck").null_count:
-        st = ex.agg(F.count("*").alias("n"),
-                    F.sum(_row_bytes(ex.schema)).alias("b"),
-                    F.collect_set(cell_level(F.col("_cell"))).alias("lev")) \
-            .collect()[0]
-        n, n_bytes, levels = int(st.n or 0), int(st.b or 0), st.lev
-        tbl = ex.toArrow() if (n <= MAX_BROADCAST_DIM_ROWS
-                               and n_bytes <= MAX_BROADCAST_DIM_BYTES) \
-            else None
+    tbl, st = _guarded_collect(
+        ex, F.collect_set(cell_level(F.col("_cell"))).alias("lev"))
     probe = None
-    if tbl is not None:
+    if tbl is None:
+        n, n_bytes, levels = int(st.n or 0), int(st.b or 0), st.lev
+    else:
         n, n_bytes = tbl.num_rows, tbl.nbytes
         levels = np.unique(C.level(tbl.column("_cell").to_numpy()))
         probe = spark.sparkContext.broadcast(
@@ -1011,54 +1018,37 @@ def geog_pair_join(left: DataFrame, right: DataFrame, *,
 # distance joins: dwithin and kNN
 # ---------------------------------------------------------------------------
 
-@pandas_udf(T.DoubleType())
-def distance_to_geog_udf(geog: pd.Series, lng: pd.Series, lat: pd.Series) -> pd.Series:
-    """Vectorized min distance (meters) from points to a repeating geography:
-    per distinct geography, one ops.dist_to_points_rad pass over its
-    edges/vertices.  Null for a null point, a null geography or an EMPTY
-    one (st_distance's null)."""
-    from ..core import ops as _ops
-    out = np.full(len(geog), np.nan)
-    lngv = lng.to_numpy(dtype=np.float64)
-    latv = lat.to_numpy(dtype=np.float64)
-    xyz = np.stack(C.lnglat_to_xyz(np.nan_to_num(lngv), np.nan_to_num(latv)), axis=-1)
-    codes, uniques = pd.factorize(geog, use_na_sentinel=True)
-    for u, key in enumerate(uniques):
-        rows = np.where(codes == u)[0]
-        out[rows] = _ops.dist_to_points_rad(from_wkb(bytes(key)), xyz[rows]) \
-            * sphere.EARTH_RADIUS_METERS
-    res = pd.Series(out, dtype=object)
-    res[~np.isfinite(out) | np.isnan(lngv) | np.isnan(latv)] = None
-    return res
-
-
 class _DistanceDim:
-    """The distance kernel of dwithin_join and knn_join_covering over
-    (region id, WKB, base covering) rows.  A dim within the guard is
-    collected in ONE job and shipped to the executors as one broadcast,
-    so the point side runs as a single map-only pass (partition-local kNN
-    with the small side replicated); over the guard _CellDim builds one
-    per cell from the cell's regions.  The decoded geographies and the
-    per-radius probe tables are built lazily and cached on the instance,
-    which for the broadcast a reused Python worker keeps across tasks."""
+    """The distance kernel of dwithin_join, knn_join_covering and knn_join
+    over an Arrow table of the dim: its payload columns, the WKB column and
+    the base covering `_cov`.  A dim within the guard is collected in ONE
+    job and shipped to the executors as one broadcast, so the point side
+    runs as a single map-only pass (partition-local kNN with the small
+    side replicated); over the guard _CellDim builds one per cell from the
+    cell's regions.  The decoded geographies and the per-radius probe
+    tables are built lazily and cached on the instance, which for the
+    broadcast a reused Python worker keeps across tasks."""
 
-    def __init__(self, rows, rid_type):
-        from pyspark.sql.pandas.types import to_arrow_type
-        ids = [r[0] for r in rows]
-        self.rid = pa.array(ids, type=to_arrow_type(rid_type))
+    def __init__(self, tbl, region_id: str, region_geog: str):
+        self.cols = {n: tbl.column(n).combine_chunks()
+                     for n in tbl.column_names}
         # position in region_id ascending order, nulls first (Spark's asc)
-        order = sorted(range(len(ids)),
-                       key=lambda i: (ids[i] is not None, ids[i]))
-        self.rid_rank = np.empty(len(ids), dtype=np.int64)
-        self.rid_rank[order] = np.arange(len(ids))
-        self.wkb = [None if r[1] is None else bytes(r[1]) for r in rows]
-        covs = [r[2] or [] for r in rows]
-        self.owner = np.repeat(np.arange(len(rows)), [len(c) for c in covs])
-        self.cells = np.array([c for cov in covs for c in cov], dtype=np.int64)
+        order = pc.array_sort_indices(self.cols[region_id],
+                                      null_placement="at_start").to_numpy()
+        self.rid_rank = np.empty(len(order), dtype=np.int64)
+        self.rid_rank[order] = np.arange(len(order))
+        self.wkb = self.cols[region_geog].to_pylist()
+        cov = self.cols["_cov"]
+        self.owner = pc.list_parent_indices(cov).to_numpy()
+        self.cells = pc.list_flatten(cov).to_numpy()
         self.base_min = int(C.level(self.cells).min()) if len(self.cells) \
             else None
         self._geogs = {}
         self._probes = {}
+
+    def take(self, names, ri):
+        """Columns `names` of regions ri; a null index takes a null row."""
+        return [self.cols[n].take(ri) for n in names]
 
     def _probe(self, radius_m: float):
         """(level, hash probe of the sorted cells, owning regions): every
@@ -1085,7 +1075,7 @@ class _DistanceDim:
 
     def distances(self, xyz, ri):
         """Meters from xyz[i] to region ri[i]; NaN for a null or EMPTY
-        geography, as distance_to_geog_udf."""
+        geography (st_distance's null)."""
         from ..core.ops import dist_to_points_rad
         d = np.full(len(ri), np.nan)
         order = np.argsort(ri, kind="stable")
@@ -1171,68 +1161,18 @@ class _DistanceDim:
         return tuple(np.concatenate(c) for c in zip(*parts))
 
 
-def _covered_rows(rows_cap: int, bytes_cap: int):
-    """mapPartitions body of _distance_dim: the partition's (region_id,
-    WKB, base covering) rows, or a single None once the partition passes
-    `rows_cap` rows or `bytes_cap` geography bytes."""
-    def run(it):
-        from ..core.ops import s2_covering
-        rows, n_bytes = [], 0
-        for r in it:
-            rows.append(r)
-            n_bytes += len(r[1] or b"")
-            if len(rows) > rows_cap or n_bytes > bytes_cap:
-                return [None]
-        return [(r[0], r[1], None if r[1] is None
-                 else s2_covering(from_wkb(bytes(r[1])))) for r in rows]
-    return run
-
-
-def _distance_dim(regions: DataFrame, region_geog: str, region_id: str):
-    """The dim as a broadcast _DistanceDim when it passes the in-process
-    guard (MAX_BROADCAST_DIM_ROWS / _BYTES), else None.  ONE scan of the
-    dim in the common case: each partition ships its rows with their base
-    coverings while it stays within an even share of the guard.  Only
-    when a partition passes its share (a skewed or an over-guard dim)
-    does the exact guard (dim_is_broadcastable) decide, before a second,
-    uncapped collect."""
-    rdd = regions.select(region_id, region_geog).rdd
-    parts = max(rdd.getNumPartitions(), 1)
-    rows = rdd.mapPartitions(_covered_rows(
-        MAX_BROADCAST_DIM_ROWS // parts,
-        MAX_BROADCAST_DIM_BYTES // parts)).collect()
-    if None in rows:
-        if not dim_is_broadcastable(regions, region_geog):
-            return None
-        rows = rdd.mapPartitions(_covered_rows(
-            MAX_BROADCAST_DIM_ROWS, MAX_BROADCAST_DIM_BYTES)).collect()
-    dim = _DistanceDim(rows, regions.schema[region_id].dataType)
-    return regions.sparkSession.sparkContext.broadcast(dim)
-
-
 def _float_col(batch, name: str):
     """A RecordBatch column as float64 NumPy, nulls as NaN."""
     return pc.cast(batch.column(name), pa.float64()) \
         .to_numpy(zero_copy_only=False)
 
 
-def _in_task(points: DataFrame, bc, body, schema) -> DataFrame:
-    """The plan of a dim within the guard: ONE map-only pass running
-    `body(dim, batch)` on the points against the broadcast _DistanceDim."""
-    def run(batches):
-        dim = bc.value
-        for b in batches:
-            yield body(dim, b)
-
-    return points.mapInArrow(run, schema)
-
-
 class _CellDim:
     """The plan of a dim over the guard: the _DistanceDim kernel per
-    cell.  The (region_id, geography, base covering) rows are pinned with
-    a lazy localCheckpoint, materialized by the one job that reads their
-    coarsest covering level.  A pass at a radius sends each region to the
-    cells of its buffered covering (s2_covering_buffered analog — a
+    cell.  The dim's rows (payload, geography, base covering) are pinned
+    with a lazy localCheckpoint, materialized by the one job that reads
+    their coarsest covering level.  A pass at a radius sends each region
+    to the cells of its buffered covering (s2_covering_buffered analog — a
     superset of 'everything within radius') at the common level
     min(base min, level(radius)), and each point to its own cell there;
     a cogroup builds a _DistanceDim from each cell's regions and runs the
@@ -1241,16 +1181,12 @@ class _CellDim:
     pass neither misses nor repeats a pair.  At radius pi*R every face
     cell holds every region."""
 
-    def __init__(self, regions: DataFrame, region_geog: str, region_id: str):
-        from ..functions.geo import s2_coveringcellids
-        self.rows = regions.select(
-            region_id, region_geog,
-            s2_coveringcellids(F.col(region_geog)).alias("_cov")) \
-            .localCheckpoint(eager=False)
+    def __init__(self, dim: DataFrame, region_id: str, region_geog: str):
+        self.rows = dim.localCheckpoint(eager=False)
         # None: no region has a covering cell, so no cell holds a region
         self.base_min = self.rows.agg(F.min(F.array_min(
             F.transform("_cov", cell_level)))).first()[0]
-        self.rid_type = regions.schema[region_id].dataType
+        self.names = (region_id, region_geog)
 
     def join(self, points: DataFrame, lng: str, lat: str, radius_m: float,
              body, schema) -> DataFrame:
@@ -1258,7 +1194,7 @@ class _CellDim:
         lev = ops.buffered_covering_level(radius_m)
         if self.base_min is not None:
             lev = min(lev, int(self.base_min))
-        rid_type = self.rid_type        # the UDFs must not pickle self
+        names = self.names              # the UDFs must not pickle self
 
         def cell_keys(cov: pa.Array) -> pa.Array:
             o, c = ops.buffered_covering_pairs(
@@ -1271,12 +1207,10 @@ class _CellDim:
                                             mask=cov.is_null())
 
         def cell(pts: pa.Table, regs: pa.Table) -> pa.Table:
-            dim = _DistanceDim(list(zip(*(regs.column(i).to_pylist()
-                                          for i in range(3)))), rid_type)
             pts = pts.drop_columns(["_ck"])
             b = pa.RecordBatch.from_arrays(
                 [c.combine_chunks() for c in pts.columns], schema=pts.schema)
-            return pa.Table.from_batches([body(dim, b)])
+            return pa.Table.from_batches([body(_DistanceDim(regs, *names), b)])
 
         keys = arrow_udf(cell_keys, T.ArrayType(T.LongType()))
         regions = self.rows.select("*", F.explode(keys("_cov")).alias("_ck"))
@@ -1285,6 +1219,25 @@ class _CellDim:
                  .where(F.col("_ck").isNotNull()))
         return keyed.groupBy("_ck").cogroup(regions.groupBy("_ck")) \
             .applyInArrow(cell, schema)
+
+
+def _distance_dim(regions: DataFrame, payload, region_id: str,
+                  region_geog: str):
+    """The dim's `payload` columns, geography and base covering `_cov`,
+    read by _guarded_collect (the capped collect prepare_regions runs).
+    Within the in-process guard: a broadcast _DistanceDim, which the
+    caller probes in ONE map-only pass over the points (two Spark jobs in
+    all, with the caller's action).  Over it: a _CellDim, the same kernel
+    per cell.  A cell runs in one task, so AQE's skew-join split does not
+    apply to a hot cell there (no salting)."""
+    from ..functions.geo import s2_coveringcellids
+    dim = regions.select(*dict.fromkeys([*payload, region_geog]),
+                         s2_coveringcellids(F.col(region_geog)).alias("_cov"))
+    tbl, _ = _guarded_collect(dim)
+    if tbl is None:
+        return _CellDim(dim, region_id, region_geog)
+    return regions.sparkSession.sparkContext.broadcast(
+        _DistanceDim(tbl, region_id, region_geog))
 
 
 def dwithin_join(points: DataFrame, regions: DataFrame, radius_m: float, *,
@@ -1299,12 +1252,8 @@ def dwithin_join(points: DataFrame, regions: DataFrame, radius_m: float, *,
     each point's cell against every region's buffered covering at the
     radius, then the exact vectorized distance.  Coverings are supersets,
     so candidates are never missed; refine-only false positives are
-    dropped.  The dim's size picks where it runs, as in spatial_join.  A
-    dim within the in-process guard (MAX_BROADCAST_DIM_ROWS / _BYTES) is
-    collected once and broadcast, and ONE map-only pass runs it: two
-    Spark jobs in all (see _distance_dim).  A larger dim runs it per cell
-    in one cogroup pass (_CellDim).  A cell runs in one task, so AQE's
-    skew-join split does not apply to a hot cell there (no salting)."""
+    dropped.  The dim's size picks where it runs (_distance_dim): in one
+    map-only pass, or per cell in one cogroup pass."""
     radius = float(radius_m)
     fields = [regions.schema[region_id]] + points.schema.fields
     if distance_col is not None:
@@ -1314,16 +1263,69 @@ def dwithin_join(points: DataFrame, regions: DataFrame, radius_m: float, *,
 
     def body(dim, b):
         pi, ri, d = dim.within(_float_col(b, lng), _float_col(b, lat), radius)
-        cols = [dim.rid.take(ri)] + b.take(pi).columns
+        cols = dim.take([region_id], ri) + b.take(pi).columns
         if distance_col is not None:
             cols.append(pa.array(d))
         return pa.RecordBatch.from_arrays(cols, names=schema.names)
 
-    bc = _distance_dim(regions, region_geog, region_id)
-    if bc is not None:
-        return _in_task(points, bc, body, schema)
-    return _CellDim(regions, region_geog, region_id).join(
-        points, lng, lat, radius, body, schema)
+    dim = _distance_dim(regions, [region_id], region_id, region_geog)
+    if isinstance(dim, _CellDim):
+        return dim.join(points, lng, lat, radius, body, schema)
+    return points.mapInArrow(lambda bs: (body(dim.value, b) for b in bs),
+                             schema)
+
+
+def _knn(points: DataFrame, regions: DataFrame, k: int, payload, fields, *,
+         lng: str, lat: str, region_geog: str, region_id: str,
+         distance_col: str, init_radius_m: float = 250_000.0,
+         max_rounds: Optional[int] = None) -> DataFrame:
+    """The plan of knn_join_covering and knn_join: each row of `points`
+    with the `payload` columns of its k nearest regions, as `fields`, then
+    the distance and the rank (see knn_join_covering)."""
+    ranks = [T.StructField(distance_col, T.DoubleType()),
+             T.StructField("knn_rank", T.IntegerType(), False)]
+    schema = T.StructType(fields + ranks)
+    half_turn = np.pi * sphere.EARTH_RADIUS_METERS
+    limit = max_rounds if max_rounds is not None else \
+        int(np.ceil(np.log2(half_turn / max(float(init_radius_m), 1.0)))) + 2
+
+    def body_at(radius: float, rounds: int, dense: bool = True):
+        def body(dim, b):
+            pi, ri, d, rank = dim.knn(_float_col(b, lng), _float_col(b, lat),
+                                      k, radius, rounds, dense)
+            ri = ri if dense else pa.array(ri, mask=ri < 0)
+            return pa.RecordBatch.from_arrays(
+                b.take(pi).columns + dim.take(payload, ri)
+                + [pa.array(d), pa.array(rank.astype(np.int32))],
+                names=schema.names)
+        return body
+
+    dim = _distance_dim(regions, payload, region_id, region_geog)
+    if not isinstance(dim, _CellDim):
+        body = body_at(float(init_radius_m), max(limit, 1))
+        return points.mapInArrow(
+            lambda bs: (body(dim.value, b) for b in bs), schema)
+    # a round's rank-0 markers carry null payload columns
+    marked = T.StructType([T.StructField(f.name, f.dataType)
+                           for f in fields] + ranks)
+    radius = float(init_radius_m)
+    rounds = max(limit, 1) if dim.base_min is not None else 0
+    parts, src = [], points
+    while rounds and radius < half_turn:
+        out = dim.join(src, lng, lat, radius, body_at(radius, 1, False),
+                       marked).localCheckpoint(eager=True)
+        parts.append(out.where(F.col("knn_rank") > 0))
+        src = out.where(F.col("knn_rank") == 0).select(*points.columns)
+        if src.isEmpty():
+            break
+        rounds -= 1
+        radius *= 2.0
+    else:
+        parts.append(dim.join(src, lng, lat, half_turn,
+                              body_at(half_turn, 1), schema))
+    out = reduce(DataFrame.unionByName, parts)
+    # ranked rows hold no null where `schema` has a non-null field
+    return out if marked == schema else out.mapInArrow(lambda it: it, schema)
 
 
 def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
@@ -1335,8 +1337,9 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
     """Scale-path kNN: buffered-covering candidate pruning with radius
     doubling (the distributed analog of S2ClosestEdgeQuery's chord-angle
     pruning, SURVEY.md §2.6).  Returns point_id, lng, lat, region_id,
-    distance_col and knn_rank (1..k, ties by region_id ascending; regions
-    at a null distance — null or EMPTY geography — are never ranked).
+    distance_col and knn_rank (1..k per input row, ties by region_id
+    ascending; regions at a null distance — null or EMPTY geography — are
+    never ranked).
 
     Round r: each region's buffered covering at radius r (a superset of
     'everything within r') yields the candidates; a point whose k-th
@@ -1348,86 +1351,36 @@ def knn_join_covering(points: DataFrame, regions: DataFrame, k: int, *,
     max_rounds cap (or a point with fewer than k rankable regions).
 
     One kernel for every dim size (_DistanceDim.knn); the dim's size
-    picks where it runs, as in spatial_join.  A dim within the in-process
-    guard (MAX_BROADCAST_DIM_ROWS / _BYTES) is collected once and
-    broadcast, and ONE map-only pass runs the whole loop — probe, refine,
-    rank and the dense fallback — in each task: two Spark jobs in all.  A
-    larger dim runs one cogroup pass per round with the kernel per cell
-    (_CellDim); an unresolved point comes back as a rank-0 marker row,
-    and the markers, pinned with an eager localCheckpoint, are the next
-    round's points (one isEmpty per round).  The residue takes a last pass
-    at radius pi*R, where every cell holds every region, so the dense
-    fallback is exact and nothing is broadcast.  A cell runs in one task,
-    so AQE's skew-join split does not apply to a hot cell there (no
-    salting).
-    """
-    half_turn = np.pi * sphere.EARTH_RADIUS_METERS
-    limit = max_rounds if max_rounds is not None else \
-        int(np.ceil(np.log2(half_turn / max(float(init_radius_m), 1.0)))) + 2
+    picks where it runs (_distance_dim).  In the map-only pass each task
+    runs the whole loop — probe, refine, rank and the dense fallback.
+    Per cell, each round is one cogroup pass; an unresolved point comes
+    back as a rank-0 marker row, and the markers, pinned with an eager
+    localCheckpoint, are the next round's points (one isEmpty per round).
+    The residue takes a last pass at radius pi*R, where every cell holds
+    every region, so the dense fallback is exact and nothing is
+    broadcast."""
     src = points.select(point_id, lng, lat)
-    schema = T.StructType(
-        [T.StructField(f.name, f.dataType) for f in src.schema.fields]
-        + [T.StructField(region_id, regions.schema[region_id].dataType),
-           T.StructField(distance_col, T.DoubleType()),
-           T.StructField("knn_rank", T.IntegerType(), False)])
-
-    def body_at(radius: float, rounds: int, dense: bool = True):
-        def body(dim, b):
-            pi, ri, d, rank = dim.knn(_float_col(b, lng), _float_col(b, lat),
-                                      k, radius, rounds, dense)
-            rid = dim.rid.take(ri if dense else pa.array(ri, mask=ri < 0))
-            return pa.RecordBatch.from_arrays(
-                b.take(pi).columns
-                + [rid, pa.array(d), pa.array(rank.astype(np.int32))],
-                names=schema.names)
-        return body
-
-    bc = _distance_dim(regions, region_geog, region_id)
-    if bc is not None:
-        return _in_task(src, bc, body_at(float(init_radius_m), max(limit, 1)),
-                        schema)
-    dim = _CellDim(regions, region_geog, region_id)
-    radius = float(init_radius_m)
-    rounds = max(limit, 1) if dim.base_min is not None else 0
-    parts = []
-    while rounds and radius < half_turn:
-        out = dim.join(src, lng, lat, radius, body_at(radius, 1, False),
-                       schema).localCheckpoint(eager=True)
-        parts.append(out.where(F.col("knn_rank") > 0))
-        src = out.where(F.col("knn_rank") == 0).select(point_id, lng, lat)
-        if src.isEmpty():
-            return reduce(DataFrame.unionByName, parts)
-        rounds -= 1
-        radius *= 2.0
-    parts.append(dim.join(src, lng, lat, half_turn, body_at(half_turn, 1),
-                          schema))
-    return reduce(DataFrame.unionByName, parts)
+    fields = [T.StructField(f.name, f.dataType)
+              for f in [*src.schema, regions.schema[region_id]]]
+    return _knn(src, regions, k, [region_id], fields, lng=lng, lat=lat,
+                region_geog=region_geog, region_id=region_id,
+                distance_col=distance_col, init_radius_m=init_radius_m,
+                max_rounds=max_rounds)
 
 
 def knn_join(points: DataFrame, regions: DataFrame, k: int, *,
              point_id: str, lng: str = "lng", lat: str = "lat",
              region_geog: str = "geog", region_id: str = "region_id",
              distance_col: str = "distance_m") -> DataFrame:
-    """k nearest regions per point (S2ClosestEdgeQuery semantics over the
-    broadcast dim: exact distances, window top-k; ties broken by
-    `region_id`).  A pair at a null distance (null point, null or EMPTY
-    geography) is dropped before ranking: Spark's asc() sorts nulls
-    FIRST, which ranked such a region every point's nearest.
-
-    Plan: broadcast nested-loop pairing (points x |regions|) with the
-    distance computed by one vectorized kernel per distinct region per
-    batch, then Window.partitionBy(point).orderBy(distance) row_number <= k
-    (SURVEY.md §2.6 kNN building block).  Right-sized when the dim side is
-    broadcastable; for a large dim use knn_join_covering.
-    """
-    from pyspark.sql import Window as W
-
-    pair = points.crossJoin(F.broadcast(regions))
-    pair = pair.withColumn(distance_col,
-                           distance_to_geog_udf(F.col(region_geog),
-                                                F.col(lng), F.col(lat))) \
-        .where(F.col(distance_col).isNotNull())
-    w = W.partitionBy(point_id).orderBy(F.col(distance_col).asc(),
-                                        F.col(region_id).asc())
-    return (pair.withColumn("knn_rank", F.row_number().over(w))
-            .where(F.col("knn_rank") <= k))
+    """k nearest regions per point row with both sides' columns: the
+    points' columns, the dim's columns, `distance_col` and knn_rank (1..k,
+    exact distances, ties by `region_id`; a null distance is never
+    ranked).  knn_join_covering's plan at its default radius doubling, so
+    no cross join or window, and a dim over the guard is never broadcast.
+    Each input row is ranked on its own: `point_id` is kept for existing
+    callers, and rows sharing one are not ranked together (the former
+    window ranked them as one point)."""
+    return _knn(points, regions, k, regions.columns,
+                points.schema.fields + regions.schema.fields, lng=lng,
+                lat=lat, region_geog=region_geog, region_id=region_id,
+                distance_col=distance_col)

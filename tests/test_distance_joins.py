@@ -1,9 +1,9 @@
 """dwithin_join, knn_join_covering and knn_join against a scalar brute
 force, on both plans: the in-process broadcast dim (the default for a
 small dim) and the same kernel run per cell (forced by lowering the dim
-guard).  The inputs carry null coordinates, null and EMPTY
-geographies, an exact distance tie, and points at the antimeridian and
-near the pole."""
+guard, the `plan` fixture of conftest.py).  The inputs carry null
+coordinates, null and EMPTY geographies, an exact distance tie, and
+points at the antimeridian and near the pole."""
 
 import numpy as np
 import pytest
@@ -67,13 +67,6 @@ def brute(points):
         ds = [(ops.s2_distance(g, p), rid) for rid, g in geogs]
         out[r.pid] = sorted((d, rid) for d, rid in ds if d is not None)
     return out
-
-
-@pytest.fixture(params=["broadcast", "distributed"])
-def plan(request, monkeypatch):
-    if request.param == "distributed":
-        monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", 0)
-    return request.param
 
 
 def test_brute_force_fixture_has_the_edge_cases(brute):
@@ -152,10 +145,14 @@ def _assert_knn(got, brute):
 
 
 def test_knn_covering_matches_brute_force(points, dim, brute, plan):
-    got = _ranked(sj.knn_join_covering(points, dim, K, point_id="pid",
-                                       init_radius_m=2_000_000.0).collect())
-    _assert_knn(got, brute)
-    assert got[(1000, 1)][0] == 3 and got[(1000, 2)][0] == 7
+    """knn_join_covering, and knn_join (the same plan at the default
+    radius, carrying both sides' columns)."""
+    for out in (sj.knn_join_covering(points, dim, K, point_id="pid",
+                                     init_radius_m=2_000_000.0),
+                sj.knn_join(points, dim, K, point_id="pid")):
+        got = _ranked(out.collect())
+        _assert_knn(got, brute)
+        assert got[(1000, 1)][0] == 3 and got[(1000, 2)][0] == 7
 
 
 def test_knn_covering_capped_matches_brute_force(points, dim, brute, plan):
@@ -198,7 +195,8 @@ def test_small_dim_runs_two_jobs(spark, points, dim):
                                          init_radius_m=300_000.0).collect(),
             lambda: sj.knn_join_covering(points, dim, K, point_id="pid",
                                          init_radius_m=300_000.0,
-                                         max_rounds=1).collect()]):
+                                         max_rounds=1).collect(),
+            lambda: sj.knn_join(points, dim, K, point_id="pid").collect()]):
         group = f"s2_small_dim_jobs_{i}"
         sc.setJobGroup(group, group)
         try:
@@ -238,35 +236,56 @@ def test_distributed_plans_job_pins(spark, points, dim, monkeypatch):
         assert 0 < n <= cap, (i, n)
 
 
-def test_both_plans_return_one_schema(points, dim, monkeypatch):
+def test_both_plans_return_one_schema(points, dim, brute, monkeypatch):
     """Names, types and nullability agree across the two plans, the
-    non-null knn_rank included."""
-    def schemas():
-        outs = [sj.dwithin_join(points, dim, RADIUS),
-                sj.dwithin_join(points, dim, RADIUS, distance_col="d"),
-                sj.knn_join_covering(points, dim, K, point_id="pid",
-                                     init_radius_m=2_000_000.0)]
-        return [[(f.name, f.dataType.simpleString(), f.nullable)
-                 for f in out.schema] for out in outs]
+    non-null knn_rank included; knn_join returns both sides' fields, the
+    distance and the rank, a non-null column of either side staying
+    non-null."""
+    from pyspark.sql import functions as F
+    tagged_points = points.withColumn("w", F.lit(1))
+    tagged_dim = dim.withColumn("tag", F.lit("t"))
 
-    small = schemas()
+    def fields(df):
+        return [(f.name, f.dataType.simpleString(), f.nullable)
+                for f in df.schema]
+
+    def outs():
+        return [
+            sj.dwithin_join(points, dim, RADIUS),
+            sj.dwithin_join(points, dim, RADIUS, distance_col="d"),
+            sj.knn_join_covering(points, dim, K, point_id="pid",
+                                 init_radius_m=2_000_000.0),
+            sj.knn_join(points, dim, K, point_id="pid"),
+            sj.knn_join(tagged_points, tagged_dim, K, point_id="pid")]
+
+    small = [fields(out) for out in outs()]
     monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", 0)
-    assert schemas() == small
+    over = outs()
+    assert [fields(out) for out in over] == small
     assert small[2][-1] == ("knn_rank", "int", False)
+    ranks = [("distance_m", "double", True), ("knn_rank", "int", False)]
+    assert small[3] == fields(points) + fields(dim) + ranks
+    assert small[4] == fields(tagged_points) + fields(tagged_dim) + ranks
+    assert ("w", "int", False) in small[4]
+    assert ("tag", "string", False) in small[4]
+    rows = over[4].collect()
+    assert {(r.w, r.tag) for r in rows} == {(1, "t")}
+    _assert_knn(_ranked(rows), brute)
 
 
 def test_distributed_knn_residue_broadcasts_nothing(points, dim, brute,
                                                     monkeypatch):
     """Over the guard the kNN residue (a capped loop, or a point with
-    fewer than k rankable regions) runs per cell at radius pi*R: no plan
-    broadcasts the dim or ranks with a window, and the residue ranks every
-    rankable region exactly."""
+    fewer than k rankable regions) runs per cell at radius pi*R: no plan,
+    knn_join's included, broadcasts the dim or ranks with a window, and
+    the residue ranks every rankable region exactly."""
     monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", 0)
     capped = sj.knn_join_covering(points, dim, K, point_id="pid",
                                   init_radius_m=300_000.0, max_rounds=1)
     every = sj.knn_join_covering(points, dim, len(REGIONS), point_id="pid",
                                  init_radius_m=15_000_000.0)
-    for out in (capped, every):
+    dense = sj.knn_join(points, dim, K, point_id="pid")
+    for out in (capped, every, dense):
         plan = out._jdf.queryExecution().executedPlan().toString()
         for node in ("BroadcastNestedLoopJoin", "BroadcastExchange",
                      "Window"):
@@ -278,6 +297,7 @@ def test_distributed_knn_residue_broadcasts_nothing(points, dim, brute,
         for rank, (d, rid) in enumerate(ds):
             assert got[(pid, rank + 1)][0] == rid
             assert got[(pid, rank + 1)][1] == pytest.approx(d, abs=1e-3)
+    _assert_knn(_ranked(dense.collect()), brute)
 
 
 def test_skewed_dim_takes_the_exact_guard(spark, points, dim, brute,
@@ -288,8 +308,8 @@ def test_skewed_dim_takes_the_exact_guard(spark, points, dim, brute,
     from pyspark.sql import functions as F
     skewed = dim.repartition(4, F.lit(0))
     calls = []
-    exact = sj.dim_is_broadcastable
-    monkeypatch.setattr(sj, "dim_is_broadcastable",
+    exact = sj._exact_guard
+    monkeypatch.setattr(sj, "_exact_guard",
                         lambda *a, **kw: calls.append(1) or exact(*a, **kw))
     exp = {(pid, rid) for pid, ds in brute.items() for d, rid in ds
            if d <= RADIUS}
@@ -300,3 +320,35 @@ def test_skewed_dim_takes_the_exact_guard(spark, points, dim, brute,
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert calls and ("MapInArrow" in plan) == broadcast, plan
         assert {(r.pid, r.region_id) for r in out.collect()} == exp
+
+
+def test_null_row_is_not_the_marker(spark, points, dim, brute, monkeypatch):
+    """A dim row whose region_id and geography are both null is a data
+    row, not the capped collect's over-share marker: unskewed, it takes
+    no exact guard; with every row in one of four partitions, the exact
+    guard decides one row over the dim size and exactly at it, and both
+    plans match the brute force."""
+    from pyspark.sql import functions as F
+    nulls = dim.unionByName(spark.createDataFrame(
+        [(None, None)], "region_id long, geog binary"))
+    n = len(REGIONS) + 1
+    calls = []
+    exact = sj._exact_guard
+    monkeypatch.setattr(sj, "_exact_guard",
+                        lambda *a, **kw: calls.append(1) or exact(*a, **kw))
+    sj.dwithin_join(points, nulls.coalesce(1), RADIUS).collect()
+    assert calls == []
+    skewed = nulls.repartition(4, F.lit(0))
+    exp = {(pid, rid) for pid, ds in brute.items() for d, rid in ds
+           if d <= RADIUS}
+    for cap, broadcast in ((n - 1, False), (n, True)):
+        monkeypatch.setattr(sj, "MAX_BROADCAST_DIM_ROWS", cap)
+        calls.clear()
+        out = sj.dwithin_join(points, skewed, RADIUS)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert calls and ("MapInArrow" in plan) == broadcast, plan
+        assert {(r.pid, r.region_id) for r in out.collect()} == exp
+        for knn in (sj.knn_join_covering(points, skewed, K, point_id="pid",
+                                         init_radius_m=2_000_000.0),
+                    sj.knn_join(points, skewed, K, point_id="pid")):
+            _assert_knn(_ranked(knn.collect()), brute)

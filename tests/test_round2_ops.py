@@ -37,7 +37,7 @@ def test_bbox_agg_no_collect_list_in_plan(spark):
     assert "collect_list" not in plan
 
 
-def test_dwithin_join_matches_brute_force(spark):
+def test_dwithin_join_matches_brute_force(spark, plan):
     from s2geography_spark.functions.geo import _point_wkb_udf
     from s2geography_spark.core import sphere
     rng = np.random.default_rng(7)
@@ -69,7 +69,7 @@ def test_dwithin_join_matches_brute_force(spark):
     assert got == exp and len(exp) > 0
 
 
-def test_dwithin_join_no_cartesian(spark):
+def test_dwithin_join_no_cartesian(spark, plan):
     from s2geography_spark.functions.geo import _point_wkb_udf
     pts = spark.createDataFrame([(0, 1.0, 1.0)], "pid long, lng double, lat double")
     centers = spark.createDataFrame([(0, 1.5, 1.5)],

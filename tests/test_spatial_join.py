@@ -7,8 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from s2geography_spark.core import sphere
-from s2geography_spark.core.geog import from_wkb
+from s2geography_spark.core import ops, sphere
+from s2geography_spark.core.geog import Geog, from_wkb
 from s2geography_spark.operators.spatial_join import knn_join, spatial_join
 from s2geography_spark.sources.pages import (extract_mentions, extract_text,
                                              gazetteer_df, gazetteer_lnglat,
@@ -105,7 +105,7 @@ def test_special_regions_join(spark):
     assert not any(p in got for p in [(3, 1000), (3, 1001), (4, 1001)])
 
 
-def test_knn_matches_brute_force(spark, mentions):
+def test_knn_matches_brute_force(spark, mentions, plan):
     regions = regions_df(spark, 16)
     sample = mentions.limit(200).cache()
     res = knn_join(sample.withColumn("pid", F.concat_ws("#", "url", "mention_idx")),
@@ -155,7 +155,20 @@ def test_choose_salt(spark):
     assert s > 4
 
 
-def test_knn_covering_matches_brute_force(spark, mentions):
+def _brute_knn(points, regions, k, rid="region_id"):
+    """{(pid, rank): region id} of each point's k nearest regions by the
+    scalar s2_distance kernel, ordered by (distance, id)."""
+    geogs = [(r[rid], from_wkb(bytes(r.geog))) for r in regions.collect()]
+    out = {}
+    for p in points.collect():
+        pt = Geog(points=np.array([[p.lng, p.lat]]))
+        ds = sorted((ops.s2_distance(g, pt), i) for i, g in geogs)
+        out.update({(p.pid, rank + 1): i
+                    for rank, (_, i) in enumerate(ds[:k])})
+    return out
+
+
+def test_knn_covering_matches_brute_force(spark, mentions, plan):
     from s2geography_spark.operators.spatial_join import knn_join_covering
     regions = regions_df(spark, 16)
     sample = (mentions.limit(120)
@@ -163,12 +176,8 @@ def test_knn_covering_matches_brute_force(spark, mentions):
               .select("pid", "lng", "lat").cache())
     fast = knn_join_covering(sample, regions.select("region_id", "geog"),
                              k=3, point_id="pid", init_radius_m=300_000.0)
-    slow = knn_join(sample, regions.select("region_id", "geog"),
-                    k=3, point_id="pid")
     got = {(r.pid, r.knn_rank): r.region_id for r in fast.collect()}
-    exp = {(r.pid, r.knn_rank): r.region_id
-           for r in slow.select("pid", "knn_rank", "region_id").collect()}
-    assert got == exp
+    assert got == _brute_knn(sample, regions, 3)
 
 
 def test_spatial_join_shuffle_cogroup_matches(spark, mentions):
@@ -582,7 +591,7 @@ def test_spatial_join_rejects_bad_predicate_and_modes(spark):
         assert mode in str(e.value)
 
 
-def test_knn_join_custom_region_id(spark):
+def test_knn_join_custom_region_id(spark, plan):
     """knn_join and knn_join_covering's dense fallback order ties by the
     dim's own id column, not a hard-coded 'region_id'."""
     from s2geography_spark.operators.spatial_join import knn_join_covering
@@ -592,15 +601,17 @@ def test_knn_join_custom_region_id(spark):
         [(i, float(x), float(y)) for i, (x, y) in
          enumerate([(10.5, 10.5), (-120.0, 30.0), (60.0, -40.0)])],
         "pid long, lng double, lat double")
+    exp = _brute_knn(pts, regions, 3, rid="rid")
+    assert len(exp) == 9
     dense = {(r.pid, r.knn_rank): r.rid for r in
              knn_join(pts, regions, 3, point_id="pid", region_id="rid")
              .collect()}
-    assert len(dense) == 9
+    assert dense == exp
     cov = {(r.pid, r.knn_rank): r.rid for r in
            knn_join_covering(pts, regions, 3, point_id="pid",
                              region_id="rid", init_radius_m=1000.0,
                              max_rounds=1).collect()}
-    assert cov == dense
+    assert cov == exp
 
 
 @pytest.mark.parametrize("guard", ["over", "skewed"])
